@@ -207,7 +207,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from dfs_w_mapreduce_spark.registry import collect
-from dfs_w_mapreduce_spark.session import get_spark
+from dfs_w_mapreduce_spark.session import _cpu_count, get_spark
 
 # The headline set: reference-fidelity jobs, the heaviest relational
 # pipelines, and (as they land) the LLM-pipeline operators.
@@ -425,18 +425,16 @@ ISOLATED_EXTRA_MAX = 8
 REPS = 3
 # Round-11 rule: the full-suite run executes in fresh-JVM CHUNKS of
 # this many keys (subprocess per chunk, same mechanism as the isolated
-# companion). Round 10's in-process SESSION_ROTATE_EVERY=6 did NOT end
-# the batch-vs-isolated divergence (text_bigram_lm 7.70s in-batch vs
-# 2.00s isolated in the driver's r10 record, WITH rotation active) —
-# root cause: spark.stop()+getOrCreate() reuses the same py4j gateway
-# JVM, so codegen-class/heap pressure survives every "rotation"; only
-# a new subprocess is a fresh JVM. Chunking bounds any key's JVM age
-# to CHUNK_SIZE keys, making in-batch numbers fresh-JVM numbers by
-# construction (~10-15s JVM spin-up per chunk, outside timed regions).
+# companion). Round 10's in-process session rotation every 6 keys did
+# NOT end the batch-vs-isolated divergence (text_bigram_lm 7.70s
+# in-batch vs 2.00s isolated in the driver's r10 record, WITH rotation
+# active) — root cause: spark.stop()+getOrCreate() reuses the same py4j
+# gateway JVM, so codegen-class/heap pressure survives every
+# "rotation"; only a new subprocess is a fresh JVM. Chunking bounds any
+# key's JVM age to CHUNK_SIZE keys, making in-batch numbers fresh-JVM
+# numbers by construction (~10-15s JVM spin-up per chunk, outside timed
+# regions).
 CHUNK_SIZE = 18
-# In-process rotation is retained only for manual SPARK_GRAFT_BENCH_ONLY
-# runs with long key lists; chunks never reach it.
-SESSION_ROTATE_EVERY = CHUNK_SIZE
 
 
 def _prior_bench_queries(sf: float, cpus: int) -> dict[str, float]:
@@ -480,13 +478,6 @@ def _prior_bench_queries(sf: float, cpus: int) -> dict[str, float]:
     return {}
 
 
-def _bench_cpus() -> int:
-    env = os.environ.get("SPARK_GRAFT_CPUS")
-    if env:
-        return int(env)
-    return os.cpu_count() or 4
-
-
 def _write_bench_local(out: dict) -> None:
     """BENCH_LOCAL.json is the next round's adjudication baseline —
     only overwrite it from a run at the adjudication scale (sf0.1),
@@ -514,52 +505,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     only = [k for k in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if k]
-    if not only and os.environ.get("SPARK_GRAFT_BENCH_NO_CHUNK") != "1":
-        _main_chunked(sf_dir, sf)
-        return
-
-    def _fresh_session():
-        # warmup: scan the biggest fact table through the noop write
-        # path once so JIT/codegen/write-plumbing costs don't land on
-        # the first measured query of the (new) session
-        s = get_spark("bench")
-        s.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        return s
-
-    spark = _fresh_session()
-    registry = collect()
-
-    timings: dict[str, float] = {}
-    for name in (only or HEADLINE):
-        spec = registry.get(name)
-        if spec is None:
-            continue
-        if len(timings) and len(timings) % SESSION_ROTATE_EVERY == 0:
-            # rotation is outside the timed region (see constant doc)
-            spark.stop()
-            spark = _fresh_session()
-        best = None
-        for _ in range(REPS):
-            # clear cached sub-plans so run 2 measures the same
-            # cold-storage work as run 1 (several operators .cache()
-            # shared frames; CacheManager would otherwise serve run 2
-            # from memory and report an incomparably faster number)
-            spark.catalog.clearCache()
-            # full GC between runs, OUTSIDE the timed region: a 70-key
-            # single-session suite otherwise accumulates heap/codegen
-            # pressure whose collections land inside later queries'
-            # timings (measured +100-300ms on sub-second keys late in
-            # the run, vanishing when re-measured in a fresh session)
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
-
-    total = round(sum(timings.values()), 3)
+    timings = _measure(sf_dir, only) if only else _measure_chunked(sf_dir)
     # Key order matters: the driver keeps only the LAST 2000 chars of
     # stdout, and the per-query map outgrew that in round 6 — so the
     # summary fields (totals, isolated record) go AFTER `queries` to
@@ -572,8 +518,8 @@ def main() -> None:
         "sf": sf,
         "queries": timings,
         "n_queries": len(timings),
-        "value": total,
-        "cpus": _bench_cpus(),
+        "value": round(sum(timings.values()), 3),
+        "cpus": _cpu_count(),
     }
     if not only:
         prior = _prior_bench_queries(sf, out["cpus"])
@@ -600,12 +546,48 @@ def main() -> None:
     sys.stdout.flush()
 
 
-def _main_chunked(sf_dir: str, sf: float) -> None:
+def _measure(sf_dir: str, keys: list[str]) -> dict[str, float]:
+    """Min-of-REPS noop-sink seconds for `keys` in this process's
+    session (the body of every chunk and isolated subprocess)."""
+    # warmup: scan the biggest fact table through the noop write path
+    # once so JIT/codegen/write-plumbing costs don't land on the first
+    # measured query of the session
+    spark = get_spark("bench")
+    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    registry = collect()
+
+    timings: dict[str, float] = {}
+    for name in keys:
+        spec = registry.get(name)
+        if spec is None:
+            continue
+        best = None
+        for _ in range(REPS):
+            # clear cached sub-plans so run 2 measures the same
+            # cold-storage work as run 1 (several operators .cache()
+            # shared frames; CacheManager would otherwise serve run 2
+            # from memory and report an incomparably faster number)
+            spark.catalog.clearCache()
+            # full GC between runs, OUTSIDE the timed region: a 70-key
+            # single-session suite otherwise accumulates heap/codegen
+            # pressure whose collections land inside later queries'
+            # timings (measured +100-300ms on sub-second keys late in
+            # the run, vanishing when re-measured in a fresh session)
+            spark.sparkContext._jvm.System.gc()
+            t0 = time.perf_counter()
+            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            dt = time.perf_counter() - t0
+            best = dt if best is None else min(best, dt)
+        timings[name] = round(best, 3)
+    return timings
+
+
+def _measure_chunked(sf_dir: str) -> dict[str, float]:
     """Full-suite run: measure HEADLINE in fresh-JVM chunks of
     CHUNK_SIZE keys (subprocess each — see the CHUNK_SIZE note for why
-    in-process session rotation was not enough), then merge, promote
-    the largest absolute drifts into the fresh-JVM isolated companion,
-    and emit the single JSON record."""
+    in-process session rotation was not enough) and merge them."""
     registry = collect()
     keys = [k for k in HEADLINE if k in registry]
     timings: dict[str, float] = {}
@@ -618,34 +600,7 @@ def _main_chunked(sf_dir: str, sf: float) -> None:
             f"{round(sum(got.values()), 1)}s",
             file=sys.stderr,
         )
-    total = round(sum(timings.values()), 3)
-    out = {
-        "metric": "headline_query_total",
-        "unit": "sec",
-        "sf": sf,
-        "queries": timings,
-        "n_queries": len(timings),
-        "value": total,
-        "cpus": _bench_cpus(),
-    }
-    prior = _prior_bench_queries(sf, out["cpus"])
-    promoted = sorted(
-        (
-            k
-            for k, t in timings.items()
-            if k not in ISOLATED_KEYS and prior.get(k) and t / prior[k] > ISOLATED_RATIO
-        ),
-        key=lambda k: timings[k] - prior[k],
-        reverse=True,
-    )[:ISOLATED_EXTRA_MAX]
-    if promoted:
-        out["isolated_promoted"] = promoted
-    isolated = _run_isolated(sf_dir, ISOLATED_KEYS + promoted)
-    if isolated:
-        out["queries_isolated"] = isolated
-    _write_bench_local(out)
-    print(json.dumps(out))
-    sys.stdout.flush()
+    return timings
 
 
 def _run_isolated(sf_dir: str, keys: list[str]) -> dict[str, float]:

@@ -1,1 +1,2 @@
-"""Scalar/array helper functions (text, vectors) built on pyspark.sql.functions."""
+"""Expression helpers shared by the operator modules and their DuckDB
+oracles (hashing: the md5 → integer hash both engines compute)."""

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
+from dfs_w_mapreduce_spark.functions.hashing import _h31_spark, _h31_sql
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 FUNNEL = ("view", "click", "purchase")
@@ -862,8 +863,6 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tiny draw table (types x B x M rows) broadcasts onto it, so
     the corpus shuffles once. Replicate means use exact decimal sums;
     the band is min/median/max over B identically-computed doubles."""
-    from dfs_w_mapreduce_spark.operators.dedup import _h31_spark
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "event_id", "value"
     )
@@ -914,8 +913,6 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bootstrap_ci_oracle() -> str:
-    from dfs_w_mapreduce_spark.operators.dedup import _h31_sql
-
     h = _h31_sql("event_type || ':' || b || ':' || j")
     return f"""
         WITH counts AS (SELECT event_type, count(*) AS n FROM events GROUP BY 1),

@@ -35,6 +35,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
+from dfs_w_mapreduce_spark.functions.hashing import (
+    _h31_spark,
+    _h31_sql,
+    md5_long,
+    md5_long_sql,
+)
 from dfs_w_mapreduce_spark.registry import QuerySpec
 from dfs_w_mapreduce_spark.operators.text_analysis import (
     BM25_TOP_K,
@@ -269,9 +275,7 @@ def q_substring_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "pos", F.substring(F.col("text"), F.col("pos"), WIN_K).alias("gram")
         )
-        .withColumn(
-            "h", F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long")
-        )
+        .withColumn("h", md5_long("gram"))
     )
     # NOTE: pos already stops W-1 short of the last gram, so every
     # row's forward-looking window frame is fully populated.
@@ -311,7 +315,7 @@ SUBSTRING_WINNOW_ORACLE = f"""
     WITH grams AS (
         SELECT doc_id, pos,
                substr(text, CAST(pos AS INT), {WIN_K}) AS gram,
-               CAST(('0x' || substr(md5(substr(text, CAST(pos AS INT), {WIN_K})), 1, 15)) AS BIGINT) AS h
+               {md5_long_sql(f"substr(text, CAST(pos AS INT), {WIN_K})")} AS h
         FROM (
             SELECT doc_id, text,
                    unnest(range(1, len(text) - {WIN_K - 1} - {WIN_W - 1} + 1)) AS pos
@@ -383,13 +387,7 @@ def q_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "pos",
-            F.conv(
-                F.substring(
-                    F.md5(F.array_join(F.slice("toks", F.col("pos"), SPAN_N), " ")),
-                    1, 15,
-                ),
-                16, 10,
-            ).cast("long").alias("h"),
+            md5_long(F.array_join(F.slice("toks", F.col("pos"), SPAN_N), " ")).alias("h"),
         )
     )
     hot = (
@@ -412,12 +410,15 @@ def q_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the SPAN_N-token gram at `pos` of the token list `l` (DuckDB)
+_SPAN_GRAM_SQL = (
+    f"array_to_string(l[CAST(pos AS INT):CAST(pos AS INT) + {SPAN_N - 1}], ' ')"
+)
+
 DUP_NGRAM_SPANS_ORACLE = f"""
     WITH grams AS (
         SELECT doc_id, pos,
-               CAST(('0x' || substr(md5(
-                   array_to_string(l[CAST(pos AS INT):CAST(pos AS INT) + {SPAN_N - 1}], ' ')
-               ), 1, 15)) AS BIGINT) AS h
+               {md5_long_sql(_SPAN_GRAM_SQL)} AS h
         FROM (
             SELECT doc_id, l, unnest(range(1, len(l) - {SPAN_N - 1} + 1)) AS pos
             FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
@@ -479,13 +480,7 @@ def q_dedup_span_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "pos",
-            F.conv(
-                F.substring(
-                    F.md5(F.array_join(F.slice("toks", F.col("pos"), SPAN_N), " ")),
-                    1, 15,
-                ),
-                16, 10,
-            ).cast("long").alias("h"),
+            md5_long(F.array_join(F.slice("toks", F.col("pos"), SPAN_N), " ")).alias("h"),
         )
     )
     owners = (
@@ -540,9 +535,7 @@ DEDUP_SPAN_APPLY_ORACLE = f"""
     ),
     grams AS (
         SELECT doc_id, pos,
-               CAST(('0x' || substr(md5(
-                   array_to_string(l[CAST(pos AS INT):CAST(pos AS INT) + {SPAN_N - 1}], ' ')
-               ), 1, 15)) AS BIGINT) AS h
+               {md5_long_sql(_SPAN_GRAM_SQL)} AS h
         FROM (
             SELECT doc_id, l, unnest(range(1, len(l) - {SPAN_N - 1} + 1)) AS pos
             FROM t WHERE len(l) - {SPAN_N - 1} >= 1
@@ -1010,8 +1003,6 @@ def q_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum after a broadcast join of the 64-row log-ratio table; the
     top-K runs as TakeOrderedAndProject. Nothing is pairwise, nothing
     shuffles more than once."""
-    from dfs_w_mapreduce_spark.operators.dedup import _h31_spark
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -1065,8 +1056,6 @@ def q_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _importance_resample_oracle() -> str:
-    from dfs_w_mapreduce_spark.operators.dedup import _h31_sql
-
     h = _h31_sql("token")
     return f"""
         WITH toks AS (
@@ -1619,9 +1608,7 @@ def q_pii_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         n(PII_A_SSN_RE).alias("k_ssn"),
         n(PII_A_PHONE_RE).alias("k_phone"),
         n(PII_A_IP_RE).alias("k_ip"),
-        F.conv(F.substring(F.md5(red), 1, 8), 16, 10)
-        .cast("long")
-        .alias("rh"),
+        md5_long(red, 8).alias("rh"),
     )
     any_pii = (
         F.col("k_email") + F.col("k_ssn") + F.col("k_phone") + F.col("k_ip")
@@ -1643,7 +1630,8 @@ def q_pii_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PII_AUDIT_ORACLE = (
-    """
+    (
+        """
     WITH base AS (
         SELECT source, doc_id,
                text
@@ -1673,7 +1661,9 @@ PII_AUDIT_ORACLE = (
                len(regexp_extract_all(pii, '{ssn}')) AS k_ssn,
                len(regexp_extract_all(pii, '{phone}')) AS k_phone,
                len(regexp_extract_all(pii, '{ip}')) AS k_ip,
-               CAST(('0x' || substr(md5(
+               """
+        + md5_long_sql(
+            """
                    regexp_replace(
                        regexp_replace(
                            regexp_replace(
@@ -1681,7 +1671,10 @@ PII_AUDIT_ORACLE = (
                                '{ssn}', '[SSN]', 'g'),
                            '{phone}', '[PHONE]', 'g'),
                        '{ip}', '[IP]', 'g')
-               ), 1, 8)) AS BIGINT) AS rh
+               """,
+            8,
+        )
+        + """ AS rh
         FROM base
     )
     SELECT source,
@@ -1700,6 +1693,7 @@ PII_AUDIT_ORACLE = (
     FROM scanned
     GROUP BY source
     """
+    )
     .replace("{email}", PII_A_EMAIL_RE)
     .replace("{ssn}", PII_A_SSN_RE)
     .replace("{phone}", PII_A_PHONE_RE)

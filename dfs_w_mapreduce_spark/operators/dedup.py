@@ -31,11 +31,17 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import fan_out, load_table
+from dfs_w_mapreduce_spark.functions.hashing import (
+    P31,
+    _h31_spark,
+    _h31_sql,
+    md5_long,
+    md5_long_expr,
+    md5_long_sql,
+)
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 # ---------------------------------------------------------------- shared
-
-P31 = 2_147_483_647  # 2^31 - 1, the modulus of the minhash family
 
 # 16 fixed (a, b) pairs for the universal hash family
 # h_i(x) = (a_i * x + b_i) mod P31 — deterministic across engines.
@@ -77,16 +83,6 @@ def _merge_join(df: DataFrame, sf_dir: str | None = None) -> DataFrame:
         if size is not None and size <= SHINGLE_BROADCAST_CAP:
             return F.broadcast(df)
     return df.hint("merge")
-
-
-def _h31_spark(col: Column) -> Column:
-    """md5-derived 31-bit integer hash of a string — reproducible in
-    DuckDB as CAST('0x' || substr(md5(x),1,15) AS BIGINT) % P31."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % P31
-
-
-def _h31_sql(expr: str) -> str:
-    return f"(CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT) % {P31})"
 
 
 def _shingles_from_tokens(w: Column) -> Column:
@@ -224,7 +220,7 @@ def _common_shingle_counts(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
     # the oracle hashes identically so both engines agree regardless.
     ex = sh.select("doc_id", F.explode("sh").alias("s0")).select(
         "doc_id",
-        F.conv(F.substring(F.md5("s0"), 1, 15), 16, 10).cast("long").alias("s"),
+        md5_long("s0").alias("s"),
     )
     # Materialize the exploded hashed-occurrence stream ONCE,
     # co-partitioned on the shingle key (r11, mirroring
@@ -335,7 +331,7 @@ def _capped_common_counts(
         .select(
             "doc_id",
             # 60-bit md5-derived join key: 8-byte shuffle keys, oracle-equal
-            F.conv(F.substring(F.md5("s0"), 1, 15), 16, 10).cast("long").alias("s"),
+            md5_long("s0").alias("s"),
         )
         .repartition(sh_parts, "s")
         .cache()
@@ -468,7 +464,7 @@ def _ngram_pairs_from(counts: tuple[DataFrame, DataFrame]) -> DataFrame:
 # integer comparison on both engines, so the branch cannot diverge.
 _CAPPED_COMMON_SQL = f"""
     sizes AS (SELECT doc_id, len(sh) AS n FROM sh),
-    ex AS (SELECT doc_id, CAST(('0x' || substr(md5(s0), 1, 15)) AS BIGINT) AS s
+    ex AS (SELECT doc_id, {md5_long_sql('s0')} AS s
            FROM (SELECT doc_id, unnest(sh) AS s0 FROM sh)),
     gate AS (SELECT COALESCE(sum(df * df), 0) <= {NGRAM_COUNT_PATH_BUDGET} AS small
              FROM (SELECT count(*) AS df FROM ex GROUP BY s)),
@@ -1188,7 +1184,7 @@ def q_dedup_simhash(
     d = docs if docs is not None else load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != F.lit(""))
     # full 60-bit md5 hash (no %P31 — we need 48 independent bits)
-    h = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
+    h = md5_long("tok")
     ex = d.select("doc_id", F.explode(toks).alias("tok")).select(
         "doc_id", h.alias("h")
     )
@@ -1218,7 +1214,7 @@ def _simhash_oracle() -> str:
     return f"""
         WITH ex AS (
             SELECT doc_id,
-                   CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
+                   {md5_long_sql('tok')} AS h
             FROM (SELECT doc_id,
                          unnest(list_filter(
                              string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS tok
@@ -1769,7 +1765,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(spark, sf_dir)
     ex = sh.select("doc_id", F.explode("sh").alias("s0")).select(
         "doc_id",
-        F.conv(F.substring(F.md5("s0"), 1, 15), 16, 10).cast("long").alias("s"),
+        md5_long("s0").alias("s"),
     )
     first = ex.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
     novel = F.sum((F.col("first_doc") == F.col("doc_id")).cast("int"))
@@ -1786,7 +1782,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 NGRAM_NOVELTY_ORACLE = f"""
     WITH sh AS ({_DOC_SHINGLES_SQL}),
-    ex AS (SELECT doc_id, CAST(('0x' || substr(md5(unnest(sh)), 1, 15)) AS BIGINT) AS s
+    ex AS (SELECT doc_id, {md5_long_sql('unnest(sh)')} AS s
            FROM sh),
     first AS (SELECT s, min(doc_id) AS first_doc FROM ex GROUP BY s)
     SELECT doc_id,
@@ -2094,8 +2090,7 @@ CDC_ENDS_EXPR = f"""
           CASE WHEN length(text) >= {CDC_W}
                THEN sequence(1, length(text) - {CDC_W} + 1)
                ELSE CAST(array() AS ARRAY<INT>) END,
-          i -> CAST(conv(substr(md5(substr(text, i, {CDC_W})), 1, 15),
-                         16, 10) AS BIGINT) % {CDC_DIV} = 0),
+          i -> {md5_long_expr(f"substr(text, i, {CDC_W})")} % {CDC_DIV} = 0),
         i -> i + {CDC_W} - 1),
       array(length(text)))))
 """
@@ -2123,8 +2118,8 @@ CDC_CHUNKS_SQL = f"""
                 list_append(
                     list_transform(
                         list_filter(range(1, greatest(len(text) - {CDC_W} + 2, 1)),
-                            i -> (CAST(('0x' || substr(md5(substr(text, CAST(i AS INT), {CDC_W})), 1, 15))
-                                       AS BIGINT)) % {CDC_DIV} = 0),
+                            i -> ({md5_long_sql(f"substr(text, CAST(i AS INT), {CDC_W})")})
+                                 % {CDC_DIV} = 0),
                         i -> i + {CDC_W} - 1),
                     len(text)))) AS e
         FROM documents

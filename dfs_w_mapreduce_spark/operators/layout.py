@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import fan_out, load_table
+from dfs_w_mapreduce_spark.functions.hashing import hex_long_expr, hex_long_sql
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 ZBITS = 10          # bits per dimension in the z-value
@@ -950,9 +951,7 @@ def q_placement_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def modn(n: int) -> str:
-        return (
-            f"pmod(cast(conv(substr(h, 1, 15), 16, 10) as bigint), {n})"
-        )
+        return f"pmod({hex_long_expr('h')}, {n})"
 
     chunks = (
         cdc_chunks(fan_out(spark, load_table(spark, sf_dir, "documents")
@@ -994,7 +993,7 @@ def _placement_rebalance_oracle() -> str:
         )
 
     def modn(n: int) -> str:
-        return f"(CAST(('0x' || substr(h, 1, 15)) AS BIGINT) % {n})"
+        return f"({hex_long_sql('h')} % {n})"
 
     return f"""
         WITH chunks AS ({CDC_CHUNKS_SQL}),

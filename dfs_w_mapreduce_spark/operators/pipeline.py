@@ -22,7 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
-from dfs_w_mapreduce_spark.operators.dedup import _h31_spark, _h31_sql
+from dfs_w_mapreduce_spark.functions.hashing import (
+    _h31_spark,
+    _h31_sql,
+    md5_long,
+    md5_long_expr,
+    md5_long_sql,
+)
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 # per-source keep-rate (percent); sources not listed use DEFAULT_RATE
@@ -422,7 +428,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode("sh").alias("s0"))
         .select(
             "doc_id",
-            F.conv(F.substring(F.md5("s0"), 1, 15), 16, 10).cast("long").alias("s"),
+            md5_long("s0").alias("s"),
         )
         .join(splits, "doc_id")
     )
@@ -465,7 +471,7 @@ def _split_leakage_oracle() -> str:
         ),
         ex AS (
             SELECT e.doc_id, s.source, s.split,
-                   CAST(('0x' || substr(md5(e.s0), 1, 15)) AS BIGINT) AS sk
+                   {md5_long_sql('e.s0')} AS sk
             FROM (SELECT doc_id, unnest(sh) AS s0 FROM sh) e
             JOIN splits s USING (doc_id)
         ),
@@ -1170,6 +1176,65 @@ def _bpe_fold_expr(pa: str, pb: str):
     )
 
 
+def _bpe_merge_chain(
+    words: DataFrame, fold_last: bool
+) -> tuple[list[tuple[str, str, int]], DataFrame]:
+    """The BPE_ROUNDS merge rounds over a (word, freq) vocabulary:
+    each round counts adjacent symbol pairs weighted by word
+    frequency, picks the global best pair (count desc, pair
+    lexicographic — fully deterministic) and folds it into every word.
+
+    Each round's winning pair is ONE row — collect it to the driver
+    (the kmeans-centroid pattern) and inject it as literals into the
+    round's fold. Pre-tokenized symbols are [a-z0-9_] so literal
+    inlining is quoting-safe. Caches are vocab-sized, materialized
+    eagerly, and the PREVIOUS round's cache is released as soon as the
+    next round lands (round-6 ADVICE: the lazy per-round cache chain
+    leaked R frames into the driver's long single session).
+
+    Returns the picked (pa, pb, cnt) merges and the CACHED vocabulary
+    (word, freq, syms) — the caller must unpersist() it. Without
+    `fold_last` the last round's fold and materialization are skipped
+    (q_bpe_train reads only the merges)."""
+    cur = words.select(
+        "word",
+        "freq",
+        F.expr(
+            "concat(transform(sequence(1, length(word)),"
+            " i -> substr(word, i, 1)), array('_'))"
+        ).alias("syms"),
+    ).cache()
+    merges: list[tuple[str, str, int]] = []
+    for k in range(1, BPE_ROUNDS + 1):
+        n1 = F.greatest(F.size("syms") - 1, F.lit(0))
+        pair = F.zip_with(
+            F.slice("syms", 1, n1),
+            F.slice("syms", 2, n1),
+            lambda x, y: F.struct(x.alias("pa"), y.alias("pb")),
+        )
+        best = (
+            cur.select("freq", F.explode(pair).alias("pr"))
+            .groupBy(F.col("pr.pa").alias("pa"), F.col("pr.pb").alias("pb"))
+            .agg(F.sum("freq").alias("cnt"))
+            .orderBy(F.desc("cnt"), "pa", "pb")
+            .limit(1)
+            .collect()
+        )
+        if not best:
+            break
+        r = best[0]
+        merges.append((r.pa, r.pb, int(r.cnt)))
+        if k == BPE_ROUNDS and not fold_last:
+            break
+        prev = cur
+        cur = prev.select(
+            "word", "freq", _bpe_fold_expr(r.pa, r.pb).alias("syms")
+        ).cache()
+        cur.count()  # materialize before dropping the previous cache
+        prev.unpersist()
+    return merges, cur
+
+
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE merge learning — the tokenizer-TRAINING side of
     the pipeline (tokenize_encode is the inference side): one
@@ -1200,54 +1265,10 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
-    cur = words.select(
-        "word",
-        "freq",
-        F.expr(
-            "concat(transform(sequence(1, length(word)),"
-            " i -> substr(word, i, 1)), array('_'))"
-        ).alias("syms"),
-    )
-    # Each round's winning pair is ONE row — collect it to the driver
-    # (the kmeans-centroid pattern) and inject it as literals into the
-    # next round's fold. Pre-tokenized symbols are [a-z0-9_] so literal
-    # inlining is quoting-safe. Caches are vocab-sized, materialized
-    # eagerly, and the PREVIOUS round's cache is released as soon as
-    # the next round lands — nothing stays persisted after the query
-    # (round-6 ADVICE: the lazy per-round cache chain leaked R frames
-    # into the driver's long single session).
-    cur = cur.cache()
-    best_rows: list[tuple[int, str, str, str, int]] = []
-    for k in range(1, BPE_ROUNDS + 1):
-        n1 = F.greatest(F.size("syms") - 1, F.lit(0))
-        pair = F.zip_with(
-            F.slice("syms", 1, n1),
-            F.slice("syms", 2, n1),
-            lambda x, y: F.struct(x.alias("pa"), y.alias("pb")),
-        )
-        best = (
-            cur.select("freq", F.explode(pair).alias("pr"))
-            .groupBy(F.col("pr.pa").alias("pa"), F.col("pr.pb").alias("pb"))
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), "pa", "pb")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        r = best[0]
-        best_rows.append((k, r.pa, r.pb, r.pa + r.pb, int(r.cnt)))
-        if k == BPE_ROUNDS:
-            break  # the last round's merged vocabulary is never read
-        prev = cur
-        cur = prev.select(
-            "word", "freq", _bpe_fold_expr(r.pa, r.pb).alias("syms")
-        ).cache()
-        cur.count()  # materialize before dropping the previous cache
-        prev.unpersist()
+    merges, cur = _bpe_merge_chain(words, fold_last=False)
     cur.unpersist()
     return spark.createDataFrame(
-        best_rows,
+        [(k, pa, pb, pa + pb, cnt) for k, (pa, pb, cnt) in enumerate(merges, 1)],
         schema="round int, pa string, pb string, merged string, cnt long",
     )
 
@@ -1261,10 +1282,10 @@ def _bpe_encoded_by_source(
     (by_source, cur) where `cur` is the CACHED encoded vocabulary —
     the caller must unpersist() it after pinning its aggregate.
 
-    The merge chain re-derives exactly as in q_bpe_train (same folds,
-    same 1-row driver collects), is applied on the VOCABULARY (one
-    fold per distinct word, never per occurrence) — at 100 TB the
-    corpus-sized work is two word-count aggregations and one
+    The merge chain re-derives through q_bpe_train's _bpe_merge_chain
+    (same folds, same 1-row driver collects), applied on the
+    VOCABULARY (one fold per distinct word, never per occurrence) — at
+    100 TB the corpus-sized work is two word-count aggregations and one
     vocab-sized broadcast join."""
     d = load_table(spark, sf_dir, "documents")
     by_source = (
@@ -1279,43 +1300,7 @@ def _bpe_encoded_by_source(
     # re-derive the learned chain on the corpus-wide vocabulary (the
     # same derivation as q_bpe_train; Spark dedupes the shared scan)
     words = by_source.groupBy("word").agg(F.sum("freq").alias("freq"))
-    cur = words.select(
-        "word",
-        "freq",
-        F.expr(
-            "concat(transform(sequence(1, length(word)),"
-            " i -> substr(word, i, 1)), array('_'))"
-        ).alias("syms"),
-    )
-    # Same driver-side 1-row best-pair collect + literal fold as
-    # q_bpe_train; every intermediate cache is released as the next
-    # round lands, and the final vocab cache is released once the
-    # (per-source, driver-scale) result is localCheckpoint-pinned.
-    cur = cur.cache()
-    for _ in range(BPE_ROUNDS):
-        n1 = F.greatest(F.size("syms") - 1, F.lit(0))
-        pair = F.zip_with(
-            F.slice("syms", 1, n1),
-            F.slice("syms", 2, n1),
-            lambda x, y: F.struct(x.alias("pa"), y.alias("pb")),
-        )
-        best = (
-            cur.select("freq", F.explode(pair).alias("pr"))
-            .groupBy(F.col("pr.pa").alias("bpa"), F.col("pr.pb").alias("bpb"))
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), "bpa", "bpb")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        r = best[0]
-        prev = cur
-        cur = prev.select(
-            "word", "freq", _bpe_fold_expr(r.bpa, r.bpb).alias("syms")
-        ).cache()
-        cur.count()  # materialize before dropping the previous cache
-        prev.unpersist()
+    _, cur = _bpe_merge_chain(words, fold_last=True)
     return by_source, cur
 
 
@@ -1552,8 +1537,7 @@ def q_shuffle_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "h",
         F.expr(
-            "cast(conv(substr(md5(concat(cast(epoch as string), ':', "
-            "cast(doc_id as string))), 1, 15), 16, 10) as bigint)"
+            md5_long_expr("concat(cast(epoch as string), ':', cast(doc_id as string))")
         ),
     )
     e = e.repartitionByRange(N_SHUF_SHARDS, "epoch", "h").withColumn(
@@ -1588,8 +1572,7 @@ SHUFFLE_EPOCHS_ORACLE = f"""
                 - 1 AS BIGINT) AS pos
     FROM (
         SELECT d.doc_id, d.source, e.epoch,
-               CAST(('0x' || substr(md5(CAST(e.epoch AS VARCHAR) || ':'
-                     || CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+               {md5_long_sql("CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)")} AS h
         FROM documents d,
              (SELECT unnest(range(0, {SHUFFLE_EPOCHS})) AS epoch) e
     )
@@ -1613,9 +1596,7 @@ def q_sample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     em = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    h = F.expr(
-        "cast(conv(substr(md5(cast(vec_id as string)), 1, 15), 16, 10) as bigint)"
-    )
+    h = F.expr(md5_long_expr("cast(vec_id as string)"))
     m = em.groupBy("label").agg(F.count("*").alias("n")).agg(
         F.min("n").alias("m_min")
     )
@@ -1652,11 +1633,10 @@ def q_sample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SAMPLE_BALANCED_ORACLE = """
+SAMPLE_BALANCED_ORACLE = f"""
     WITH h AS (
         SELECT label, vec_id,
-               CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) AS hk
+               {md5_long_sql("CAST(vec_id AS VARCHAR)")} AS hk
         FROM embeddings
     ),
     m AS (SELECT CAST(min(n) AS BIGINT) AS m_min

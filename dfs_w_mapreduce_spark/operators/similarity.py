@@ -65,6 +65,11 @@ def _dot(x: Column, y: Column) -> Column:
     return F.aggregate(F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda a, v: a + v)
 
 
+def _d2(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance |a - b|^2 = a.a + b.b - 2 a.b."""
+    return _dot(a, a) + _dot(b, b) - 2 * _dot(a, b)
+
+
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out before the per-vector math: the fixture's embeddings
     # parquet is one scan split, so the norm computation and every
@@ -672,9 +677,6 @@ def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("code_id", "j", F.col("sv").alias("cw"))
     )
 
-    def _d2(a, b):
-        return _dot(a, a) + _dot(b, b) - 2 * _dot(a, b)
-
     enc = sub.join(F.broadcast(codebook), "j").select(
         "vec_id", "j", "code_id",
         F.round(_d2(F.col("sv"), F.col("cw")), 6).alias("d2"),
@@ -795,9 +797,6 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors) against a 2*8*16-row broadcast distance table; the final
     top-K is a per-query window over probed candidates only."""
     v = _vecs(spark, sf_dir)
-
-    def _d2(a, b):
-        return _dot(a, a) + _dot(b, b) - 2 * _dot(a, b)
 
     cent = v.filter(F.col("vec_id") % N_CENTROIDS_MOD == 0).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
@@ -1322,9 +1321,6 @@ def q_sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row TakeOrdered; the driver holds k ids, never data. At 100 TB:
     k linear passes, each map-side only."""
     v = _vecs(spark, sf_dir).select("vec_id", "v")
-
-    def _d2(a, b):
-        return _dot(a, a) + _dot(b, b) - 2 * _dot(a, b)
 
     seed = v.orderBy("vec_id").limit(1)
     srow = seed.first()

@@ -20,7 +20,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
-from dfs_w_mapreduce_spark.operators.dedup import MINHASH_AB, P31, _h31_spark, _h31_sql
+from dfs_w_mapreduce_spark.functions.hashing import (
+    P31,
+    _h31_spark,
+    _h31_sql,
+    md5_long_expr,
+    md5_long_sql,
+)
+from dfs_w_mapreduce_spark.operators.dedup import MINHASH_AB
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 BLOOM_BITS = 1024
@@ -229,9 +236,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(tokens_col(F.lower(F.col("text")))).alias("token"),
     ).select(
         "source",
-        F.expr(
-            "cast(conv(substr(md5(token), 1, 15), 16, 10) as bigint)"
-        ).alias("h"),
+        F.expr(md5_long_expr("token")).alias("h"),
     ).distinct()
     rk = F.row_number().over(W.partitionBy("source").orderBy("h"))
     sk = hh.withColumn("rk", rk).filter(F.col("rk") <= KMV_K).select("source", "h")
@@ -317,7 +322,7 @@ KMV_DISTINCT_ORACLE = f"""
         FROM documents
     ),
     hh AS (SELECT DISTINCT source,
-                  CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) AS h
+                  {md5_long_sql('token')} AS h
            FROM toks),
     sk AS (SELECT source, h FROM (
                SELECT source, h,
@@ -391,9 +396,7 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(tokens_col(F.lower(F.col("text")))).alias("token"),
     ).select(
         "source",
-        F.expr(
-            "cast(conv(substr(md5(token), 1, 15), 16, 10) as bigint)"
-        ).alias("h"),
+        F.expr(md5_long_expr("token")).alias("h"),
     ).distinct()
     rk = F.row_number().over(W.partitionBy("source").orderBy("h"))
     sk = hh.withColumn("rk", rk).filter(F.col("rk") <= KMV_K).select("source", "h")
@@ -470,7 +473,7 @@ KMV_SET_OPS_ORACLE = f"""
         FROM documents
     ),
     hh AS (SELECT DISTINCT source,
-                  CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) AS h
+                  {md5_long_sql('token')} AS h
            FROM toks),
     sk AS (SELECT source, h FROM (
                SELECT source, h,
@@ -552,9 +555,8 @@ def q_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     rows = F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("j")
     cell = F.expr(
-        "cast(conv(substr(md5(concat(cast(j as string), ':', "
-        "cast(user_id as string))), 1, 15), 16, 10) as bigint) "
-        f"% {CMS_WIDTH}"
+        md5_long_expr("concat(cast(j as string), ':', cast(user_id as string))")
+        + f" % {CMS_WIDTH}"
     )
     hashed = e.select("user_id", rows).select("user_id", "j", cell.alias("cell"))
     sketch = hashed.groupBy("j", "cell").agg(F.count("*").alias("cnt"))
@@ -584,8 +586,7 @@ def q_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 CMS_SKETCH_ORACLE = f"""
     WITH hashed AS (
         SELECT user_id, j,
-               CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || ':'
-                     || CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT)
+               {md5_long_sql("CAST(j AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)")}
                    % {CMS_WIDTH} AS cell
         FROM events, (SELECT unnest(range(0, {CMS_DEPTH})) AS j)
     ),
@@ -599,8 +600,7 @@ CMS_SKETCH_ORACLE = f"""
     ),
     probe AS (
         SELECT t.user_id, t.exact_n, j,
-               CAST(('0x' || substr(md5(CAST(j AS VARCHAR) || ':'
-                     || CAST(t.user_id AS VARCHAR)), 1, 15)) AS BIGINT)
+               {md5_long_sql("CAST(j AS VARCHAR) || ':' || CAST(t.user_id AS VARCHAR)")}
                    % {CMS_WIDTH} AS cell
         FROM top t, (SELECT unnest(range(0, {CMS_DEPTH})) AS j)
     )

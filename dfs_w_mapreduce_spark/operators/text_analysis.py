@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import fan_out, load_table
+from dfs_w_mapreduce_spark.functions.hashing import md5_long, md5_long_sql
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol
@@ -811,9 +812,7 @@ def _zipf_toks(d: DataFrame) -> DataFrame:
     )
     hashed = pos.select(
         "doc_id",
-        F.conv(F.substring(F.md5(F.concat_ws(":", "doc_id", "pos")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+        md5_long(F.concat_ws(":", "doc_id", "pos")).alias("h"),
     )
     return hashed.select(
         "doc_id",
@@ -840,9 +839,8 @@ _ZIPF_TOKS_CTES = f"""base AS (
                     WHEN h % 8 < 6 THEN 'm' || CAST((h // 8) % {ZIPF_MID} AS VARCHAR)
                     ELSE 't' || CAST((h // 8) % {ZIPF_TAIL} AS VARCHAR) END AS term
         FROM (SELECT doc_id,
-                     CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-                                              || CAST(pos AS VARCHAR)), 1, 15))
-                          AS BIGINT) AS h
+                     {md5_long_sql("CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)")}
+                          AS h
               FROM pos)
     )"""
 

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
+from dfs_w_mapreduce_spark.functions.hashing import md5_long, md5_long_sql
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 
@@ -85,17 +86,16 @@ def q_sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
         F.sum(F.length("text")).alias("sum_text_len"),
-        F.sum(F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("long"))
-        .alias("text_checksum"),
+        F.sum(md5_long("text", 8)).alias("text_checksum"),
     )
 
 
-SINK_JSON_ORACLE = """
+SINK_JSON_ORACLE = f"""
     SELECT lang, source,
            count(*) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars,
            CAST(sum(length(text)) AS BIGINT) AS sum_text_len,
-           CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT) AS text_checksum
+           CAST(sum({md5_long_sql('text', 8)}) AS BIGINT) AS text_checksum
     FROM documents GROUP BY 1, 2
 """
 
@@ -272,16 +272,15 @@ def q_sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.length("text")).alias("sum_text_len"),
-        F.sum(F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("long"))
-        .alias("text_checksum"),
+        F.sum(md5_long("text", 8)).alias("text_checksum"),
     )
 
 
-SINK_XML_ORACLE = """
+SINK_XML_ORACLE = f"""
     SELECT lang,
            count(*) AS n_docs,
            CAST(sum(length(text)) AS BIGINT) AS sum_text_len,
-           CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT) AS text_checksum
+           CAST(sum({md5_long_sql('text', 8)}) AS BIGINT) AS text_checksum
     FROM documents GROUP BY 1
 """
 
@@ -308,7 +307,7 @@ def q_source_chunked_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("lines_per_chunk", str(CHUNK_LINES))
         .load()
     )
-    checksum = F.conv(F.substring(F.md5("value"), 1, 8), 16, 10).cast("long")
+    checksum = md5_long("value", 8)
     return df.groupBy("chunk_id").agg(
         F.count("*").alias("n_lines"),
         F.max("line_no").alias("max_line"),
@@ -325,7 +324,7 @@ SOURCE_CHUNKED_ORACLE = f"""
     )
     SELECT chunk_id, count(*) AS n_lines,
            CAST(max(line_no) AS INT) AS max_line,
-           CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT) AS checksum
+           CAST(sum({md5_long_sql('text', 8)}) AS BIGINT) AS checksum
     FROM numbered GROUP BY 1
 """
 
@@ -353,7 +352,7 @@ def q_source_chunked_stream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("lines_per_chunk", str(CHUNK_LINES))
         .load()
     )
-    checksum = F.conv(F.substring(F.md5("value"), 1, 8), 16, 10).cast("long")
+    checksum = md5_long("value", 8)
     agg = df.groupBy("chunk_id").agg(
         F.count("*").alias("n_lines"),
         F.max("line_no").alias("max_line"),
@@ -394,7 +393,7 @@ def q_sink_chunked_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .save()
     )
     back = spark.read.text(out)
-    checksum = F.conv(F.substring(F.md5("value"), 1, 8), 16, 10).cast("long")
+    checksum = md5_long("value", 8)
     return back.agg(
         F.count("*").alias("n_lines"),
         F.sum(F.length("value")).alias("sum_len"),
@@ -402,10 +401,10 @@ def q_sink_chunked_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SINK_CHUNKED_ORACLE = """
+SINK_CHUNKED_ORACLE = f"""
     SELECT count(*) AS n_lines,
            CAST(sum(length(text)) AS BIGINT) AS sum_len,
-           CAST(sum(CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT) AS checksum
+           CAST(sum({md5_long_sql('text', 8)}) AS BIGINT) AS checksum
     FROM documents
 """
 

@@ -410,7 +410,8 @@ def test_bloom_filter_no_false_negatives(spark, sf_dir):
     """Every key the Bloom was built from must probe positive; keys
     outside the set should mostly probe negative (FP rate << 50%)."""
     from dfs_w_mapreduce_spark.catalog import load_table
-    from dfs_w_mapreduce_spark.operators.dedup import MINHASH_AB, P31
+    from dfs_w_mapreduce_spark.functions.hashing import P31
+    from dfs_w_mapreduce_spark.operators.dedup import MINHASH_AB
     from dfs_w_mapreduce_spark.operators.sketches import (
         BLOOM_BITS, K_HASHES, q_bloom_build,
     )

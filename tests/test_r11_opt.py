@@ -110,7 +110,8 @@ def test_simhash_sample_pushdown_matches_full_then_filter(spark, sf_dir):
     filtering after — this pins that invariant with a sample small
     enough to genuinely prune at fixture scale."""
     from dfs_w_mapreduce_spark.catalog import load_table
-    from dfs_w_mapreduce_spark.operators.dedup import _h31_spark, q_dedup_simhash
+    from dfs_w_mapreduce_spark.functions.hashing import _h31_spark
+    from dfs_w_mapreduce_spark.operators.dedup import q_dedup_simhash
 
     d = load_table(spark, sf_dir, "documents")
     h = _h31_spark(F.col("doc_id").cast("string"))

@@ -1,13 +1,25 @@
-"""Dump formatted physical plans for the headline queries to PLANS.md.
+"""Dump formatted physical plans: PLANS.md, or before/after evidence files.
 
-Evidence artifact for the scale posture: shows PushedFilters /
-ReadSchema pruning, BroadcastHashJoin placement, partial+final
-HashAggregate, TakeOrderedAndProject, and exchange counts per query.
-Regenerate after plan-affecting changes:  python tools/dump_plans.py
+    python tools/dump_plans.py                        # regenerate PLANS.md
+    python tools/dump_plans.py <tag> before|after q…  # plans/<tag>/
+
+With no arguments, writes the formatted plans of the headline queries
+to PLANS.md — the evidence artifact for the scale posture: shows
+PushedFilters / ReadSchema pruning, BroadcastHashJoin placement,
+partial+final HashAggregate, TakeOrderedAndProject, and exchange counts
+per query. Regenerate after plan-affecting changes.
+
+With a tag, writes plans/<tag>/<q>_<before|after>.txt (the formatted
+plan before execution) and <q>_<before|after>_executed.txt (the
+executed plan after a collect(): ReusedExchange and the final AQE
+shape appear only there) for each named query, at
+$SPARK_GRAFT_SF_DIR (default sf0.01). Arguments and query names are
+checked before Spark starts.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -178,7 +190,39 @@ HEADLINE = [
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def main() -> None:
+USAGE = "usage: dump_plans.py [<tag> before|after <query> ...]"
+
+
+def main(argv: list[str]) -> int:
+    if not argv:
+        write_plans_md()
+        return 0
+    if len(argv) < 3 or argv[1] not in ("before", "after"):
+        print(USAGE, file=sys.stderr)
+        return 2
+    tag, suffix, names = argv[0], argv[1], argv[2:]
+    registry = collect()
+    unknown = [n for n in names if n not in registry]
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
+    out_dir = Path(_REPO) / "plans" / tag
+    out_dir.mkdir(parents=True, exist_ok=True)
+    spark = get_spark(f"plans:{tag}")
+    for name in names:
+        df = registry[name].fn(spark, sf_dir)
+        (out_dir / f"{name}_{suffix}.txt").write_text(formatted_plan(df))
+        df.collect()
+        executed = df._jdf.queryExecution().executedPlan().toString()
+        (out_dir / f"{name}_{suffix}_executed.txt").write_text(executed)
+        # a query's cached frames must not show up in the next one's plan
+        spark.catalog.clearCache()
+        print(f"wrote plans/{tag}/{name}_{suffix}.txt", file=sys.stderr)
+    return 0
+
+
+def write_plans_md() -> None:
     spark = get_spark("plans")
     registry = collect()
     out = [
@@ -212,4 +256,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main(sys.argv[1:]))
