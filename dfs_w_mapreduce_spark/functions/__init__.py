@@ -1,2 +1,3 @@
 """Expression helpers shared by the operator modules and their DuckDB
-oracles (hashing: the md5 → integer hash both engines compute)."""
+oracles, each written once for both engines: hashing (the md5 →
+integer hash) and text (the whitespace tokenizer)."""

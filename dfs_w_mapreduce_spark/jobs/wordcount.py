@@ -8,8 +8,9 @@ Reference semantics (SURVEY.md §2.3):
 - Output: unordered ``(word, count)`` pairs.
 
 Spark translation: ``split`` + ``explode`` (the map / UDTF shape),
-then a hash aggregate.  Catalyst plans this as partial+final
-HashAggregate — the map-side combiner the reference lacks — so the
+then a hash aggregate. The split is the engine's shared whitespace
+tokenizer, ``functions.text.ws_tokens``. Catalyst plans this as
+partial+final HashAggregate — the map-side combiner the reference lacks — so the
 shuffle carries one row per (partition, word) instead of one row per
 token, which is the difference between shuffling ~100 TB of tokens
 and shuffling the vocabulary at scale.
@@ -17,18 +18,10 @@ and shuffling the vocabulary at scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Go strings.Fields splits on runs of Unicode whitespace; \s covers the
-# ASCII whitespace present in the fixtures. Empty tokens are dropped
-# below, matching Fields' no-empty-fields contract.
-WHITESPACE_RE = r"\s+"
-
-
-def tokenize_line(col: Column) -> Column:
-    """Map-side tokenization: line -> array of non-empty tokens."""
-    return F.filter(F.split(col, WHITESPACE_RE), lambda t: t != F.lit(""))
+from dfs_w_mapreduce_spark.functions.text import ws_tokens, ws_tokens_sql
 
 
 def wordcount(lines: DataFrame, text_col: str = "value") -> DataFrame:
@@ -37,7 +30,7 @@ def wordcount(lines: DataFrame, text_col: str = "value") -> DataFrame:
     Columns: ``word string, cnt bigint`` (unordered).
     """
     return (
-        lines.select(F.explode(tokenize_line(F.col(text_col))).alias("word"))
+        lines.select(F.explode(ws_tokens(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
@@ -48,9 +41,8 @@ def wordcount_oracle_sql(source_sql: str, text_col: str = "value") -> str:
     return f"""
         SELECT word, count(*) AS cnt
         FROM (
-            SELECT unnest(string_split_regex({text_col}, '\\s+')) AS word
+            SELECT unnest({ws_tokens_sql(text_col)}) AS word
             FROM ({source_sql})
         )
-        WHERE word <> ''
         GROUP BY word
     """

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import TABLES, load_table
+from dfs_w_mapreduce_spark.functions.text import ws_tokens, ws_tokens_sql
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 
@@ -326,7 +327,7 @@ def q_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale aggregation per grain plus a window over
     source x lang cells — at 100 TB this is two linear passes."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
+    toks = ws_tokens(F.col("text"))
     base = (
         d.select("source", "lang", "n_chars", F.md5("text").alias("fp"),
                  F.size(toks).cast("long").alias("n_toks"))
@@ -356,10 +357,10 @@ def q_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.join(top, "source")
 
 
-CORPUS_DATASHEET_ORACLE = """
+CORPUS_DATASHEET_ORACLE = f"""
     WITH base AS (
         SELECT source, lang, n_chars, md5(text) AS fp,
-               len(list_filter(string_split_regex(text, '\\s+'), t -> t <> ''))
+               len({ws_tokens_sql('text')})
                    AS n_toks
         FROM documents
     ),

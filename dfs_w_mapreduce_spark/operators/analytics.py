@@ -258,9 +258,11 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .withColumnsRenamed({"a": "src", "b": "dst"})
-        # co-partition by src once: every round's msgs join reads the
-        # edge list on its join key, so the per-round shuffle carries
-        # only the node-sized label frame, never the edges
+        # hash(src) layout before the checkpoint. localCheckpoint()
+        # does not keep it as a known partitioning (pyspark 4.1), so
+        # each round's join still plans Exchange hashpartitioning(src)
+        # over the checkpointed edges: the edges are re-shuffled
+        # every round, not only the node-sized label frame
         .repartition(spark.sparkContext.defaultParallelism, "src")
         .localCheckpoint()
     )

@@ -41,12 +41,12 @@ from dfs_w_mapreduce_spark.functions.hashing import (
     md5_long,
     md5_long_sql,
 )
+from dfs_w_mapreduce_spark.functions.text import ws_tokens, ws_tokens_sql
 from dfs_w_mapreduce_spark.registry import QuerySpec
 from dfs_w_mapreduce_spark.operators.text_analysis import (
     BM25_TOP_K,
     _bm25_oracle,
     q_bm25_search,
-    tokens_col,
 )
 
 # Misra-Gries: keep any token whose corpus frequency exceeds
@@ -89,7 +89,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole vocabulary. The threshold compare is integer (cnt * K >
     n_total) — no float boundary to diverge on."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.explode(tokens_col(F.lower(F.col("text")))).alias("token"))
+    toks = d.select(F.explode(ws_tokens(F.lower(F.col("text")))).alias("token"))
     cand = toks.mapInPandas(_mg_partial, "token string").distinct()
     total = toks.agg(F.count("*").alias("n_total"))
     return (
@@ -104,8 +104,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HEAVY_HITTERS_ORACLE = f"""
     WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> t <> '')) AS token
+        SELECT unnest({ws_tokens_sql('lower(text)')}) AS token
         FROM documents
     ),
     tot AS (SELECT count(*) AS n_total FROM toks)
@@ -139,7 +138,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     nq = queries.groupBy("query_id").agg(F.count_distinct("term").alias("nq"))
     from dfs_w_mapreduce_spark.catalog import fan_out
 
-    toks = tokens_col(F.lower(F.col("text")))
+    toks = ws_tokens(F.lower(F.col("text")))
     # fan_out before the tokenize + array_distinct (single fixture
     # scan split otherwise serializes the term-set build)
     docs = fan_out(spark, d.select("doc_id", "text")).select(
@@ -198,8 +197,7 @@ def _rrf_oracle() -> str:
         nq AS (SELECT query_id, count(DISTINCT term) AS nq FROM q GROUP BY 1),
         docs AS (
             SELECT doc_id,
-                   list_distinct(list_filter(string_split_regex(lower(text), '\\s+'),
-                                             t -> t <> '')) AS terms
+                   list_distinct({ws_tokens_sql('lower(text)')}) AS terms
             FROM documents
         ),
         inter AS (
@@ -583,7 +581,7 @@ def q_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window_running hazard class all over again)."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "source", F.explode(tokens_col(F.lower(F.col("text")))).alias("token")
+        "source", F.explode(ws_tokens(F.lower(F.col("text")))).alias("token")
     )
     per_src = toks.groupBy("source", "token").agg(F.count("*").alias("cnt_ts"))
     src_tot = toks.groupBy("source").agg(F.count("*").alias("n_s"))
@@ -604,11 +602,10 @@ def q_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KL_DIVERGENCE_ORACLE = """
+KL_DIVERGENCE_ORACLE = f"""
     WITH toks AS (
         SELECT source,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({ws_tokens_sql('lower(text)')}) AS token
         FROM documents
     ),
     per_src AS (SELECT source, token, count(*) AS cnt_ts FROM toks GROUP BY 1, 2),
@@ -636,7 +633,7 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result; the final mean is one double division."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("token")
+        "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("token")
     )
     cnt = toks.groupBy("token").agg(F.count("*").alias("cnt_t"))
     tot = toks.agg(F.count("*").alias("n"))
@@ -652,11 +649,10 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_PERPLEXITY_ORACLE = """
+TEXT_PERPLEXITY_ORACLE = f"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({ws_tokens_sql('lower(text)')}) AS token
         FROM documents
     ),
     cnt AS (SELECT token, count(*) AS cnt_t FROM toks GROUP BY 1),
@@ -685,7 +681,7 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-count and vocab frames broadcast. Same exact-decimal
     term-sum discipline as kl_divergence."""
     d = load_table(spark, sf_dir, "documents")
-    w = tokens_col(F.lower(F.col("text")))
+    w = ws_tokens(F.lower(F.col("text")))
     n1 = F.greatest(F.size(w) - 1, F.lit(0))
     # carry w1 as its own struct field straight from the token array —
     # deriving it by re-splitting the joined bigram string would break
@@ -724,10 +720,10 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_BIGRAM_LM_ORACLE = """
+TEXT_BIGRAM_LM_ORACLE = f"""
     WITH docs AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
+               {ws_tokens_sql('lower(text)')} AS w
         FROM documents
     ),
     occ AS (
@@ -767,7 +763,7 @@ def q_text_bigram_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     three divides, two multiplies, ln) is parenthesized identically
     in the oracle."""
     d = load_table(spark, sf_dir, "documents")
-    w = tokens_col(F.lower(F.col("text")))
+    w = ws_tokens(F.lower(F.col("text")))
     n1 = F.greatest(F.size(w) - 1, F.lit(0))
     pairs = F.zip_with(
         F.slice(w, 1, n1),
@@ -809,7 +805,7 @@ def q_text_bigram_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEXT_BIGRAM_KN_ORACLE = f"""
     WITH docs AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
+               {ws_tokens_sql('lower(text)')} AS w
         FROM documents
     ),
     occ AS (
@@ -1007,7 +1003,7 @@ def q_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         "source",
-        F.explode(tokens_col(F.lower(F.col("text")))).alias("token"),
+        F.explode(ws_tokens(F.lower(F.col("text")))).alias("token"),
     ).select(
         "doc_id", "source", (_h31_spark(F.col("token")) % DSIR_BUCKETS).alias("b")
     )
@@ -1062,8 +1058,7 @@ def _importance_resample_oracle() -> str:
             SELECT doc_id, source,
                    {h} % {DSIR_BUCKETS} AS b
             FROM (SELECT doc_id, source,
-                         unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                            t -> t <> '')) AS token
+                         unnest({ws_tokens_sql('lower(text)')}) AS token
                   FROM documents)
         ),
         cc AS (SELECT b, count(*) AS cc,
@@ -1133,7 +1128,7 @@ def q_corpus_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         host.alias("host"),
         "lang",
         F.md5("text").alias("th"),
-        F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))).alias("n_words"),
+        F.size(ws_tokens(F.col("text"))).alias("n_words"),
     )
     n = F.count("*")
     uniq = F.countDistinct("th")
@@ -1364,9 +1359,7 @@ def q_corpus_governance_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     robots = F.col("doc_id") % 11 == 3
     retainable = lic.isin("cc-by", "public-domain") & ~robots
-    n_words = F.size(
-        F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
-    )
+    n_words = F.size(ws_tokens(F.col("text")))
     base = d.select(
         "source",
         lic.alias("license"),
@@ -1388,7 +1381,7 @@ def q_corpus_governance_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_GOVERNANCE_FLAGS_ORACLE = """
+CORPUS_GOVERNANCE_FLAGS_ORACLE = f"""
     WITH base AS (
         SELECT source,
                CASE WHEN doc_id % 7 <= 2 THEN 'cc-by'
@@ -1397,8 +1390,7 @@ CORPUS_GOVERNANCE_FLAGS_ORACLE = """
                     ELSE 'unknown' END AS license,
                doc_id % 11 = 3 AS robots_blocked,
                (doc_id % 7 <= 4) AND doc_id % 11 <> 3 AS retainable,
-               len(list_filter(string_split_regex(text, '\\s+'),
-                   t -> t <> '')) AS n_words
+               len({ws_tokens_sql('text')}) AS n_words
         FROM documents
     )
     SELECT source, license,
@@ -1501,7 +1493,7 @@ CORPUS_DOMAIN_ROLLUP_ORACLE = f"""
                 'https://([^/?]+)', 1) AS host,
             lang,
             md5(text) AS th,
-            len(list_filter(string_split_regex(text, '\\s+'), t -> t <> ''))
+            len({ws_tokens_sql('text')})
                 AS n_words
         FROM documents
     )

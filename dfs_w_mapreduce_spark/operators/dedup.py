@@ -39,6 +39,7 @@ from dfs_w_mapreduce_spark.functions.hashing import (
     md5_long_expr,
     md5_long_sql,
 )
+from dfs_w_mapreduce_spark.functions.text import ws_tokens, ws_tokens_sql
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 # ---------------------------------------------------------------- shared
@@ -107,7 +108,7 @@ _SHINGLES_SQL = """
 def _shingles_of(d: DataFrame) -> DataFrame:
     """(doc_id, text, ...) -> (doc_id, sh) — shared by the batch path
     and the live incremental-ingest stream (foreachBatch frames)."""
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
+    toks = ws_tokens(F.col("text"))
     return d.select("doc_id", toks.alias("w")).select(
         "doc_id", _shingles_from_tokens(F.col("w")).alias("sh")
     )
@@ -121,7 +122,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DOC_SHINGLES_SQL = f"""
     SELECT doc_id, {_SHINGLES_SQL} AS sh
-    FROM (SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS w
+    FROM (SELECT doc_id, {ws_tokens_sql('text')} AS w
           FROM documents)
 """
 
@@ -155,10 +156,7 @@ def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = F.array_join(
         F.array_sort(
             F.array_distinct(
-                F.filter(
-                    F.split(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "), r"\s+"),
-                    lambda t: t != F.lit(""),
-                )
+                ws_tokens(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "))
             )
         ),
         " ",
@@ -169,10 +167,9 @@ def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_FINGERPRINT_ORACLE = """
-    SELECT md5(array_to_string(list_sort(list_distinct(list_filter(
-               string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), '\\s+'),
-               t -> t <> ''))), ' ')) AS fp,
+DEDUP_FINGERPRINT_ORACLE = f"""
+    SELECT md5(array_to_string(list_sort(list_distinct({ws_tokens_sql(
+               "regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g')")})), ' ')) AS fp,
            min(doc_id) AS keeper_id,
            count(*) AS n_docs
     FROM documents
@@ -1182,7 +1179,7 @@ def q_dedup_simhash(
     Hamming 19-25 vs random 11-15; plain tf gives 2 vs 14). Votes
     stay +/-1 integers — exact sums, no float sign-boundary hazard."""
     d = docs if docs is not None else load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != F.lit(""))
+    toks = ws_tokens(F.lower(F.col("text")))
     # full 60-bit md5 hash (no %P31 — we need 48 independent bits)
     h = md5_long("tok")
     ex = d.select("doc_id", F.explode(toks).alias("tok")).select(
@@ -1216,8 +1213,7 @@ def _simhash_oracle() -> str:
             SELECT doc_id,
                    {md5_long_sql('tok')} AS h
             FROM (SELECT doc_id,
-                         unnest(list_filter(
-                             string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS tok
+                         unnest({ws_tokens_sql('lower(text)')}) AS tok
                   FROM documents)
         ),
         sums AS (SELECT doc_id, {sums} FROM ex GROUP BY doc_id)
@@ -1572,8 +1568,10 @@ def _min_label_components(
     # MB) per partition, capped at defaultParallelism so behavior at
     # real scale — where n_edges/50k far exceeds the cap — is exactly
     # the r10 layout. The count is one metadata-cheap job over the
-    # just-checkpointed pair blocks; hash(src) still pre-satisfies
-    # each round's join and the seed groupBy distribution.
+    # just-checkpointed pair blocks. The hash(src) layout does not
+    # survive the localCheckpoint() below as a known partitioning
+    # (pyspark 4.1): each round's join and the seed groupBy still
+    # plan their own Exchange hashpartitioning(src) over the edges.
     n_edges = pairs.count()
     parts = max(
         1,

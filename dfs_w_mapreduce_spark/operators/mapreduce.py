@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from dfs_w_mapreduce_spark.functions.text import ws_tokens, ws_tokens_sql
+
 # ---------------------------------------------------------------- tier 1
 
 KV_SCHEMA = "key string, value string"
@@ -239,7 +241,7 @@ def _q_mr_wordcount_generic(spark, sf_dir: str) -> DataFrame:
     from dfs_w_mapreduce_spark.sources.readers import text_lines
 
     lines = text_lines(spark, sf_dir)
-    tokens = F.filter(F.split(F.col("value"), r"\s+"), lambda t: t != F.lit(""))
+    tokens = ws_tokens(F.col("value"))
     pairs = F.transform(tokens, lambda t: F.struct(t.alias("key"), F.lit("1").alias("value")))
     return map_reduce(lines, pairs, F.count("*").alias("cnt")).withColumnRenamed(
         "key", "word"
@@ -326,7 +328,7 @@ def _q_mr_map_positional(spark, sf_dir: str) -> DataFrame:
         F.col("doc_id"),
     )
     pos = (F.col("chunk") * CHUNK_LINES + F.col("line_number")).cast("bigint")
-    tokens = F.filter(F.split(F.col("value"), r"\s+"), lambda t: t != F.lit(""))
+    tokens = ws_tokens(F.col("value"))
     pairs = F.explode(tokens).alias("word")
     return (
         lines.select(pairs, pos.alias("pos"))
@@ -346,10 +348,9 @@ MR_MAP_POSITIONAL_ORACLE = f"""
     SELECT word,
            count(*) AS cnt,
            CAST(min(chunk * {CHUNK_LINES} + line_number) AS BIGINT) AS first_pos
-    FROM (SELECT unnest(string_split_regex(value, '\\s+')) AS word,
+    FROM (SELECT unnest({ws_tokens_sql('value')}) AS word,
                  chunk, line_number
           FROM lines)
-    WHERE word <> ''
     GROUP BY word
 """
 
@@ -397,7 +398,7 @@ MR_MAP_UDTF_ORACLE = f"""
     SELECT doc_id, CAST(i - 1 AS INT) AS idx,
            array_to_string(w[i:i + {NGRAM_N - 1}], ' ') AS ngram
     FROM (SELECT doc_id,
-                 list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS w
+                 {ws_tokens_sql('text')} AS w
           FROM documents),
          LATERAL (SELECT unnest(generate_series(1, len(w) - {NGRAM_N - 1})) AS i) g
 """
@@ -579,9 +580,8 @@ def specs():
             fn=_q_mr_wordcount_generic,
             oracle=f"""
                 SELECT word, count(*) AS cnt
-                FROM (SELECT unnest(string_split_regex(value, '\\s+')) AS word
+                FROM (SELECT unnest({ws_tokens_sql('value')}) AS word
                       FROM ({TEXT_LINES_SQL}))
-                WHERE word <> ''
                 GROUP BY word
             """,
             tags=("mapreduce", "generic"),
@@ -593,9 +593,8 @@ def specs():
             oracle=f"""
                 WITH wc AS (
                     SELECT word, count(*) AS cnt
-                    FROM (SELECT unnest(string_split_regex(value, '\\s+')) AS word
+                    FROM (SELECT unnest({ws_tokens_sql('value')}) AS word
                           FROM ({TEXT_LINES_SQL}))
-                    WHERE word <> ''
                     GROUP BY word
                 ),
                 tot AS (SELECT sum(cnt) AS n_total FROM wc)
@@ -614,9 +613,8 @@ def specs():
             oracle=f"""
                 SELECT key, CAST(count(*) AS VARCHAR) AS value
                 FROM (SELECT lower(tok[1]) AS key
-                      FROM (SELECT unnest(string_split_regex(value, '\\s+')) AS tok
-                            FROM ({TEXT_LINES_SQL}))
-                      WHERE tok <> '')
+                      FROM (SELECT unnest({ws_tokens_sql('value')}) AS tok
+                            FROM ({TEXT_LINES_SQL})))
                 WHERE key BETWEEN 'a' AND 'z'
                 GROUP BY key
             """,

@@ -29,6 +29,12 @@ from dfs_w_mapreduce_spark.functions.hashing import (
     md5_long_expr,
     md5_long_sql,
 )
+from dfs_w_mapreduce_spark.functions.text import (
+    ws_split,
+    ws_split_sql,
+    ws_tokens,
+    ws_tokens_sql,
+)
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 # per-source keep-rate (percent); sources not listed use DEFAULT_RATE
@@ -299,7 +305,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
+    toks = ws_tokens(F.col("text"))
     per_doc = (
         d.select("doc_id", F.size(toks).cast("long").alias("n_tokens"))
         .repartitionByRange(N_PACK_SHARDS, "doc_id")
@@ -344,7 +350,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACK_SEQUENCES_ORACLE = f"""
     WITH per_doc AS (
         SELECT doc_id,
-               CAST(len(list_filter(string_split_regex(text, '\\s+'), t -> t <> '')) AS BIGINT) AS n_tokens
+               CAST(len({ws_tokens_sql('text')}) AS BIGINT) AS n_tokens
         FROM documents
     ), o AS (
         -- sum(BIGINT) is HUGEINT in DuckDB; duckdb->pandas renders HUGEINT as
@@ -466,7 +472,7 @@ def _split_leakage_oracle() -> str:
             SELECT doc_id,
                    list_distinct([w[i] || ' ' || w[i + 1] FOR i IN range(1, len(w))]) AS sh
             FROM (SELECT doc_id,
-                         list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS w
+                         {ws_tokens_sql('text')} AS w
                   FROM documents)
         ),
         ex AS (
@@ -507,7 +513,7 @@ def q_tokenize_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row stays scalar for the driver while still pinning the exact
     id sequence."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != F.lit(""))
+    toks = ws_tokens(F.lower(F.col("text")))
     docs = d.select("doc_id", toks.alias("w"))
     tf = docs.select(F.explode("w").alias("term")).groupBy("term").agg(
         F.count("*").alias("cnt")
@@ -541,7 +547,7 @@ def q_tokenize_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOKENIZE_ENCODE_ORACLE = f"""
     WITH docs AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
+               {ws_tokens_sql('lower(text)')} AS w
         FROM documents
     ),
     tf AS (
@@ -647,7 +653,7 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning/order yields the identical kept set on both engines.
     """
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
+    toks = ws_tokens(F.col("text"))
     q = d.select(
         "doc_id", "text", "source", F.size(toks).cast("long").alias("n_toks")
     ).filter(F.col("n_toks") >= E2E_MIN_TOKENS)
@@ -656,14 +662,7 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     q2 = q.join(e_keep.select("doc_id"), "doc_id")
     # near-dup dedup: keeper per sorted-distinct-token fingerprint
     norm = F.array_join(
-        F.array_sort(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != F.lit("")
-                )
-            )
-        ),
-        " ",
+        F.array_sort(F.array_distinct(ws_tokens(F.lower(F.col("text"))))), " "
     )
     f_keep = (
         q2.select("doc_id", F.md5(norm).alias("nfp"))
@@ -698,18 +697,17 @@ def _e2e_oracle() -> str:
     return f"""
         WITH q AS (
             SELECT doc_id, text, source,
-                   CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                        t -> t <> '')) AS BIGINT) AS n_toks
+                   CAST(len({ws_tokens_sql('text')}) AS BIGINT) AS n_toks
             FROM documents
-            WHERE len(list_filter(string_split_regex(text, '\\s+'), t -> t <> ''))
+            WHERE len({ws_tokens_sql('text')})
                   >= {E2E_MIN_TOKENS}
         ),
         e_keep AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY md5(text)),
         q2 AS (SELECT q.* FROM q JOIN e_keep USING (doc_id)),
         f_keep AS (
             SELECT min(doc_id) AS doc_id FROM q2
-            GROUP BY md5(array_to_string(list_sort(list_distinct(list_filter(
-                         string_split_regex(lower(text), '\\s+'), t -> t <> ''))), ' '))
+            GROUP BY md5(array_to_string(
+                list_sort(list_distinct({ws_tokens_sql('lower(text)')})), ' '))
         ),
         q3 AS (SELECT q2.* FROM q2 JOIN f_keep USING (doc_id)),
         clean AS (SELECT * FROM q3 WHERE {not_like}),
@@ -808,11 +806,9 @@ def q_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram-count join (the perplexity plan), then all rounds operate
     on the DOMAIN-sized frame (K rows) — broadcast scalars, no
     driver-side data, no corpus rescan per round."""
-    from dfs_w_mapreduce_spark.operators.text_analysis import tokens_col
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "source", F.explode(tokens_col(F.lower(F.col("text")))).alias("token")
+        "source", F.explode(ws_tokens(F.lower(F.col("text")))).alias("token")
     )
     cnt = toks.groupBy("token").agg(F.count("*").alias("cnt_t"))
     tot = toks.agg(F.count("*").alias("n"))
@@ -892,11 +888,10 @@ def q_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mix_doremi_oracle() -> str:
     parts = [
-        """
+        f"""
     toks AS (
         SELECT source,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({ws_tokens_sql('lower(text)')}) AS token
         FROM documents
     ),
     cnt AS (SELECT token, count(*) AS cnt_t FROM toks GROUP BY 1),
@@ -1260,7 +1255,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals (the kmeans-centroid iterative pattern)."""
     d = load_table(spark, sf_dir, "documents")
     words = (
-        d.select(F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("word"))
+        d.select(F.explode(ws_split(F.lower(F.col("text")))).alias("word"))
         .filter(F.col("word").rlike("^[a-z0-9]+$"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
@@ -1291,7 +1286,7 @@ def _bpe_encoded_by_source(
     by_source = (
         d.select(
             "source",
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("word"),
+            F.explode(ws_split(F.lower(F.col("text")))).alias("word"),
         )
         .filter(F.col("word").rlike("^[a-z0-9]+$"))
         .groupBy("source", "word")
@@ -1389,7 +1384,7 @@ def _bpe_fertility_oracle() -> str:
     WITH ws AS (
         SELECT source, word, count(*) AS freq FROM (
             SELECT source,
-                   unnest(list_filter(string_split_regex(lower(text), '\\s+'),
+                   unnest(list_filter({ws_split_sql('lower(text)')},
                                       t -> regexp_matches(t, '^[a-z0-9]+$')))
                    AS word
             FROM documents
@@ -1427,7 +1422,7 @@ def _bpe_apply_oracle() -> str:
     WITH ws AS (
         SELECT source, word, count(*) AS freq FROM (
             SELECT source,
-                   unnest(list_filter(string_split_regex(lower(text), '\\s+'),
+                   unnest(list_filter({ws_split_sql('lower(text)')},
                                       t -> regexp_matches(t, '^[a-z0-9]+$')))
                    AS word
             FROM documents
@@ -1488,7 +1483,7 @@ def _bpe_oracle() -> str:
     return f"""
     WITH w0 AS (
         SELECT word, count(*) AS freq FROM (
-            SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
+            SELECT unnest(list_filter({ws_split_sql('lower(text)')},
                                       t -> regexp_matches(t, '^[a-z0-9]+$')))
                    AS word
             FROM documents
@@ -1661,7 +1656,7 @@ PERCEPTRON_ROUNDS = 3
 
 
 def _perceptron_feats(d: DataFrame) -> DataFrame:
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
+    toks = ws_tokens(F.col("text"))
     return d.select(
         F.when(F.col("lang") == "en", F.lit(1))
         .otherwise(F.lit(-1))
@@ -1733,11 +1728,10 @@ def q_quality_perceptron(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _perceptron_oracle() -> str:
     ctes = [
-        """feats AS (
+        f"""feats AS (
             SELECT CAST(CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS BIGINT) AS y,
                    CAST(1 AS BIGINT) AS b,
-                   CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                        t -> t <> '')) AS BIGINT) AS tc,
+                   CAST(len({ws_tokens_sql('text')}) AS BIGINT) AS tc,
                    CAST(n_chars AS BIGINT) AS nc
             FROM documents
         )""",

@@ -27,6 +27,7 @@ from dfs_w_mapreduce_spark.functions.hashing import (
     md5_long_expr,
     md5_long_sql,
 )
+from dfs_w_mapreduce_spark.functions.text import ws_tokens, ws_tokens_sql
 from dfs_w_mapreduce_spark.operators.dedup import MINHASH_AB
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
@@ -162,10 +163,8 @@ def q_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT per-scope distinct count plus an in-query bounded-error
     verdict on the sketch estimate; the oracle computes exact + TRUE."""
     d = load_table(spark, sf_dir, "documents")
-    from dfs_w_mapreduce_spark.operators.text_analysis import tokens_col
-
     toks = d.select(
-        "source", F.explode(tokens_col(F.lower(F.col("text")))).alias("token")
+        "source", F.explode(ws_tokens(F.lower(F.col("text")))).alias("token")
     )
     per_src = toks.groupBy("source").agg(
         F.hll_sketch_agg("token").alias("sk"),
@@ -195,11 +194,10 @@ def q_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     return src_rows.unionByName(glob_row)
 
 
-HLL_UNION_ORACLE = """
+HLL_UNION_ORACLE = f"""
     WITH toks AS (
         SELECT source,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({ws_tokens_sql('lower(text)')}) AS token
         FROM documents
     )
     SELECT source, count(DISTINCT token) AS exact_distinct, TRUE AS within_tol
@@ -228,12 +226,10 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive the shuffle); the merge touches n_sources*k rows."""
     from pyspark.sql import Window as W
 
-    from dfs_w_mapreduce_spark.operators.text_analysis import tokens_col
-
     d = load_table(spark, sf_dir, "documents")
     hh = d.select(
         "source",
-        F.explode(tokens_col(F.lower(F.col("text")))).alias("token"),
+        F.explode(ws_tokens(F.lower(F.col("text")))).alias("token"),
     ).select(
         "source",
         F.expr(md5_long_expr("token")).alias("h"),
@@ -317,8 +313,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMV_DISTINCT_ORACLE = f"""
     WITH toks AS (
         SELECT source,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({ws_tokens_sql('lower(text)')}) AS token
         FROM documents
     ),
     hh AS (SELECT DISTINCT source,
@@ -388,12 +383,10 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the sketches exactly."""
     from pyspark.sql import Window as W
 
-    from dfs_w_mapreduce_spark.operators.text_analysis import tokens_col
-
     d = load_table(spark, sf_dir, "documents")
     hh = d.select(
         "source",
-        F.explode(tokens_col(F.lower(F.col("text")))).alias("token"),
+        F.explode(ws_tokens(F.lower(F.col("text")))).alias("token"),
     ).select(
         "source",
         F.expr(md5_long_expr("token")).alias("h"),
@@ -468,8 +461,7 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 KMV_SET_OPS_ORACLE = f"""
     WITH toks AS (
         SELECT source,
-               unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({ws_tokens_sql('lower(text)')}) AS token
         FROM documents
     ),
     hh AS (SELECT DISTINCT source,

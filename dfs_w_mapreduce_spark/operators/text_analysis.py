@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import fan_out, load_table
 from dfs_w_mapreduce_spark.functions.hashing import md5_long, md5_long_sql
+from dfs_w_mapreduce_spark.functions.text import ws_tokens, ws_tokens_sql
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol
@@ -38,15 +39,11 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def tokens_col(col):
-    return F.filter(F.split(col, r"\s+"), lambda t: t != F.lit(""))
-
-
 def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens, BPE-ish regex tokens,
     distinct whitespace tokens."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     return d.select(
         "doc_id",
         F.size(toks).alias("n_ws_tokens"),
@@ -59,8 +56,8 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TEXT_TOKENS_ORACLE = f"""
     SELECT doc_id,
-           len(list_filter(string_split_regex(text, '\\s+'), t -> t <> '')) :: INT AS n_ws_tokens,
-           len(list_distinct(list_filter(string_split_regex(text, '\\s+'), t -> t <> ''))) :: INT AS n_distinct_tokens,
+           len({ws_tokens_sql('text')}) :: INT AS n_ws_tokens,
+           len(list_distinct({ws_tokens_sql('text')})) :: INT AS n_distinct_tokens,
            len(regexp_extract_all(text, '{BPE_RE}')) :: INT AS n_bpe_tokens
     FROM documents
 """
@@ -70,7 +67,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-scoring battery: the standard cheap filters an LLM data
     pipeline applies before expensive model-based scoring."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     n_chars = F.length("text").cast("double")
     n_words = F.size(toks)
     n_punct = F.size(F.regexp_extract_all(F.col("text"), F.lit("[^A-Za-z0-9 ]"), F.lit(0)))
@@ -93,7 +90,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TQ_TOKS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
 RANK_KEEP_PCT = 0.2
 
 
@@ -115,7 +111,7 @@ def q_quality_rank_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementation is checked against an independent one rather than
     a mirror of itself."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     n_chars = F.length("text").cast("double")
     n_punct = F.size(
         F.regexp_extract_all(F.col("text"), F.lit("[^A-Za-z0-9 ]"), F.lit(0))
@@ -163,7 +159,7 @@ QUALITY_RANK_ORACLE = f"""
                CAST(length(text) AS DOUBLE) AS n_chars,
                len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS n_punct,
                len(list_intersect(list_distinct(
-                       list_filter(string_split_regex(text, '\\s+'), t -> t <> '')),
+                       {ws_tokens_sql('text')}),
                    ['the','a','an','and','or','of','to','in','is','it'])) AS n_stop
         FROM documents
     ),
@@ -191,10 +187,10 @@ TEXT_QUALITY_ORACLE = f"""
     WITH base AS (
         SELECT doc_id, text,
                CAST(length(text) AS DOUBLE) AS n_chars,
-               len({_TQ_TOKS}) AS n_words,
+               len({ws_tokens_sql('text')}) AS n_words,
                len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS n_punct,
                len(regexp_extract_all(text, '[0-9]')) AS n_digit,
-               len(list_intersect(list_distinct({_TQ_TOKS}),
+               len(list_intersect(list_distinct({ws_tokens_sql('text')}),
                                   ['the','a','an','and','or','of','to','in','is','it'])) AS n_stop
         FROM documents
     ), derived AS (
@@ -227,7 +223,7 @@ QUALITY_COL_SQL = f"""
                     ELSE 0.0 END AS mean_wl
         FROM (SELECT doc_id,
                      CAST(length(text) AS DOUBLE) AS n_chars,
-                     len({_TQ_TOKS}) AS n_words,
+                     len({ws_tokens_sql('text')}) AS n_words,
                      len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS n_punct
               FROM documents)
     )
@@ -239,7 +235,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits, argmax with fixed priority order (en>de>fr>es>zh) on ties,
     'und' (undetermined) when no marker hits at all."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.array_distinct(tokens_col(F.lower(F.col("text"))))
+    toks = F.array_distinct(ws_tokens(F.lower(F.col("text"))))
     scored = d.select(
         "doc_id",
         F.col("lang").alias("lang_declared"),
@@ -260,7 +256,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _langid_oracle() -> str:
-    toks = "list_distinct(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> ''))"
+    toks = f"list_distinct({ws_tokens_sql('lower(text)')})"
     score_cols = ",\n".join(
         f"len(list_intersect({toks}, {list(marks)!r})) AS s_{lang}".replace("'", "'")
         for lang, marks in LANG_MARKERS.items()
@@ -287,7 +283,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     norm = F.array_join(
         F.array_sort(
-            tokens_col(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "))
+            ws_tokens(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "))
         ),
         " ",
     )
@@ -298,12 +294,11 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_FINGERPRINT_ORACLE = """
+TEXT_FINGERPRINT_ORACLE = f"""
     SELECT doc_id,
            md5(text) AS exact_fp,
-           md5(array_to_string(list_sort(list_filter(
-               string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), '\\s+'),
-               t -> t <> '')), ' ')) AS sorted_fp
+           md5(array_to_string(list_sort({ws_tokens_sql(
+               "regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g')")}), ' ')) AS sorted_fp
     FROM documents
 """
 
@@ -355,7 +350,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     its join side broadcasts."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     # df derived from tf (one row per (doc, term) already), not from a
@@ -378,8 +373,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TEXT_TFIDF_ORACLE = f"""
     WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                          t -> t <> '')) AS term
+        SELECT doc_id, unnest({ws_tokens_sql('lower(text)')}) AS term
         FROM documents
     ),
     tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
@@ -481,7 +475,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf partial aggregation otherwise run on the fixture scan's single
     # split (fan_out is a no-op at real scale)
     toks = fan_out(spark, d.select("doc_id", "text")).select(
-        "doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("term")
     )
     return _allpairs_cosine(spark, sf_dir, d, toks, TFIDF_COS_T, TFIDF_PRUNE_T)
 
@@ -711,8 +705,7 @@ def _prefix_filtered_num(
 
 TFIDF_COSINE_ORACLE = f"""
     WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                          t -> t <> '')) AS term
+        SELECT doc_id, unnest({ws_tokens_sql('lower(text)')}) AS term
         FROM documents
     ),
     tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
@@ -801,7 +794,7 @@ def q_tfidf_cosine_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zipf_toks(d: DataFrame) -> DataFrame:
     """The derived Zipf-skewed (doc_id, term) stream — shared by
     q_tfidf_cosine_zipf and q_tfidf_plan_pick."""
-    n_toks = F.size(tokens_col(F.lower(F.col("text"))))
+    n_toks = F.size(ws_tokens(F.lower(F.col("text"))))
     # fan_out before the per-position explode + md5 hashing (single
     # fixture scan split otherwise serializes the synthetic tokenizer)
     d = fan_out(d.sparkSession, d.select("doc_id", "text"))
@@ -828,8 +821,7 @@ def _zipf_toks(d: DataFrame) -> DataFrame:
 # TFIDF_ZIPF_ORACLE and the plan-pick oracle
 _ZIPF_TOKS_CTES = f"""base AS (
         SELECT doc_id,
-               len(list_filter(string_split_regex(lower(text), '\\s+'),
-                               t -> t <> '')) AS n_toks
+               len({ws_tokens_sql('lower(text)')}) AS n_toks
         FROM documents
     ),
     pos AS (SELECT doc_id, unnest(range(0, n_toks)) AS pos FROM base),
@@ -895,7 +887,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
-    base = d.select("doc_id", tokens_col(F.lower(F.col("text"))).alias("w"))
+    base = d.select("doc_id", ws_tokens(F.lower(F.col("text"))).alias("w"))
     n1 = F.greatest(F.size("w") - 1, F.lit(0))
     grams = F.zip_with(
         F.slice("w", 1, n1), F.slice("w", 2, n1), lambda x, y: F.concat_ws(" ", x, y)
@@ -925,10 +917,10 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top1(uni, "t", "token").join(top1(big, "g", "bigram"), "doc_id")
 
 
-TEXT_REPETITION_ORACLE = """
+TEXT_REPETITION_ORACLE = f"""
     WITH base AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
+               {ws_tokens_sql('lower(text)')} AS w
         FROM documents
     ),
     unic AS (
@@ -1036,7 +1028,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     tf = (
-        d.select(F.explode(tokens_col(F.lower(F.col("text")))).alias("term"))
+        d.select(F.explode(ws_tokens(F.lower(F.col("text")))).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("cnt"))
     )
@@ -1060,8 +1052,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 VOCAB_COVERAGE_ORACLE = f"""
     WITH tf AS (
         SELECT term, count(*) AS cnt
-        FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                        t -> t <> '')) AS term
+        FROM (SELECT unnest({ws_tokens_sql('lower(text)')}) AS term
               FROM documents)
         GROUP BY 1
     ),
@@ -1090,7 +1081,7 @@ def _doc_segments(d: DataFrame, seg_len: int = SEG_LEN) -> DataFrame:
     stand in for lines/paragraphs), shared by corpus-level line
     dedup, cross-doc paragraph canonicalization, and the within-doc
     repetition quality signals."""
-    toks = tokens_col(F.col("text"))
+    toks = ws_tokens(F.col("text"))
     n_segs = F.ceil(F.size("tk") / seg_len).cast("int")
     return (
         d.select("doc_id", toks.alias("tk"))
@@ -1117,7 +1108,7 @@ def _segs_sql(seg_len: int = SEG_LEN) -> str:
     return f"""
     tk AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS tk
+               {ws_tokens_sql('text')} AS tk
         FROM documents
     ),
     idx AS (
@@ -1222,12 +1213,7 @@ def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     segs = _doc_segments(d)
     nseg = F.array_join(
-        F.filter(
-            F.split(
-                F.regexp_replace(F.lower(F.col("seg")), "[^a-z0-9 ]", " "), r"\s+"
-            ),
-            lambda t: t != F.lit(""),
-        ),
+        ws_tokens(F.regexp_replace(F.lower(F.col("seg")), "[^a-z0-9 ]", " ")),
         " ",
     )
     k = (F.col("doc_id") * _SEG_KEY_SHIFT + F.col("seg_idx")).cast("long")
@@ -1249,9 +1235,8 @@ DEDUP_PARAGRAPH_ORACLE = f"""
     WITH {_SEGS_SQL},
     norm AS (
         SELECT doc_id,
-               array_to_string(list_filter(string_split_regex(
-                   regexp_replace(lower(seg), '[^a-z0-9 ]', ' ', 'g'), '\\s+'),
-                   t -> t <> ''), ' ') AS nseg,
+               array_to_string({ws_tokens_sql(
+                   "regexp_replace(lower(seg), '[^a-z0-9 ]', ' ', 'g')")}, ' ') AS nseg,
                doc_id * {_SEG_KEY_SHIFT} + seg_idx AS k
         FROM segs
     ),
@@ -1363,7 +1348,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(qid, t) for qid, a, b in BM25_QUERIES for t in (a, b)],
         "query_id string, term string",
     )
-    toks = tokens_col(F.lower(F.col("text")))
+    toks = ws_tokens(F.lower(F.col("text")))
     dl = d.select("doc_id", F.size(toks).cast("long").alias("dl"))
     stats = dl.agg(
         F.sum("dl").cast("double").alias("tot_dl"),
@@ -1412,8 +1397,7 @@ def _bm25_oracle() -> str:
         WITH q(query_id, term) AS (VALUES {qvals}),
         dl AS (
             SELECT doc_id,
-                   CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-                                        t -> t <> '')) AS BIGINT) AS dl
+                   CAST(len({ws_tokens_sql('lower(text)')}) AS BIGINT) AS dl
             FROM documents
         ),
         stats AS (SELECT CAST(sum(dl) AS DOUBLE) AS tot_dl,
@@ -1421,8 +1405,7 @@ def _bm25_oracle() -> str:
         hits AS (
             SELECT doc_id, term FROM (
                 SELECT doc_id,
-                       unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                          t -> t <> '')) AS term
+                       unnest({ws_tokens_sql('lower(text)')}) AS term
                 FROM documents
             ) WHERE term IN ({qterms})
         ),
@@ -1542,7 +1525,7 @@ def _quality_sweep_oracle() -> str:
         """)
     return f"""
         WITH q AS ({QUALITY_COL_SQL}),
-        nw AS (SELECT doc_id, len({_TQ_TOKS}) AS n_words FROM documents),
+        nw AS (SELECT doc_id, len({ws_tokens_sql('text')}) AS n_words FROM documents),
         qn AS (SELECT q.quality, nw.n_words FROM q JOIN nw USING (doc_id))
         {" UNION ALL ".join(branches)}
     """
@@ -1580,7 +1563,7 @@ def q_tfidf_plan_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     fixture = d.select(
-        "doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("term")
     )
     return stat_frame("fixture", fixture).unionByName(
         stat_frame("zipf", _zipf_toks(d))
@@ -1589,8 +1572,7 @@ def q_tfidf_plan_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TFIDF_PLAN_PICK_ORACLE = f"""
     WITH ftoks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                          t -> t <> '')) AS term
+        SELECT doc_id, unnest({ws_tokens_sql('lower(text)')}) AS term
         FROM documents
     ),
     {_ZIPF_TOKS_CTES},
@@ -1643,7 +1625,7 @@ def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     One expression-only corpus pass + a source-cardinality aggregate;
     regex classes are engine-portable ([.!?]+ / [aeiouy]+)."""
     d = load_table(spark, sf_dir, "documents")
-    words = F.size(tokens_col(F.col("text")))
+    words = F.size(ws_tokens(F.col("text")))
     sentences = F.greatest(
         F.lit(1), F.size(F.regexp_extract_all("text", F.lit(r"[.!?]+"), F.lit(0)))
     )
@@ -1679,16 +1661,14 @@ def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEXT_READABILITY_ORACLE = f"""
     WITH scored AS (
         SELECT source,
-               len(list_filter(string_split_regex(text, '\\s+'), t -> t <> ''))
+               len({ws_tokens_sql('text')})
                    AS w,
                round(206.835
-                     - 1.015 * len(list_filter(string_split_regex(text, '\\s+'),
-                                               t -> t <> ''))
+                     - 1.015 * len({ws_tokens_sql('text')})
                        / GREATEST(1, len(regexp_extract_all(text, '[.!?]+')))
                      - 84.6 * len(regexp_extract_all(lower(text), '[aeiouy]+'))
                        * 1.0
-                       / NULLIF(len(list_filter(string_split_regex(text, '\\s+'),
-                                                t -> t <> '')), 0), 4) AS fre
+                       / NULLIF(len({ws_tokens_sql('text')}), 0), 4) AS fre
         FROM documents
     )
     SELECT source, count(*) AS n_docs,
@@ -1723,7 +1703,7 @@ def q_postings_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     no further shuffle."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     pl = tf.groupBy("term").agg(
@@ -1763,10 +1743,9 @@ def q_postings_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-POSTINGS_ORACLE = """
+POSTINGS_ORACLE = f"""
     WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                          t -> t <> '')) AS term
+        SELECT doc_id, unnest({ws_tokens_sql('lower(text)')}) AS term
         FROM documents
     ),
     tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
@@ -1859,7 +1838,7 @@ def gopher_verdict_frame(d: DataFrame) -> DataFrame:
     corpus.q_quality_domain_ensemble aggregates by registrable
     domain. Pure expression work over one scan (see q_quality_gopher
     for the sorted-gram duplicate-mass argument)."""
-    toks = tokens_col(F.lower(F.col("text")))
+    toks = ws_tokens(F.lower(F.col("text")))
     # fan_out: the battery is wide per-doc array expression work over
     # a one-split fixture scan (no-op at real scale)
     base = fan_out(d.sparkSession, d.select("doc_id", "source", "text")).select(
@@ -1936,7 +1915,7 @@ def gopher_verdict_frame(d: DataFrame) -> DataFrame:
 GOPHER_DOC_CTES = f"""
     base AS (
         SELECT doc_id, source,
-               list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w,
+               {ws_tokens_sql('lower(text)')} AS w,
                length(text) AS n_chars
         FROM documents
     ),
@@ -2017,7 +1996,7 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     first — mirrored verbatim in the oracle so both engines walk the
     same FP path."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.lower(F.col("text")))
+    toks = ws_tokens(F.lower(F.col("text")))
     base = d.select("doc_id", toks.alias("w"))
     n_w = F.size("w")
     pairs = F.transform(
@@ -2072,7 +2051,7 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEXT_COLLOCATIONS_ORACLE = f"""
     WITH base AS (
         SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS w
+               {ws_tokens_sql('lower(text)')} AS w
         FROM documents
     ),
     uni AS (
@@ -2117,7 +2096,7 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-level rollup; the ALL row reuses the term-level counts
     (term-keyed re-aggregation, no second corpus scan)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.lower(F.col("text")))
+    toks = ws_tokens(F.lower(F.col("text")))
     tc = (
         d.select("source", F.explode(toks).alias("t"))
         .groupBy("source", "t")
@@ -2154,12 +2133,11 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per.unionByName(allr)
 
 
-TEXT_ENTROPY_ORACLE = """
+TEXT_ENTROPY_ORACLE = f"""
     WITH tc AS (
         SELECT source, t, count(*) AS n
         FROM (SELECT source,
-                     unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-                                        t -> t <> '')) AS t
+                     unnest({ws_tokens_sql('lower(text)')}) AS t
               FROM documents)
         GROUP BY 1, 2
     ),
@@ -2209,7 +2187,7 @@ def q_text_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     so it is computed once per distinct phrase, not per occurrence);
     final top-K is TakeOrderedAndProject."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens_col(F.lower(F.col("text")))
+    toks = ws_tokens(F.lower(F.col("text")))
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     pe = d.select("doc_id", F.posexplode(toks).alias("pos", "t")).withColumn(
         "is_stop", F.array_contains(stop_arr, F.col("t"))
@@ -2263,8 +2241,7 @@ TEXT_KEYPHRASES_ORACLE = f"""
         SELECT doc_id, i, w[i] AS t,
                list_contains({list(STOPWORDS)!r}, w[i]) AS is_stop
         FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '\\s+'),
-                                 t -> t <> '') AS w
+                     {ws_tokens_sql('lower(text)')} AS w
               FROM documents),
              LATERAL (SELECT unnest(range(1, len(w) + 1)) AS i)
     ),

@@ -32,70 +32,8 @@ class QuerySpec:
     doc: str = ""
 
 
-# The round driver verifies the FIRST 50 registry entries per round.
-# Rotation policy: (a) queries whose implementation changed since
-# their last green driver row come first (a stale green row must not
-# outlive the code it verified), then (b) brand-new queries from this
-# round, then (c) the never-driver-verified backlog in registry order
-# (see DRIVER_LEDGER.md, generated by tools/driver_ledger.py — 60
-# names entering round 7). Stable green queries fall to the back; the
-# local mimic re-checks ALL queries at sf0.01 and sf0.1 every round
-# regardless of this order.
-DRIVER_FRONT: tuple[str, ...] = (
-    # (a) implementation changed in the r11 OPTIMIZATION round (a green
-    # row must not outlive the code it verified). Plan rewrites first:
-    # the tfidf family keeps its tokenization fan-out (the blocked
-    # dense-branch rewrite was tried and reverted — the branch is back
-    # at the r10 plan, but the file changed twice so the row re-earns
-    # its green); the ngram/containment core now caches one
-    # co-partitioned occurrence stream; the cluster-propagation core
-    # gained lazy graph squaring (every _min_label_components consumer
-    # re-enters); graph_label_prop got checkpoint-then-mirror;
-    # ann_recall checkpoints its brute frame.
-    "tfidf_cosine_pairs", "tfidf_cosine_zipf", "tfidf_plan_pick",
-    "dedup_ngram_pairs", "dedup_containment",
-    "dedup_clusters", "dedup_embedding_clusters",
-    "dedup_clusters_incremental", "dedup_image_clusters",
-    "dedup_report", "dedup_apply", "dedup_keep_best",
-    "dedup_apply_embedding", "dedup_image_apply",
-    "graph_label_prop", "ann_recall",
-    # scan fan-out landed in: the full-codec decode, the gopher battery
-    # (both consumers), bm25 + rrf, the cdc-chunk family, the zipf
-    # tokenizer, and the live cdc store; _vecs/_lloyd_final fan-out
-    # re-enters the whole similarity family.
-    "multimodal_decode", "quality_gopher", "quality_domain_ensemble",
-    "bm25_search", "rrf_fusion",
-    "placement_rebalance", "store_gc", "cdc_chunk_stats",
-    "stream_cdc_store_live",
-    "knn_bruteforce", "knn_lsh_bucketed", "knn_ivf", "knn_pq",
-    "knn_ivfpq", "knn_graph", "knn_graph_search", "knn_filtered",
-    "dedup_embedding_pairs_lsh", "sample_coreset",
-    "embedding_matryoshka", "kmeans_lloyd", "embedding_outliers",
-    "semdedup_prune",
-    # (b) r11 BUILD-round queries still owed a driver row: the three
-    # brand-new operators with no driver row ever, and the three whose
-    # implementation/oracle changed in the build commits after their
-    # last green (url_canonical_dedup dropped the dead ^:443 replace
-    # on both engines; multimodal_audio_fingerprint moved to exact
-    # integer bit_length; dedup_image_phash's pair core now
-    # checkpoints + unpersists its signature cache).
-    "multimodal_audio_fp_lookup", "corpus_governance_flags",
-    "mix_doremi", "url_canonical_dedup",
-    "multimodal_audio_fingerprint", "dedup_image_phash",
-    # (a, second session) minhash-family shared-subtree dedup +
-    # agreement's simhash sample pushdown: band_sweep's ranked stream
-    # is cached for its three consumers, agreement caches its bands /
-    # occurrence stream and sketches only the sampled docs,
-    # _simhash_pairs_from caches the sketch frame.
-    "minhash_band_sweep", "dedup_agreement", "dedup_simhash_pairs",
-    # (c) oldest-green rotation: the r03 cohort keeps aging out through
-    # the remaining window slots.
-    "array_hof", "asof_join",
-)
-
-
-def collect() -> dict[str, QuerySpec]:
-    """Assemble the full registry from every operator module."""
+def assemble() -> dict[str, QuerySpec]:
+    """Every query of every operator module, in module order."""
     from dfs_w_mapreduce_spark.jobs import specs as job_specs
     from dfs_w_mapreduce_spark.operators import mapreduce
     from dfs_w_mapreduce_spark.operators import admin
@@ -154,6 +92,16 @@ def collect() -> dict[str, QuerySpec]:
             n_oracled=sum(1 for s in registry.values() if s.oracle) + 1,
         )
         registry["engine_info"] = dataclasses.replace(ei, oracle=oracle)
+    return registry
+
+
+def collect() -> dict[str, QuerySpec]:
+    """The full registry, DRIVER_FRONT first: the round driver verifies
+    the first 50 entries, and tools/driver_ledger.py generates the
+    front from the driver's correctness history."""
+    from dfs_w_mapreduce_spark.driver_front import DRIVER_FRONT
+
+    registry = assemble()
     ordered: dict[str, QuerySpec] = {}
     for name in DRIVER_FRONT:
         if name not in registry:

@@ -379,7 +379,8 @@ def test_langid_heuristic_on_real_text(spark, sf_dir):
     """The fixture corpus is same-vocabulary word salad, so oracle
     parity alone can't show the heuristic discriminates; real
     sentences can."""
-    from dfs_w_mapreduce_spark.operators.text_analysis import LANG_MARKERS, tokens_col
+    from dfs_w_mapreduce_spark.functions.text import ws_tokens
+    from dfs_w_mapreduce_spark.operators.text_analysis import LANG_MARKERS
     from pyspark.sql import functions as F
 
     samples = [
@@ -390,7 +391,7 @@ def test_langid_heuristic_on_real_text(spark, sf_dir):
         ("我 在 的 家 是 好", "zh"),
     ]
     df = spark.createDataFrame(samples, "text string, expected string")
-    toks = F.array_distinct(tokens_col(F.lower(F.col("text"))))
+    toks = F.array_distinct(ws_tokens(F.lower(F.col("text"))))
     scored = df.select(
         "expected",
         *[

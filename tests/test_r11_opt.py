@@ -133,14 +133,12 @@ def test_dense_allpairs_blocked_numerator_matches_term_join(spark, sf_dir):
     bit-equal to the old per-term fan-out + scaled-long aggregation for
     every pair the old plan emitted with a positive numerator."""
     from dfs_w_mapreduce_spark.catalog import load_table
-    from dfs_w_mapreduce_spark.operators.text_analysis import (
-        TFIDF_DF_CAP_FRAC,
-        tokens_col,
-    )
+    from dfs_w_mapreduce_spark.functions.text import ws_tokens
+    from dfs_w_mapreduce_spark.operators.text_analysis import TFIDF_DF_CAP_FRAC
 
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))

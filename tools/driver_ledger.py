@@ -1,15 +1,18 @@
-"""Generate DRIVER_LEDGER.md: per-query driver-verification status.
+"""Generate DRIVER_LEDGER.md and the DRIVER_FRONT rotation module.
 
 The round driver records correctness rows for the FIRST 50 registry
-entries only, so `registry.DRIVER_FRONT` must rotate each round. This
-tool makes the rotation mechanical: it scans every CORRECTNESS_r*.json
-in the repo root, joins against the live registry, and writes a table
-of (query, last round green, oracled?) sorted so the rotation
-candidates — never-verified queries in registry order — are listed
-first. COVERAGE.md references the generated file.
+entries only, so the front of the registry must rotate each round.
+This tool scans every CORRECTNESS_r*.json in the repo root, joins
+against the live registry, and writes:
 
-Usage: python tools/driver_ledger.py   (from anywhere; writes
-DRIVER_LEDGER.md next to the registry's repo root)
+- DRIVER_LEDGER.md: (query, last round green, oracled?) per query,
+  never-verified queries first (COVERAGE.md references it);
+- dfs_w_mapreduce_spark/driver_front.py: the 50 names that
+  registry.collect() puts first — never-verified queries, then by
+  last green round (oldest first), then registry (module) order.
+
+Usage: python tools/driver_ledger.py   (from anywhere; rerun after
+each round's correctness file lands, and commit both outputs)
 """
 
 from __future__ import annotations
@@ -19,8 +22,10 @@ import json
 import os
 import re
 import sys
+import textwrap
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FRONT_SIZE = 50  # the driver verifies this many leading registry entries
 
 
 def load_rows() -> dict[str, int]:
@@ -46,9 +51,9 @@ def load_rows() -> dict[str, int]:
 
 def main() -> int:
     sys.path.insert(0, REPO)
-    from dfs_w_mapreduce_spark.registry import collect
+    from dfs_w_mapreduce_spark.registry import assemble
 
-    reg = collect()
+    reg = assemble()
     latest = load_rows()
     never = [n for n in reg if n not in latest]
     seen = [n for n in reg if n in latest]
@@ -57,10 +62,11 @@ def main() -> int:
         "",
         "Generated by `tools/driver_ledger.py` from CORRECTNESS_r*.json; do",
         "not edit by hand. `last green` = most recent round whose driver",
-        "correctness file contains an all-green row for the query. The",
-        "`never verified` block is the DRIVER_FRONT rotation queue (registry",
-        "order): changed-this-round queries go first in DRIVER_FRONT, then",
-        "this queue, then stable green queries.",
+        "correctness file contains an all-green row for the query. The same",
+        f"run writes the {FRONT_SIZE} names of",
+        "`dfs_w_mapreduce_spark/driver_front.py`: never-verified queries",
+        "first (registry order), then verified ones by last green round,",
+        "oldest first.",
         "",
         f"Registry: {len(reg)} queries; driver-verified at least once: "
         f"{len(seen)}; never verified: {len(never)}.",
@@ -91,7 +97,30 @@ def main() -> int:
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out}: {len(never)} never-verified, {len(seen)} verified")
+    write_front(list(reg), latest)
     return check_evidence_clean()
+
+
+def write_front(names: list[str], latest: dict[str, int]) -> None:
+    """names in registry order; never-verified (round 0) sort first."""
+    front = sorted(names, key=lambda n: latest.get(n, 0))[:FRONT_SIZE]
+    body = textwrap.fill(" ".join(f'"{n}",' for n in front), 76,
+                         initial_indent="    ", subsequent_indent="    ")
+    out = os.path.join(REPO, "dfs_w_mapreduce_spark", "driver_front.py")
+    with open(out, "w") as f:
+        f.write(f'''"""The names registry.collect() puts first: the round driver
+verifies the first {FRONT_SIZE} registry entries.
+
+Generated by tools/driver_ledger.py from CORRECTNESS_r*.json; do not
+edit by hand. Order: never driver-verified queries, then by last green
+driver round (oldest first), then registry order.
+"""
+
+DRIVER_FRONT: tuple[str, ...] = (
+{body}
+)
+''')
+    print(f"wrote {out}: {len(front)} names")
 
 
 def check_evidence_clean() -> int:
@@ -103,7 +132,8 @@ def check_evidence_clean() -> int:
     import subprocess
 
     evidence = ["BENCH_LOCAL.json", "SCALING.md", "SCALING_100X.md",
-                "PLANS.md", "DRIVER_LEDGER.md", "COVERAGE.md"]
+                "PLANS.md", "DRIVER_LEDGER.md", "COVERAGE.md",
+                "dfs_w_mapreduce_spark/driver_front.py"]
     try:
         dirty = subprocess.run(
             ["git", "status", "--porcelain", "--", *evidence],

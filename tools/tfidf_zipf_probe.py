@@ -82,13 +82,13 @@ def old_plan(spark, sf_dir: str):
     from dfs_w_mapreduce_spark.operators.text_analysis import (
         TFIDF_COS_T,
         TFIDF_DF_CAP_FRAC,
-        tokens_col,
     )
     from dfs_w_mapreduce_spark.catalog import load_table
+    from dfs_w_mapreduce_spark.functions.text import ws_tokens
 
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_ = toks.select("doc_id", "term").distinct().groupBy("term").agg(
@@ -177,11 +177,12 @@ def new_plan_mass(spark, sf_dir: str):
     observed-mass column."""
     from dfs_w_mapreduce_spark.operators import text_analysis as TX
     from dfs_w_mapreduce_spark.catalog import gated_broadcast, load_table
+    from dfs_w_mapreduce_spark.functions.text import ws_tokens
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(TX.tokens_col(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_ = toks.select("doc_id", "term").distinct().groupBy("term").agg(
