@@ -15,14 +15,11 @@ CRC-verified chunks, IDAT inflate, five-filter scanline
 reconstruction), and baseline JPEG decode is REAL too — a
 from-first-principles T.81 implementation (canonical Huffman tables
 rebuilt from DHT, DC-predictor + run-length AC entropy decode,
-dequantize, de-zigzag, float IDCT). Only formats whose codecs
-genuinely aren't buildable from stdlib+numpy (MP3/video) remain
-stubbed behind import-tries (``decode_image`` raises
-NotImplementedError with a clear message); the *deterministic fake*
-feature extractor below
-exercises the identical Spark plumbing — schema, batching,
-partitioning — and is oracle-checkable because its arithmetic is
-reproducible in SQL.
+dequantize, de-zigzag, float IDCT). Formats whose codecs aren't
+buildable from stdlib+numpy (MP3, video containers) are not decoded;
+the *deterministic fake* feature extractor below exercises the
+identical Spark plumbing — schema, batching, partitioning — and is
+oracle-checkable because its arithmetic is reproducible in SQL.
 
 Fixtures carry no real binary column, so payloads are synthesized as
 UTF-8 bytes of ``documents.text`` — byte-for-byte identical in both
@@ -31,6 +28,7 @@ engines (DuckDB ``encode()``).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import pandas as pd
@@ -56,27 +54,6 @@ def _decode_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss (audio_frames 0.85 -> 1.44s)."""
     d = load_table(spark, sf_dir, "documents")
     return fan_out(spark, d.select("doc_id", "n_chars"))
-
-try:  # real codecs, absent in this container — gate behind import-try
-    from PIL import Image  # type: ignore  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
-
-def decode_image(payload: bytes) -> "object":
-    """Decode an arbitrary-format image payload. Stub for formats
-    needing PIL (WebP/TIFF etc.), absent from this container; PNG,
-    baseline JPEG, and BMP have real stdlib/numpy decoders
-    (``decode_png`` / ``decode_jpeg`` / ``decode_bmp``) below."""
-    if not HAVE_PIL:
-        raise NotImplementedError(
-            "WebP/TIFF/other decode requires PIL, not present in this "
-            "environment; PNG/JPEG/BMP/WAV decode is real "
-            "(decode_png/decode_jpeg/decode_bmp/decode_wav)"
-        )
-    raise NotImplementedError("real decode path reserved for codec-enabled builds")
 
 
 # ---------------------------------------------------- real binary codecs
@@ -692,6 +669,190 @@ def _jpeg_block_v(doc_id: int, bx: int, by: int) -> int:
     return 16 + (doc_id * 31 + bx * 7 + by * 13) % 224
 
 
+# ------------------------------------------- per-document media fixtures
+#
+# Every media query derives its document's synthetic WAV, PNG or GIF
+# from (doc_id, n_chars). Each of those rules is written once per
+# engine: the Python helpers below feed the mapInPandas builders, and
+# the *_sql helpers are the DuckDB oracles' arithmetic twins. The two
+# sides share no text, so each oracle stays an independent check of its
+# query. They stay in this module: it is registered by value with
+# pyspark's cloudpickle (end of file), and a helper imported from
+# another module is not importable on workers run from outside the repo.
+
+AUDIO_FRAME = 256  # samples per analysis frame (interleaved stream)
+BANDS = ("dc", "quarter", "nyquist")  # the exact-bin filterbank, argmax order
+# integer DFT bases indexed by i % 4: DC, quarter-band cos and sin, Nyquist
+_BAND_BASES = np.array([[1, 1, 1, 1], [1, 0, -1, 0], [0, 1, 0, -1], [1, -1, 1, -1]])
+
+
+def _per_doc(schema: str):
+    """Decorator: turn `rows(doc_id, n_chars)`, which returns 0..N row
+    tuples, into the mapInPandas function over (doc_id, n_chars) Arrow
+    batches — one output frame per input batch, columns named by the
+    DDL `schema`. The result keeps the row function's name
+    (functools.wraps), which the MapInPandas plan node shows."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def wrap(rows):
+        @functools.wraps(rows)
+        def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                out = [
+                    row
+                    for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"])
+                    for row in rows(int(doc_id), int(n_chars))
+                ]
+                yield pd.DataFrame(out, columns=columns)
+
+        return build
+
+    return wrap
+
+
+def _doc_wav(doc_id: int, n_chars: int) -> bytes:
+    """The document's WAV: 8/16/24 kHz, mono or stereo, 1..1000 samples
+    per channel of the _wav_sample waveform."""
+    return build_wav(
+        8000 * (1 + doc_id % 3), 1 + doc_id % 2, n_chars % 1000 + 1, doc_id
+    )
+
+
+def _doc_pcm(doc_id: int, n_chars: int) -> np.ndarray:
+    """The document's WAV built and decoded back: interleaved int64 PCM."""
+    return np.asarray(decode_wav_samples(_doc_wav(doc_id, n_chars)), dtype=np.int64)
+
+
+def _frame_sums(x: np.ndarray, frame: int = AUDIO_FRAME) -> np.ndarray:
+    """Sums over consecutive `frame`-sample windows of x's last axis
+    (the last window may be short)."""
+    return np.add.reduceat(x, np.arange(0, x.shape[-1], frame), axis=-1)
+
+
+def _band_energies(v: np.ndarray, frame: int = AUDIO_FRAME) -> np.ndarray:
+    """Energies at the three DFT bins whose basis is integer-valued —
+    DC (cos=1), the quarter band (cos 1,0,-1,0; sin 0,1,0,-1) and
+    Nyquist (cos +-1) — per `frame`-sample window of PCM v: one row per
+    BANDS entry, one column per window. Exact integer sums of products,
+    so the SQL twin reproduces them bit for bit; int64 cannot overflow,
+    since at most 2000 samples of |s| <= 2048 keep every sum below 2^22
+    and every energy below 2^45."""
+    dc, qc, qs, ny = _frame_sums(v * _BAND_BASES[:, np.arange(len(v)) % 4], frame)
+    return np.stack([dc * dc, qc * qc + qs * qs, ny * ny])
+
+
+def _ilog2(e) -> np.ndarray:
+    """Integer log2 compression: int.bit_length of each non-negative
+    integer (0 -> 0), the oracle's length(printf('%b', e)). Never through
+    float64, whose 53-bit mantissa rounds 2^54 - 1 up to 2^54."""
+    bits = [int(x).bit_length() for x in np.ravel(e).tolist()]
+    return np.array(bits, dtype=np.int64).reshape(np.shape(e))
+
+
+def _peak_pairs(v: np.ndarray) -> Iterator[tuple[int, int, int]]:
+    """Constellation pairs of PCM v (Wang 2003). A frame's peak is its
+    dominant band (argmax-first: dc > quarter > nyquist) and the integer
+    log2 of that band's energy; each anchor frame f pairs with its
+    FP_FANOUT successors g (the target zone). Yields (f, pair_hash,
+    il_f) with pair_hash = ((dom_f*3 + dom_g)*4 + g - f)*16 + clamp(il_f
+    - il_g, -8, 7) + 8."""
+    e = _band_energies(v)
+    dom = np.argmax(e, axis=0).tolist()
+    il = _ilog2(e.max(axis=0)).tolist()
+    for f in range(len(dom)):
+        for g in range(f + 1, min(f + FP_FANOUT, len(dom) - 1) + 1):
+            dil = max(-8, min(7, il[f] - il[g]))
+            yield f, ((dom[f] * 3 + dom[g]) * 4 + g - f) * 16 + dil + 8, il[f]
+
+
+def _png_dims(doc_id: int, n_chars: int) -> tuple[int, int]:
+    """The document's PNG width and height."""
+    return doc_id % 16 + 4, n_chars % 12 + 4
+
+
+# DuckDB twins. `base` holds each document's WAV header fields and nv,
+# its interleaved sample count.
+_PCM_BASE_SQL = """base AS (
+        SELECT doc_id, rate, ch, ns * ch AS nv
+        FROM (SELECT doc_id, 8000 * (1 + doc_id % 3) AS rate,
+                     1 + doc_id % 2 AS ch, n_chars % 1000 + 1 AS ns
+              FROM documents)
+    )"""
+
+
+def _wav_sample_sql(i: str) -> str:
+    """_wav_sample of sample index expression i."""
+    return f"((doc_id * 7 + {i} * 13) % 4096 - 2048)"
+
+
+def _pcm_samples_sql(p: str = "", start_frame: int = 0, doc_filter: str = "") -> str:
+    """`{p}samp`: one row (doc_id, i, s, f) per decoded sample of
+    `base`, dropping the first start_frame frames (a probe snippet) and
+    numbering frames from there. i stays the index into the full
+    stream; AUDIO_FRAME is a multiple of 4, so i % 4 is the snippet's
+    basis phase too."""
+    return f"""{p}samp AS (
+        SELECT doc_id, i, {_wav_sample_sql('i')} AS s,
+               i // {AUDIO_FRAME} - {start_frame} AS f
+        FROM base, LATERAL (SELECT unnest(range({start_frame * AUDIO_FRAME}, nv))
+                            AS i) g{p}
+        {doc_filter}
+    )"""
+
+
+def _bands_sql(p: str = "", by: str = "doc_id, f") -> str:
+    """`{p}fr`: the DC sum dc and the band energies e_dc, e_q, e_ny of
+    `{p}samp` per (doc, frame), or per document with by='doc_id'."""
+    return f"""{p}fr AS (
+        SELECT {by}, dc, dc * dc AS e_dc, qc * qc + qs * qs AS e_q, ny * ny AS e_ny
+        FROM (SELECT {by},
+                     CAST(sum(s) AS BIGINT) AS dc,
+                     CAST(sum(s * (CASE i % 4 WHEN 0 THEN 1 WHEN 2 THEN -1
+                                   ELSE 0 END)) AS BIGINT) AS qc,
+                     CAST(sum(s * (CASE i % 4 WHEN 1 THEN 1 WHEN 3 THEN -1
+                                   ELSE 0 END)) AS BIGINT) AS qs,
+                     CAST(sum(s * (CASE i % 2 WHEN 0 THEN 1 ELSE -1 END))
+                          AS BIGINT) AS ny
+              FROM {p}samp GROUP BY {by})
+    )"""
+
+
+# index into BANDS of the dominant band (ties dc > quarter > nyquist)
+_DOMINANT_SQL = """CASE WHEN e_dc >= e_q AND e_dc >= e_ny THEN 0
+                    WHEN e_q >= e_ny THEN 1 ELSE 2 END"""
+
+
+def _ilog2_sql(x: str) -> str:
+    """bit_length of a non-negative integer expression via binary printf."""
+    return f"CASE WHEN {x} = 0 THEN 0 ELSE length(printf('%b', {x})) END"
+
+
+def _peak_pairs_sql(p: str = "") -> str:
+    """`{p}pk` and `{p}pairs`: the _peak_pairs constellation of `{p}fr`
+    as rows (doc_id, anchor, il, pair_hash)."""
+    return f"""{p}pk AS (
+        SELECT doc_id, f, {_DOMINANT_SQL} AS dom,
+               {_ilog2_sql('greatest(e_dc, e_q, e_ny)')} AS il
+        FROM {p}fr
+    ),
+    {p}pairs AS (
+        SELECT a.doc_id, a.f AS anchor, a.il,
+               ((a.dom * 3 + b.dom) * 4 + (b.f - a.f)) * 16
+                   + least(greatest(a.il - b.il, -8), 7) + 8 AS pair_hash
+        FROM {p}pk a
+        JOIN {p}pk b ON b.doc_id = a.doc_id
+                    AND b.f - a.f BETWEEN 1 AND {FP_FANOUT}
+    )"""
+
+
+_PNG_DIMS_SQL = "doc_id % 16 + 4 AS pw, n_chars % 12 + 4 AS ph"
+
+
+def _png_rgb_sql(x: str, y: str) -> str:
+    """build_png's pixel at (x, y) as columns r, g, b."""
+    return f"(doc_id + {x}) % 256 AS r, (doc_id + {y}) % 256 AS g, ({x} + {y}) % 256 AS b"
+
+
 DECODE_SCHEMA = (
     "doc_id long, wav_sample_rate int, wav_channels int, wav_bits int, "
     "wav_block_align int, wav_data_size long, wav_file_size long, "
@@ -704,56 +865,33 @@ DECODE_SCHEMA = (
 )
 
 
-def _build_decode_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Build a valid WAV and BMP per document (params derived from
-    doc_id / n_chars), then parse the actual bytes back with the real
-    chunk-walking decoders. Any offset/endianness/alignment bug in
+@_per_doc(DECODE_SCHEMA)
+def _build_decode_media(doc_id: int, n_chars: int) -> list[tuple]:
+    """Build a valid WAV, BMP, PNG and baseline JPEG per document
+    (params derived from doc_id / n_chars), then parse the actual bytes
+    back with the real decoders. Any offset/endianness/alignment bug in
     builder OR parser changes the decoded fields and breaks the oracle
     hash match — the decode path is real, not a fake."""
-    for pdf in batches:
-        rows = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            rate = 8000 * (1 + doc_id % 3)
-            ch = 1 + doc_id % 2
-            n_samples = n_chars % 1000 + 1
-            wav_bytes = build_wav(rate, ch, n_samples, doc_id)
-            wav = decode_wav(wav_bytes)
-            pcm = decode_wav_pcm(wav_bytes)
-            width = n_chars % 64 + 1
-            height = doc_id % 48 + 1
-            bmp = decode_bmp(build_bmp(width, height))
-            pw, ph = doc_id % 16 + 4, n_chars % 12 + 4
-            png = decode_png(build_png(pw, ph, doc_id))
-            jw, jh = 8 * (doc_id % 3 + 1), 8 * (n_chars % 3 + 1)
-            jpg = decode_jpeg(build_jpeg(jw, jh, doc_id, 1 + doc_id % 4))
-            rows.append(
-                (
-                    doc_id,
-                    wav["sample_rate"], wav["n_channels"], wav["bits_per_sample"],
-                    wav["block_align"], wav["data_size"], wav["file_size"],
-                    bmp["width"], bmp["height"], bmp["bpp"], bmp["file_size"],
-                    png["width"], png["height"], png["bit_depth"],
-                    png["color_type"], png["raw_len"], png["pixel_sum"],
-                    jpg["width"], jpg["height"], jpg["pixel_sum"],
-                    jpg["px00"], jpg["px10"],
-                    pcm["n_values"], pcm["sum_abs"], pcm["max_abs"],
-                    pcm["sq_sum"],
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "wav_sample_rate", "wav_channels", "wav_bits",
-                "wav_block_align", "wav_data_size", "wav_file_size",
-                "bmp_width", "bmp_height", "bmp_bpp", "bmp_file_size",
-                "png_width", "png_height", "png_bit_depth", "png_color_type",
-                "png_raw_len", "png_pixel_sum",
-                "jpg_width", "jpg_height", "jpg_pixel_sum",
-                "jpg_px00", "jpg_px10",
-                "pcm_n", "pcm_sum_abs", "pcm_max_abs", "pcm_sq_sum",
-            ],
+    wav_bytes = _doc_wav(doc_id, n_chars)
+    wav, pcm = decode_wav(wav_bytes), decode_wav_pcm(wav_bytes)
+    bmp = decode_bmp(build_bmp(n_chars % 64 + 1, doc_id % 48 + 1))
+    png = decode_png(build_png(*_png_dims(doc_id, n_chars), doc_id))
+    jpg = decode_jpeg(
+        build_jpeg(8 * (doc_id % 3 + 1), 8 * (n_chars % 3 + 1), doc_id, 1 + doc_id % 4)
+    )
+    return [
+        (
+            doc_id,
+            wav["sample_rate"], wav["n_channels"], wav["bits_per_sample"],
+            wav["block_align"], wav["data_size"], wav["file_size"],
+            bmp["width"], bmp["height"], bmp["bpp"], bmp["file_size"],
+            png["width"], png["height"], png["bit_depth"],
+            png["color_type"], png["raw_len"], png["pixel_sum"],
+            jpg["width"], jpg["height"], jpg["pixel_sum"],
+            jpg["px00"], jpg["px10"],
+            pcm["n_values"], pcm["sum_abs"], pcm["max_abs"], pcm["sq_sum"],
         )
+    ]
 
 
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -780,85 +918,81 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MULTIMODAL_DECODE_ORACLE = """
-    WITH p AS (
-        SELECT doc_id, n_chars,
-               doc_id % 16 + 4 AS pw, n_chars % 12 + 4 AS ph
+MULTIMODAL_DECODE_ORACLE = f"""
+    WITH {_PCM_BASE_SQL},
+    {_pcm_samples_sql()},
+    p AS (
+        SELECT doc_id, {_PNG_DIMS_SQL},
+               n_chars % 64 + 1 AS bw, doc_id % 48 + 1 AS bh,
+               doc_id % 3 + 1 AS wb, n_chars % 3 + 1 AS hb, 1 + doc_id % 4 AS k
         FROM documents
     ),
     -- arithmetic twin of the PNG pixel generator: the sum of all
     -- reconstructed RGB bytes, recomputed without touching any codec
     ps AS (
-        SELECT doc_id,
-               SUM((doc_id + x) % 256 + (doc_id + y) % 256 + (x + y) % 256)
-                   AS pixel_sum
-        FROM p,
-             LATERAL (SELECT unnest(range(0, pw)) AS x) gx,
-             LATERAL (SELECT unnest(range(0, ph)) AS y) gy
+        SELECT doc_id, SUM(r + g + b) AS pixel_sum
+        FROM (SELECT doc_id, {_png_rgb_sql('x', 'y')}
+              FROM p,
+                   LATERAL (SELECT unnest(range(0, pw)) AS x) gx,
+                   LATERAL (SELECT unnest(range(0, ph)) AS y) gy)
         GROUP BY doc_id
-    )
-    , pcm AS (
-        -- arithmetic twin of the REAL decoded PCM waveform:
-        -- s(i) = (doc_id*7 + i*13) % 4096 - 2048 over the interleaved
-        -- n_samples * n_channels int16 values
+    ),
+    -- signal statistics of the REAL decoded PCM, over the closed-form
+    -- waveform
+    pcm AS (
         SELECT doc_id,
                count(*) AS pcm_n,
-               SUM(abs((doc_id * 7 + i * 13) % 4096 - 2048)) AS pcm_sum_abs,
-               MAX(abs((doc_id * 7 + i * 13) % 4096 - 2048)) AS pcm_max_abs,
-               SUM(((doc_id * 7 + i * 13) % 4096 - 2048)
-                   * ((doc_id * 7 + i * 13) % 4096 - 2048)) AS pcm_sq_sum
-        FROM (SELECT doc_id,
-                     (n_chars % 1000 + 1) * (1 + doc_id % 2) AS nv
-              FROM documents) t,
-             LATERAL (SELECT unnest(range(0, nv)) AS i) gi
+               SUM(abs(s)) AS pcm_sum_abs,
+               MAX(abs(s)) AS pcm_max_abs,
+               SUM(s * s) AS pcm_sq_sum
+        FROM samp
+        GROUP BY doc_id
+    ),
+    -- arithmetic twin of the JPEG block grid: each 8x8 block is
+    -- constant v(bx,by) plus a zero-sum AC pattern, so the block
+    -- pixel sum is 64*v
+    js AS (
+        SELECT doc_id,
+               SUM(64 * (16 + (doc_id * 31 + bx * 7 + by * 13) % 224))
+                   AS jpg_pixel_sum
+        FROM p,
+             LATERAL (SELECT unnest(range(0, wb)) AS bx) gbx,
+             LATERAL (SELECT unnest(range(0, hb)) AS by) gby
         GROUP BY doc_id
     )
-    SELECT d.doc_id,
-           CAST(8000 * (1 + d.doc_id % 3) AS INT) AS wav_sample_rate,
-           CAST(1 + d.doc_id % 2 AS INT) AS wav_channels,
+    SELECT doc_id,
+           CAST(base.rate AS INT) AS wav_sample_rate,
+           CAST(base.ch AS INT) AS wav_channels,
            CAST(16 AS INT) AS wav_bits,
-           CAST((1 + d.doc_id % 2) * 2 AS INT) AS wav_block_align,
-           CAST((d.n_chars % 1000 + 1) * (1 + d.doc_id % 2) * 2 AS BIGINT) AS wav_data_size,
-           CAST(44 + (d.n_chars % 1000 + 1) * (1 + d.doc_id % 2) * 2 AS BIGINT) AS wav_file_size,
-           CAST(d.n_chars % 64 + 1 AS INT) AS bmp_width,
-           CAST(d.doc_id % 48 + 1 AS INT) AS bmp_height,
+           CAST(base.ch * 2 AS INT) AS wav_block_align,
+           CAST(base.nv * 2 AS BIGINT) AS wav_data_size,
+           CAST(44 + base.nv * 2 AS BIGINT) AS wav_file_size,
+           CAST(p.bw AS INT) AS bmp_width,
+           CAST(p.bh AS INT) AS bmp_height,
            CAST(24 AS INT) AS bmp_bpp,
-           CAST(54 + (((d.n_chars % 64 + 1) * 3 + 3) // 4) * 4 * (d.doc_id % 48 + 1)
-                AS BIGINT) AS bmp_file_size,
+           CAST(54 + ((p.bw * 3 + 3) // 4) * 4 * p.bh AS BIGINT) AS bmp_file_size,
            CAST(p.pw AS INT) AS png_width,
            CAST(p.ph AS INT) AS png_height,
            CAST(8 AS INT) AS png_bit_depth,
            CAST(2 AS INT) AS png_color_type,
            CAST(p.ph * (1 + 3 * p.pw) AS BIGINT) AS png_raw_len,
            CAST(ps.pixel_sum AS BIGINT) AS png_pixel_sum,
-           CAST(8 * (d.doc_id % 3 + 1) AS INT) AS jpg_width,
-           CAST(8 * (d.n_chars % 3 + 1) AS INT) AS jpg_height,
+           CAST(8 * p.wb AS INT) AS jpg_width,
+           CAST(8 * p.hb AS INT) AS jpg_height,
            CAST(js.jpg_pixel_sum AS BIGINT) AS jpg_pixel_sum,
            -- probe pixels pin the AC coefficient k and its sign pattern:
            -- px(0,0) = v(0,0) + k, px(1,0) = v(0,0) - k
-           CAST(16 + (d.doc_id * 31) % 224 + 1 + d.doc_id % 4 AS INT) AS jpg_px00,
-           CAST(16 + (d.doc_id * 31) % 224 - (1 + d.doc_id % 4) AS INT) AS jpg_px10,
+           CAST(16 + (doc_id * 31) % 224 + p.k AS INT) AS jpg_px00,
+           CAST(16 + (doc_id * 31) % 224 - p.k AS INT) AS jpg_px10,
            CAST(pcm.pcm_n AS BIGINT) AS pcm_n,
            CAST(pcm.pcm_sum_abs AS BIGINT) AS pcm_sum_abs,
            CAST(pcm.pcm_max_abs AS INT) AS pcm_max_abs,
            CAST(pcm.pcm_sq_sum AS BIGINT) AS pcm_sq_sum
-    FROM documents d
+    FROM base
     JOIN p USING (doc_id)
     JOIN ps USING (doc_id)
     JOIN pcm USING (doc_id)
-    JOIN (
-        -- arithmetic twin of the JPEG block grid: each 8x8 block is
-        -- constant v(bx,by) plus a zero-sum AC pattern, so the block
-        -- pixel sum is 64*v
-        SELECT doc_id,
-               SUM(64 * (16 + (doc_id * 31 + bx * 7 + by * 13) % 224))
-                   AS jpg_pixel_sum
-        FROM (SELECT doc_id, doc_id % 3 + 1 AS wb, n_chars % 3 + 1 AS hb
-              FROM documents),
-             LATERAL (SELECT unnest(range(0, wb)) AS bx) gbx,
-             LATERAL (SELECT unnest(range(0, hb)) AS by) gby
-        GROUP BY doc_id
-    ) js USING (doc_id)
+    JOIN js USING (doc_id)
 """
 
 
@@ -870,27 +1004,19 @@ RESIZE_SCHEMA = (
 )
 
 
-def _build_resize_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    rows = []
-    for pdf in batches:
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            pw, ph = doc_id % 16 + 4, n_chars % 12 + 4
-            thumb = resize_nn(build_png(pw, ph, doc_id), THUMB_W, THUMB_H)
-            o = ((THUMB_H - 1) * THUMB_W + (THUMB_W - 1)) * 3
-            rows.append(
-                (
-                    doc_id, pw, ph, THUMB_W, THUMB_H, sum(thumb),
-                    thumb[o], thumb[o + 1], thumb[o + 2],
-                )
-            )
-    yield pd.DataFrame(
-        rows,
-        columns=[
-            "doc_id", "src_w", "src_h", "thumb_w", "thumb_h",
-            "thumb_sum", "probe_r33", "probe_g33", "probe_b33",
-        ],
-    )
+@_per_doc(RESIZE_SCHEMA)
+def _build_resize_media(doc_id: int, n_chars: int) -> list[tuple]:
+    """Decode the document's PNG and nearest-neighbor resize it to
+    THUMB_W x THUMB_H: thumb byte sum plus the bottom-right pixel."""
+    pw, ph = _png_dims(doc_id, n_chars)
+    thumb = resize_nn(build_png(pw, ph, doc_id), THUMB_W, THUMB_H)
+    o = ((THUMB_H - 1) * THUMB_W + (THUMB_W - 1)) * 3
+    return [
+        (
+            doc_id, pw, ph, THUMB_W, THUMB_H, sum(thumb),
+            thumb[o], thumb[o + 1], thumb[o + 2],
+        )
+    ]
 
 
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -915,32 +1041,28 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MULTIMODAL_RESIZE_ORACLE = f"""
-    WITH p AS (
-        SELECT doc_id, doc_id % 16 + 4 AS pw, n_chars % 12 + 4 AS ph
-        FROM documents
-    ),
+    WITH p AS (SELECT doc_id, {_PNG_DIMS_SQL} FROM documents),
     thumb AS (
-        SELECT doc_id,
-               SUM((doc_id + (j * pw) // {THUMB_W}) % 256
-                   + (doc_id + (i * ph) // {THUMB_H}) % 256
-                   + ((j * pw) // {THUMB_W} + (i * ph) // {THUMB_H}) % 256)
-                   AS thumb_sum
+        SELECT doc_id, pw, ph, i, j,
+               {_png_rgb_sql(f'(j * pw) // {THUMB_W}', f'(i * ph) // {THUMB_H}')}
         FROM p,
              LATERAL (SELECT unnest(range(0, {THUMB_H})) AS i) gi,
              LATERAL (SELECT unnest(range(0, {THUMB_W})) AS j) gj
-        GROUP BY doc_id
     )
-    SELECT p.doc_id,
-           CAST(p.pw AS INT) AS src_w,
-           CAST(p.ph AS INT) AS src_h,
+    SELECT doc_id,
+           CAST(pw AS INT) AS src_w,
+           CAST(ph AS INT) AS src_h,
            CAST({THUMB_W} AS INT) AS thumb_w,
            CAST({THUMB_H} AS INT) AS thumb_h,
-           CAST(t.thumb_sum AS BIGINT) AS thumb_sum,
-           CAST((p.doc_id + ({THUMB_W - 1} * p.pw) // {THUMB_W}) % 256 AS INT) AS probe_r33,
-           CAST((p.doc_id + ({THUMB_H - 1} * p.ph) // {THUMB_H}) % 256 AS INT) AS probe_g33,
-           CAST((({THUMB_W - 1} * p.pw) // {THUMB_W}
-                 + ({THUMB_H - 1} * p.ph) // {THUMB_H}) % 256 AS INT) AS probe_b33
-    FROM p JOIN thumb t USING (doc_id)
+           CAST(SUM(r + g + b) AS BIGINT) AS thumb_sum,
+           CAST(max(r) FILTER (WHERE i = {THUMB_H - 1} AND j = {THUMB_W - 1})
+                AS INT) AS probe_r33,
+           CAST(max(g) FILTER (WHERE i = {THUMB_H - 1} AND j = {THUMB_W - 1})
+                AS INT) AS probe_g33,
+           CAST(max(b) FILTER (WHERE i = {THUMB_H - 1} AND j = {THUMB_W - 1})
+                AS INT) AS probe_b33
+    FROM thumb
+    GROUP BY doc_id, pw, ph
 """
 
 
@@ -1053,53 +1175,30 @@ MULTIMODAL_FRAMES_ORACLE = f"""
 """
 
 
-AUDIO_FRAME = 256  # samples per analysis frame (interleaved stream)
-
 AUDIO_FRAMES_SCHEMA = (
     "doc_id long, n_frames int, total_zcr long, "
     "max_frame_sq long, max_frame_idx int"
 )
 
 
-def _build_audio_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_per_doc(AUDIO_FRAMES_SCHEMA)
+def _build_audio_frames(doc_id: int, n_chars: int) -> list[tuple]:
     """Frame-level audio feature extraction on REAL decoded PCM: build
-    each document's WAV (same params as the decode battery), chunk-walk
-    and unpack the actual bytes back (decode_wav_samples), then compute
-    per-frame energy and zero-crossing counts vectorized in numpy —
-    the VAD/segmentation features a speech-data pipeline computes per
-    audio frame, done on decoded samples, not a stand-in."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            rate = 8000 * (1 + doc_id % 3)
-            ch = 1 + doc_id % 2
-            n_samples = n_chars % 1000 + 1
-            vals = decode_wav_samples(build_wav(rate, ch, n_samples, doc_id))
-            v = np.asarray(vals, dtype=np.int64)
-            offs = np.arange(0, len(v), AUDIO_FRAME)
-            fsq = np.add.reduceat(v * v, offs)
-            # zero crossings between consecutive samples of the SAME
-            # frame (sign convention: s >= 0 is non-negative)
-            if len(v) > 1:
-                sgn = v >= 0
-                within = (np.arange(1, len(v)) % AUDIO_FRAME) != 0
-                total_zcr = int(((sgn[1:] != sgn[:-1]) & within).sum())
-            else:
-                total_zcr = 0
-            # np.argmax returns the FIRST max — the (energy DESC,
-            # frame ASC) tie-break the oracle mirrors
-            mi = int(np.argmax(fsq))
-            rows.append((doc_id, len(offs), total_zcr, int(fsq[mi]), mi))
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_frames", "total_zcr",
-                "max_frame_sq", "max_frame_idx",
-            ],
-        )
+    each document's WAV, chunk-walk and unpack the actual bytes back,
+    then compute per-frame energy and zero-crossing counts vectorized
+    in numpy — the VAD/segmentation features a speech-data pipeline
+    computes per audio frame, done on decoded samples, not a stand-in."""
+    v = _doc_pcm(doc_id, n_chars)
+    fsq = _frame_sums(v * v)
+    # zero crossings between consecutive samples of the SAME frame
+    # (sign convention: s >= 0 is non-negative)
+    sgn = v >= 0
+    within = (np.arange(1, len(v)) % AUDIO_FRAME) != 0
+    total_zcr = int(((sgn[1:] != sgn[:-1]) & within).sum())
+    # np.argmax returns the FIRST max — the (energy DESC, frame ASC)
+    # tie-break the oracle mirrors
+    mi = int(np.argmax(fsq))
+    return [(doc_id, len(fsq), total_zcr, int(fsq[mi]), mi)]
 
 
 def q_multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,22 +1221,13 @@ def q_multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MULTIMODAL_AUDIO_FRAMES_ORACLE = f"""
-    WITH base AS (
-        SELECT doc_id, (n_chars % 1000 + 1) * (1 + doc_id % 2) AS nv
-        FROM documents
-    ),
-    samp AS (
-        SELECT doc_id, i,
-               (doc_id * 7 + i * 13) % 4096 - 2048 AS s,
-               i // {AUDIO_FRAME} AS f
-        FROM base, LATERAL (SELECT unnest(range(0, nv)) AS i) gi
-    ),
+    WITH {_PCM_BASE_SQL},
+    {_pcm_samples_sql()},
     fr AS (
         SELECT doc_id, f,
                SUM(s * s) AS fsq,
                SUM(CASE WHEN i % {AUDIO_FRAME} > 0 AND
-                        ((s >= 0) <>
-                         (((doc_id * 7 + (i - 1) * 13) % 4096 - 2048) >= 0))
+                        ((s >= 0) <> ({_wav_sample_sql('(i - 1)')} >= 0))
                    THEN 1 ELSE 0 END) AS zcr
         FROM samp GROUP BY 1, 2
     ),
@@ -1165,43 +1255,21 @@ AUDIO_DFT_SCHEMA = (
 )
 
 
-def _build_audio_dft(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+@_per_doc(AUDIO_DFT_SCHEMA)
+def _build_audio_dft(doc_id: int, n_chars: int) -> list[tuple]:
     """Exact-bin DFT probe on REAL decoded PCM: build each document's
-    WAV, decode the actual bytes back, then evaluate the DFT at the
-    three bins whose basis is integer-valued — DC (cos=1), the
-    quarter band (cos cycles 1,0,-1,0; sin cycles 0,1,0,-1), and
-    Nyquist (cos alternates +-1) — so every energy is an EXACT integer
-    sum-of-products, reproducible bit-for-bit by the closed-form SQL
-    oracle. The standard spectral triage (DC offset? dominant
-    alternation? quarter-band tone?) without a single transcendental
-    in the verdict path."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            rate = 8000 * (1 + doc_id % 3)
-            ch = 1 + doc_id % 2
-            n_samples = n_chars % 1000 + 1
-            vals = decode_wav_samples(build_wav(rate, ch, n_samples, doc_id))
-            v = np.asarray(vals, dtype=np.int64)
-            i = np.arange(len(v))
-            dc = int(v.sum())
-            c4 = np.array([1, 0, -1, 0])[i % 4]
-            s4 = np.array([0, 1, 0, -1])[i % 4]
-            qc, qs = int((v * c4).sum()), int((v * s4).sum())
-            ny = int((v * np.array([1, -1])[i % 2]).sum())
-            e_q, e_n, e_dc = qc * qc + qs * qs, ny * ny, dc * dc
-            dominant = (
-                "dc" if e_dc >= e_q and e_dc >= e_n
-                else ("quarter" if e_q >= e_n else "nyquist")
-            )
-            rows.append((doc_id, len(v), dc, e_q, e_n, dominant))
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "nv", "dc", "e_quarter", "e_nyquist", "dominant"],
-        )
+    WAV, decode the actual bytes back, then evaluate the DFT of the
+    whole stream at the three bins whose basis is integer-valued
+    (_band_energies) — every energy an EXACT integer sum-of-products,
+    reproducible bit-for-bit by the closed-form SQL oracle. The
+    standard spectral triage (DC offset? dominant alternation?
+    quarter-band tone?) without a single transcendental in the verdict
+    path."""
+    v = _doc_pcm(doc_id, n_chars)
+    e = _band_energies(v, len(v))[:, 0]
+    return [
+        (doc_id, len(v), int(v.sum()), int(e[1]), int(e[2]), BANDS[int(np.argmax(e))])
+    ]
 
 
 def q_multimodal_audio_dft(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1215,35 +1283,16 @@ def q_multimodal_audio_dft(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MULTIMODAL_AUDIO_DFT_ORACLE = """
-    WITH base AS (
-        SELECT doc_id, (n_chars % 1000 + 1) * (1 + doc_id % 2) AS nv
-        FROM documents
-    ),
-    samp AS (
-        SELECT doc_id, nv, i,
-               (doc_id * 7 + i * 13) % 4096 - 2048 AS s
-        FROM base, LATERAL (SELECT unnest(range(0, nv)) AS i) gi
-    ),
-    sums AS (
-        SELECT doc_id, CAST(max(nv) AS INT) AS nv,
-               CAST(sum(s) AS BIGINT) AS dc,
-               CAST(sum(s * (CASE i % 4 WHEN 0 THEN 1 WHEN 2 THEN -1
-                             ELSE 0 END)) AS BIGINT) AS qc,
-               CAST(sum(s * (CASE i % 4 WHEN 1 THEN 1 WHEN 3 THEN -1
-                             ELSE 0 END)) AS BIGINT) AS qs,
-               CAST(sum(s * (CASE i % 2 WHEN 0 THEN 1 ELSE -1 END))
-                    AS BIGINT) AS ny
-        FROM samp GROUP BY doc_id
-    )
-    SELECT doc_id, nv, dc,
-           qc * qc + qs * qs AS e_quarter,
-           ny * ny AS e_nyquist,
-           CASE WHEN dc * dc >= qc * qc + qs * qs
-                     AND dc * dc >= ny * ny THEN 'dc'
-                WHEN qc * qc + qs * qs >= ny * ny THEN 'quarter'
+MULTIMODAL_AUDIO_DFT_ORACLE = f"""
+    WITH {_PCM_BASE_SQL},
+    {_pcm_samples_sql()},
+    {_bands_sql(by='doc_id')}
+    SELECT doc_id, CAST(nv AS INT) AS nv, dc,
+           e_q AS e_quarter,
+           e_ny AS e_nyquist,
+           CASE {_DOMINANT_SQL} WHEN 0 THEN 'dc' WHEN 1 THEN 'quarter'
                 ELSE 'nyquist' END AS dominant
-    FROM sums
+    FROM fr JOIN base USING (doc_id)
 """
 
 
@@ -1253,57 +1302,26 @@ AUDIO_FBANK_SCHEMA = (
 )
 
 
-def _build_audio_fbank(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-    """Filterbank / MFCC-lite features on REAL decoded PCM: frame the
-    decoded stream (AUDIO_FRAME samples), evaluate per-frame energies
-    at the three integer-basis DFT bins (the exact-bin filterbank of
-    _build_audio_dft, per frame instead of per doc), log-compress each
-    band energy to its INTEGER log2 (bit_length — exact, no libm in
-    the verdict path), then reduce per document: per-band log-energy
+@_per_doc(AUDIO_FBANK_SCHEMA)
+def _build_audio_fbank(doc_id: int, n_chars: int) -> list[tuple]:
+    """Filterbank / MFCC-lite features on REAL decoded PCM: per-frame
+    energies at the three integer-basis DFT bins (_band_energies),
+    log-compressed to their INTEGER log2 (_ilog2 — exact, no libm in
+    the verdict path), then reduced per document: per-band log-energy
     mass, the 3-point DCT cepstra over the band vector (coefficients
     +-1/-2, the MFCC step collapsed to its exact-integer skeleton),
     and the modal dominant band across frames (ties dc > quarter >
     nyquist, matching np.argmax-first)."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            rate = 8000 * (1 + doc_id % 3)
-            ch = 1 + doc_id % 2
-            n_samples = n_chars % 1000 + 1
-            vals = decode_wav_samples(build_wav(rate, ch, n_samples, doc_id))
-            v = np.asarray(vals, dtype=np.int64)
-            i = np.arange(len(v))
-            offs = np.arange(0, len(v), AUDIO_FRAME)
-            c4 = np.array([1, 0, -1, 0])[i % 4]
-            s4 = np.array([0, 1, 0, -1])[i % 4]
-            alt = np.array([1, -1])[i % 2]
-            dc_f = np.add.reduceat(v, offs)
-            qc_f = np.add.reduceat(v * c4, offs)
-            qs_f = np.add.reduceat(v * s4, offs)
-            ny_f = np.add.reduceat(v * alt, offs)
-            e = np.stack([dc_f * dc_f, qc_f * qc_f + qs_f * qs_f, ny_f * ny_f])
-            # frexp exponent == bit_length for exact-in-double ints
-            # (band energies < 2^40); zero energy -> 0
-            il = np.where(e > 0, np.frexp(e.astype(np.float64))[1], 0)
-            il_dc, il_q, il_ny = (int(x) for x in il.sum(axis=1))
-            dom_counts = np.bincount(np.argmax(e, axis=0), minlength=3)
-            dominant = ("dc", "quarter", "nyquist")[int(np.argmax(dom_counts))]
-            rows.append(
-                (
-                    doc_id, len(offs), il_dc, il_q, il_ny,
-                    il_dc - il_ny, il_dc - 2 * il_q + il_ny, dominant,
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_frames", "il_dc", "il_quarter", "il_nyquist",
-                "cep1", "cep2", "dominant",
-            ],
+    e = _band_energies(_doc_pcm(doc_id, n_chars))
+    il_dc, il_q, il_ny = (int(x) for x in _ilog2(e).sum(axis=1))
+    dom_counts = np.bincount(np.argmax(e, axis=0), minlength=3)
+    return [
+        (
+            doc_id, e.shape[1], il_dc, il_q, il_ny,
+            il_dc - il_ny, il_dc - 2 * il_q + il_ny,
+            BANDS[int(np.argmax(dom_counts))],
         )
+    ]
 
 
 def q_multimodal_audio_fbank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1322,46 +1340,16 @@ def q_multimodal_audio_fbank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MULTIMODAL_AUDIO_FBANK_ORACLE = f"""
-    WITH base AS (
-        SELECT doc_id, (n_chars % 1000 + 1) * (1 + doc_id % 2) AS nv
-        FROM documents
-    ),
-    samp AS (
-        SELECT doc_id, i,
-               (doc_id * 7 + i * 13) % 4096 - 2048 AS s,
-               i // {AUDIO_FRAME} AS f
-        FROM base, LATERAL (SELECT unnest(range(0, nv)) AS i) gi
-    ),
-    fr AS (
-        SELECT doc_id, f,
-               CAST(sum(s) AS BIGINT) AS dc,
-               CAST(sum(s * (CASE i % 4 WHEN 0 THEN 1 WHEN 2 THEN -1
-                             ELSE 0 END)) AS BIGINT) AS qc,
-               CAST(sum(s * (CASE i % 4 WHEN 1 THEN 1 WHEN 3 THEN -1
-                             ELSE 0 END)) AS BIGINT) AS qs,
-               CAST(sum(s * (CASE i % 2 WHEN 0 THEN 1 ELSE -1 END))
-                    AS BIGINT) AS ny
-        FROM samp GROUP BY 1, 2
-    ),
-    fe AS (
-        SELECT doc_id, f,
-               dc * dc AS e_dc,
-               qc * qc + qs * qs AS e_q,
-               ny * ny AS e_ny
-        FROM fr
-    ),
-    -- integer log2 compression: bit_length via binary printf (exact)
+    WITH {_PCM_BASE_SQL},
+    {_pcm_samples_sql()},
+    {_bands_sql()},
     fl AS (
         SELECT doc_id,
-               CASE WHEN e_dc = 0 THEN 0
-                    ELSE length(printf('%b', e_dc)) END AS il_dc,
-               CASE WHEN e_q = 0 THEN 0
-                    ELSE length(printf('%b', e_q)) END AS il_q,
-               CASE WHEN e_ny = 0 THEN 0
-                    ELSE length(printf('%b', e_ny)) END AS il_ny,
-               CASE WHEN e_dc >= e_q AND e_dc >= e_ny THEN 0
-                    WHEN e_q >= e_ny THEN 1 ELSE 2 END AS dom
-        FROM fe
+               {_ilog2_sql('e_dc')} AS il_dc,
+               {_ilog2_sql('e_q')} AS il_q,
+               {_ilog2_sql('e_ny')} AS il_ny,
+               {_DOMINANT_SQL} AS dom
+        FROM fr
     ),
     agg AS (
         SELECT doc_id,
@@ -1396,47 +1384,28 @@ AUDIO_VAD_SCHEMA = (
 )
 
 
-def _build_audio_vad(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+@_per_doc(AUDIO_VAD_SCHEMA)
+def _build_audio_vad(doc_id: int, n_chars: int) -> list[tuple]:
     """Energy-gate VAD segmentation on REAL decoded PCM: frame the
     stream, flag frames whose energy clears the mean-square gate
     (exact integer compare), then reduce the flag sequence to
     voiced-segment structure — segment count (rising edges), longest
     voiced run, voiced fraction. The segmentation step a speech
     pipeline runs between decode and feature extraction."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            rate = 8000 * (1 + doc_id % 3)
-            ch = 1 + doc_id % 2
-            n_samples = n_chars % 1000 + 1
-            vals = decode_wav_samples(build_wav(rate, ch, n_samples, doc_id))
-            v = np.asarray(vals, dtype=np.int64)
-            offs = np.arange(0, len(v), AUDIO_FRAME)
-            fsq = np.add.reduceat(v * v, offs)
-            flen = np.diff(np.append(offs, len(v)))
-            act = fsq >= VAD_MS * flen
-            rising = act & ~np.concatenate(([False], act[:-1]))
-            longest = run = 0
-            for a in act:
-                run = run + 1 if a else 0
-                longest = max(longest, run)
-            n_frames = len(offs)
-            rows.append(
-                (
-                    doc_id, n_frames, int(act.sum()), int(rising.sum()),
-                    longest, round(int(act.sum()) / n_frames + 5e-9, 4),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_frames", "n_active", "n_segments",
-                "longest_run", "voiced_frac",
-            ],
+    v = _doc_pcm(doc_id, n_chars)
+    act = _frame_sums(v * v) >= VAD_MS * _frame_sums(np.ones_like(v))
+    rising = act & ~np.concatenate(([False], act[:-1]))
+    longest = run = 0
+    for a in act:
+        run = run + 1 if a else 0
+        longest = max(longest, run)
+    n_active = int(act.sum())
+    return [
+        (
+            doc_id, len(act), n_active, int(rising.sum()),
+            longest, round(n_active / len(act) + 5e-9, 4),
         )
+    ]
 
 
 def q_multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1451,16 +1420,8 @@ def q_multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MULTIMODAL_AUDIO_VAD_ORACLE = f"""
-    WITH base AS (
-        SELECT doc_id, (n_chars % 1000 + 1) * (1 + doc_id % 2) AS nv
-        FROM documents
-    ),
-    samp AS (
-        SELECT doc_id, i,
-               (doc_id * 7 + i * 13) % 4096 - 2048 AS s,
-               i // {AUDIO_FRAME} AS f
-        FROM base, LATERAL (SELECT unnest(range(0, nv)) AS i) gi
-    ),
+    WITH {_PCM_BASE_SQL},
+    {_pcm_samples_sql()},
     fr AS (
         SELECT doc_id, f, CAST(sum(s * s) AS BIGINT) AS fsq,
                CAST(count(*) AS BIGINT) AS flen
@@ -1725,29 +1686,56 @@ def decode_gif(b: bytes) -> list[dict]:
     return frames
 
 
+def _doc_gif(doc_id: int, n_chars: int) -> tuple[int, int, list[dict]]:
+    """The document's animated GIF built and decoded back: (width,
+    height, decoded frames)."""
+    w, h, nf = doc_id % 5 + 4, n_chars % 4 + 3, doc_id % 3 + 2
+    return w, h, decode_gif(build_gif(w, h, nf, doc_id))
+
+
+# DuckDB twins: `p` holds each document's GIF parameters; _GIF_PIXELS_SQL
+# adds one row per frame (`fr`) and per decoded pixel index (`px`).
+_GIF_PARAMS_SQL = """p AS (
+        SELECT doc_id, doc_id % 5 + 4 AS w, n_chars % 4 + 3 AS h,
+               doc_id % 3 + 2 AS nf
+        FROM documents
+    )"""
+
+
+def _gif_pixel_sql(f: str, x: str, y: str) -> str:
+    """_gif_pixel of frame f at (x, y)."""
+    return f"(doc_id * 7 + {f} * 13 + ({x}) * 3 + ({y}) * 5) % {GIF_COLORS}"
+
+
+def _gif_luma_sql(i: str) -> str:
+    """R + G + B of global-palette entry i."""
+    return " + ".join(f"{i} * {m} % 256" for m in GIF_PAL_MULS)
+
+
+_GIF_PIXELS_SQL = f"""{_GIF_PARAMS_SQL},
+    fr AS (
+        SELECT doc_id, w, h, unnest(range(0, nf)) AS frame_idx FROM p
+    ),
+    px AS (
+        SELECT doc_id, frame_idx, w, h,
+               {_gif_pixel_sql('frame_idx', 'pp % w', 'pp // w')} AS idx
+        FROM fr, LATERAL (SELECT unnest(range(0, w * h)) AS pp) g
+    )"""
+
+
 GIF_FRAMES_SCHEMA = (
     "doc_id long, frame_idx int, w int, h int, delay_cs int, "
     "idx_sum long, rgb_sum long"
 )
 
 
-def _build_decode_gif(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            w, h = doc_id % 5 + 4, n_chars % 4 + 3
-            nf = doc_id % 3 + 2
-            for f, fr in enumerate(decode_gif(build_gif(w, h, nf, doc_id))):
-                rows.append(
-                    (doc_id, f, fr["w"], fr["h"], fr["delay_cs"],
-                     fr["idx_sum"], fr["rgb_sum"])
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "frame_idx", "w", "h", "delay_cs",
-                     "idx_sum", "rgb_sum"],
-        )
+@_per_doc(GIF_FRAMES_SCHEMA)
+def _build_decode_gif(doc_id: int, n_chars: int) -> list[tuple]:
+    _, _, frames = _doc_gif(doc_id, n_chars)
+    return [
+        (doc_id, f, fr["w"], fr["h"], fr["delay_cs"], fr["idx_sum"], fr["rgb_sum"])
+        for f, fr in enumerate(frames)
+    ]
 
 
 SCENE_CUTS_SCHEMA = (
@@ -1755,7 +1743,8 @@ SCENE_CUTS_SCHEMA = (
 )
 
 
-def _build_scene_cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_per_doc(SCENE_CUTS_SCHEMA)
+def _build_scene_cuts(doc_id: int, n_chars: int) -> list[tuple]:
     """Shot-boundary detection on REAL decoded animation frames: one
     LZW decode per GIF, per-frame 16-bin palette histograms, L1
     distance between consecutive frames, cut flagged when more than
@@ -1766,28 +1755,13 @@ def _build_scene_cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     shot detector (Zhang et al. 1993), run on actually-decoded pixels.
     One row per consecutive frame pair; every field is an exact
     integer."""
-    for pdf in batches:
-        rows = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            w, h = doc_id % 5 + 4, n_chars % 4 + 3
-            nf = doc_id % 3 + 2
-            frames = decode_gif(build_gif(w, h, nf, doc_id))
-            hists = []
-            for fr in frames:
-                hist = [0] * GIF_COLORS
-                for i in fr["idx"]:
-                    hist[i] += 1
-                hists.append(hist)
-            for f in range(1, len(hists)):
-                d = sum(
-                    abs(hists[f][c] - hists[f - 1][c]) for c in range(GIF_COLORS)
-                )
-                rows.append((doc_id, f, d, w * h, d * 4 > w * h))
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "frame_idx", "l1_dist", "n_pixels", "is_cut"],
-        )
+    w, h, frames = _doc_gif(doc_id, n_chars)
+    hists = [np.bincount(fr["idx"], minlength=GIF_COLORS) for fr in frames]
+    rows = []
+    for f in range(1, len(hists)):
+        d = int(np.abs(hists[f] - hists[f - 1]).sum())
+        rows.append((doc_id, f, d, w * h, d * 4 > w * h))
+    return rows
 
 
 def q_multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1806,20 +1780,7 @@ def q_multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MULTIMODAL_SCENE_CUTS_ORACLE = f"""
-    WITH p AS (
-        SELECT doc_id, doc_id % 5 + 4 AS w, n_chars % 4 + 3 AS h,
-               doc_id % 3 + 2 AS nf
-        FROM documents
-    ),
-    fr AS (
-        SELECT doc_id, w, h, unnest(range(0, nf)) AS frame_idx FROM p
-    ),
-    px AS (
-        SELECT doc_id, frame_idx, w, h,
-               (doc_id * 7 + frame_idx * 13 + (pp % w) * 3
-                + (pp // w) * 5) % {GIF_COLORS} AS idx
-        FROM fr, LATERAL (SELECT unnest(range(0, w * h)) AS pp) g
-    ),
+    WITH {_GIF_PIXELS_SQL},
     hist AS (
         SELECT doc_id, frame_idx, w, h, c.c AS c,
                count(*) FILTER (WHERE px.idx = c.c) AS n
@@ -1858,29 +1819,14 @@ def q_multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MULTIMODAL_GIF_ORACLE = f"""
-    WITH p AS (
-        SELECT doc_id, doc_id % 5 + 4 AS w, n_chars % 4 + 3 AS h,
-               doc_id % 3 + 2 AS nf
-        FROM documents
-    ),
-    fr AS (
-        SELECT doc_id, w, h, unnest(range(0, nf)) AS frame_idx FROM p
-    ),
-    px AS (
-        SELECT doc_id, frame_idx, w, h,
-               (doc_id * 7 + frame_idx * 13 + (pp % w) * 3
-                + (pp // w) * 5) % {GIF_COLORS} AS idx
-        FROM fr, LATERAL (SELECT unnest(range(0, w * h)) AS pp) g
-    )
+    WITH {_GIF_PIXELS_SQL}
     SELECT doc_id,
            CAST(frame_idx AS INT) AS frame_idx,
            CAST(w AS INT) AS w,
            CAST(h AS INT) AS h,
            CAST((doc_id + frame_idx) % 10 + 2 AS INT) AS delay_cs,
            CAST(sum(idx) AS BIGINT) AS idx_sum,
-           CAST(sum(idx * {GIF_PAL_MULS[0]} % 256
-                    + idx * {GIF_PAL_MULS[1]} % 256
-                    + idx * {GIF_PAL_MULS[2]} % 256) AS BIGINT) AS rgb_sum
+           CAST(sum({_gif_luma_sql('idx')}) AS BIGINT) AS rgb_sum
     FROM px
     GROUP BY doc_id, frame_idx, w, h
 """
@@ -1895,74 +1841,22 @@ FP_FANOUT = 3  # target zone: pair each anchor frame with the next 1..3
 AUDIO_FP_SCHEMA = "doc_id long, fp_hash int, n long, first_anchor int"
 
 
-def _build_audio_fingerprint(
-    batches: "Iterator[pd.DataFrame]",
-) -> "Iterator[pd.DataFrame]":
-    """Per document: decode the real WAV, frame the PCM (AUDIO_FRAME
-    samples), evaluate the three integer-basis band energies per frame
-    (the exact-bin filterbank of _build_audio_fbank), then fingerprint:
-
-    - peak-pick per frame: the dominant band (ties dc > quarter >
-      nyquist — np.argmax-first, the battery's standard tie-break)
-      plus its integer-log2 energy (bit_length — exact, no libm);
-    - pair each anchor frame with its FP_FANOUT successors (the
-      'target zone') and hash (dom_a, dom_b, dt, clamped il_a - il_b)
-      into one small integer;
-    - reduce per document to the fingerprint set: one row per distinct
-      hash with its occurrence count and first anchor frame.
+@_per_doc(AUDIO_FP_SCHEMA)
+def _build_audio_fingerprint(doc_id: int, n_chars: int) -> list[tuple]:
+    """Per document: decode the real WAV, take its constellation pairs
+    (_peak_pairs: per-frame dominant band + integer-log2 energy, each
+    anchor paired with its FP_FANOUT successors and hashed into one
+    small integer), then reduce to the fingerprint set: one row per
+    distinct hash with its occurrence count and first anchor frame.
 
     Every quantity is an exact integer, so the closed-form SQL oracle
     reproduces builder -> decoder -> framer -> peak -> hash
     bit-for-bit."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            rate = 8000 * (1 + doc_id % 3)
-            ch = 1 + doc_id % 2
-            n_samples = n_chars % 1000 + 1
-            vals = decode_wav_samples(build_wav(rate, ch, n_samples, doc_id))
-            v = np.asarray(vals, dtype=np.int64)
-            i = np.arange(len(v))
-            offs = np.arange(0, len(v), AUDIO_FRAME)
-            c4 = np.array([1, 0, -1, 0])[i % 4]
-            s4 = np.array([0, 1, 0, -1])[i % 4]
-            alt = np.array([1, -1])[i % 2]
-            dc_f = np.add.reduceat(v, offs)
-            qc_f = np.add.reduceat(v * c4, offs)
-            qs_f = np.add.reduceat(v * s4, offs)
-            ny_f = np.add.reduceat(v * alt, offs)
-            e = np.stack([dc_f * dc_f, qc_f * qc_f + qs_f * qs_f, ny_f * ny_f])
-            dom = np.argmax(e, axis=0)  # first max = dc>quarter>nyquist
-            peak_e = e[dom, np.arange(e.shape[1])]
-            # exact integer bit length (== the oracle's printf('%b')
-            # length), never through float64: np.frexp agreed only
-            # because energies stay < 2^53 — int.bit_length has no
-            # such cliff if frame size or sample range ever grows
-            il = np.fromiter(
-                (int(x).bit_length() for x in peak_e.tolist()),
-                dtype=np.int64,
-                count=len(peak_e),
-            )
-            fps: dict[int, tuple[int, int]] = {}
-            nf = len(offs)
-            for f in range(nf):
-                for dt in range(1, FP_FANOUT + 1):
-                    if f + dt >= nf:
-                        break
-                    dil = max(-8, min(7, int(il[f]) - int(il[f + dt])))
-                    hsh = (
-                        (int(dom[f]) * 3 + int(dom[f + dt])) * 4 + dt
-                    ) * 16 + dil + 8
-                    n, first = fps.get(hsh, (0, f))
-                    fps[hsh] = (n + 1, first)
-            for hsh, (n, first) in fps.items():
-                rows.append((doc_id, hsh, n, first))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "fp_hash", "n", "first_anchor"]
-        )
+    fps: dict[int, tuple[int, int]] = {}
+    for f, hsh, _ in _peak_pairs(_doc_pcm(doc_id, n_chars)):
+        n, first = fps.get(hsh, (0, f))
+        fps[hsh] = (n + 1, first)
+    return [(doc_id, hsh, n, first) for hsh, (n, first) in fps.items()]
 
 
 def q_multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1980,55 +1874,15 @@ def q_multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 MULTIMODAL_AUDIO_FP_ORACLE = f"""
-    WITH base AS (
-        SELECT doc_id, (n_chars % 1000 + 1) * (1 + doc_id % 2) AS nv
-        FROM documents
-    ),
-    samp AS (
-        SELECT doc_id, i,
-               (doc_id * 7 + i * 13) % 4096 - 2048 AS s,
-               i // {AUDIO_FRAME} AS f
-        FROM base, LATERAL (SELECT unnest(range(0, nv)) AS i) gi
-    ),
-    fr AS (
-        SELECT doc_id, f,
-               CAST(sum(s) AS BIGINT) AS dc,
-               CAST(sum(s * (CASE i % 4 WHEN 0 THEN 1 WHEN 2 THEN -1
-                             ELSE 0 END)) AS BIGINT) AS qc,
-               CAST(sum(s * (CASE i % 4 WHEN 1 THEN 1 WHEN 3 THEN -1
-                             ELSE 0 END)) AS BIGINT) AS qs,
-               CAST(sum(s * (CASE i % 2 WHEN 0 THEN 1 ELSE -1 END))
-                    AS BIGINT) AS ny
-        FROM samp GROUP BY 1, 2
-    ),
-    pk AS (
-        SELECT doc_id, f,
-               CASE WHEN dc * dc >= qc * qc + qs * qs
-                         AND dc * dc >= ny * ny THEN 0
-                    WHEN qc * qc + qs * qs >= ny * ny THEN 1
-                    ELSE 2 END AS dom,
-               CASE WHEN greatest(dc * dc, qc * qc + qs * qs, ny * ny) = 0
-                    THEN 0
-                    ELSE length(printf('%b',
-                         greatest(dc * dc, qc * qc + qs * qs, ny * ny)))
-                    END AS il
-        FROM fr
-    ),
-    pairs AS (
-        SELECT a.doc_id,
-               CAST(((a.dom * 3 + b.dom) * 4 + (b.f - a.f)) * 16
-                    + least(greatest(a.il - b.il, -8), 7) + 8 AS INT)
-                   AS fp_hash,
-               a.f AS anchor
-        FROM pk a
-        JOIN pk b ON b.doc_id = a.doc_id
-                 AND b.f - a.f BETWEEN 1 AND {FP_FANOUT}
-    )
-    SELECT doc_id, fp_hash,
+    WITH {_PCM_BASE_SQL},
+    {_pcm_samples_sql()},
+    {_bands_sql()},
+    {_peak_pairs_sql()}
+    SELECT doc_id, CAST(pair_hash AS INT) AS fp_hash,
            CAST(count(*) AS BIGINT) AS n,
            CAST(min(anchor) AS INT) AS first_anchor
     FROM pairs
-    GROUP BY doc_id, fp_hash
+    GROUP BY doc_id, pair_hash
 """
 
 
@@ -2048,7 +1902,8 @@ IMG_BUCKET_CAP = 64
 PHASH_SCHEMA = "doc_id long, b0 int, b1 int, b2 int, b3 int"
 
 
-def _build_image_phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@_per_doc(PHASH_SCHEMA)
+def _build_image_phash(doc_id: int, n_chars: int) -> list[tuple]:
     """Per document: build the animated GIF, run the REAL LZW decode,
     and compute a 64-bit difference hash (dHash, Krawetz) on frame 0:
     sample a 9x8 nearest-neighbor luminance grid and emit one bit per
@@ -2057,38 +1912,16 @@ def _build_image_phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     palette bug flips hash bits and breaks the oracle match. The hash
     is returned as four 16-bit band keys (b0 = bits 0..15 from the
     LSB) — the blocking keys for the Hamming band join."""
-    pal = [
-        (i * GIF_PAL_MULS[0]) % 256
-        + (i * GIF_PAL_MULS[1]) % 256
-        + (i * GIF_PAL_MULS[2]) % 256
-        for i in range(GIF_COLORS)
-    ]
-    for pdf in batches:
-        rows = []
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            doc_id, n_chars = int(doc_id), int(n_chars)
-            w, h = doc_id % 5 + 4, n_chars % 4 + 3
-            nf = doc_id % 3 + 2
-            fr = decode_gif(build_gif(w, h, nf, doc_id))[0]
-            idx = fr["idx"]
-            bits = 0
-            for ty in range(8):
-                sy = ty * h // 8
-                for tx in range(8):
-                    sx0, sx1 = tx * w // 9, (tx + 1) * w // 9
-                    bits = (bits << 1) | (
-                        1 if pal[idx[sy * w + sx1]] > pal[idx[sy * w + sx0]] else 0
-                    )
-            rows.append(
-                (
-                    doc_id,
-                    bits & 0xFFFF,
-                    (bits >> 16) & 0xFFFF,
-                    (bits >> 32) & 0xFFFF,
-                    (bits >> 48) & 0xFFFF,
-                )
-            )
-        yield pd.DataFrame(rows, columns=["doc_id", "b0", "b1", "b2", "b3"])
+    w, h, frames = _doc_gif(doc_id, n_chars)
+    idx = frames[0]["idx"]
+    luma = [sum(i * m % 256 for m in GIF_PAL_MULS) for i in range(GIF_COLORS)]
+    bits = 0
+    for ty in range(8):
+        row = ty * h // 8 * w
+        for tx in range(8):
+            left, right = idx[row + tx * w // 9], idx[row + (tx + 1) * w // 9]
+            bits = (bits << 1) | (luma[right] > luma[left])
+    return [(doc_id, *((bits >> s) & 0xFFFF for s in (0, 16, 32, 48)))]
 
 
 def _image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2234,49 +2067,30 @@ def q_dedup_image_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The CTE chain ends at img_pairs (the verified pair set) so the
 # rollup AND clusters oracles share it verbatim.
 _IMAGE_PHASH_CTES = f"""
-    p AS (
-        SELECT doc_id, doc_id % 5 + 4 AS w, n_chars % 4 + 3 AS h
-        FROM documents
-    ),
+    {_GIF_PARAMS_SQL},
     samp AS (
         SELECT doc_id,
                (63 - (ty * 8 + tx)) // 16 AS band_idx,
                (63 - (ty * 8 + tx)) % 16 AS bpos,
-               (doc_id * 7 + (tx * w // 9) * 3 + (ty * h // 8) * 5)
-                   % {GIF_COLORS} AS i0,
-               (doc_id * 7 + ((tx + 1) * w // 9) * 3 + (ty * h // 8) * 5)
-                   % {GIF_COLORS} AS i1
+               {_gif_pixel_sql('0', 'tx * w // 9', 'ty * h // 8')} AS i0,
+               {_gif_pixel_sql('0', '(tx + 1) * w // 9', 'ty * h // 8')} AS i1
         FROM p,
              LATERAL (SELECT unnest(range(0, 8)) AS ty) gty,
              LATERAL (SELECT unnest(range(0, 8)) AS tx) gtx
     ),
+    bits AS (
+        SELECT doc_id, band_idx,
+               CASE WHEN {_gif_luma_sql('i1')} > {_gif_luma_sql('i0')}
+                    THEN 1 << bpos ELSE 0 END AS bit
+        FROM samp
+    ),
     ph AS (
         SELECT doc_id,
-               CAST(SUM(CASE WHEN band_idx = 0 AND
-                    i1 * {GIF_PAL_MULS[0]} % 256 + i1 * {GIF_PAL_MULS[1]} % 256
-                    + i1 * {GIF_PAL_MULS[2]} % 256
-                    > i0 * {GIF_PAL_MULS[0]} % 256 + i0 * {GIF_PAL_MULS[1]} % 256
-                    + i0 * {GIF_PAL_MULS[2]} % 256
-                    THEN 1 << bpos ELSE 0 END) AS INT) AS b0,
-               CAST(SUM(CASE WHEN band_idx = 1 AND
-                    i1 * {GIF_PAL_MULS[0]} % 256 + i1 * {GIF_PAL_MULS[1]} % 256
-                    + i1 * {GIF_PAL_MULS[2]} % 256
-                    > i0 * {GIF_PAL_MULS[0]} % 256 + i0 * {GIF_PAL_MULS[1]} % 256
-                    + i0 * {GIF_PAL_MULS[2]} % 256
-                    THEN 1 << bpos ELSE 0 END) AS INT) AS b1,
-               CAST(SUM(CASE WHEN band_idx = 2 AND
-                    i1 * {GIF_PAL_MULS[0]} % 256 + i1 * {GIF_PAL_MULS[1]} % 256
-                    + i1 * {GIF_PAL_MULS[2]} % 256
-                    > i0 * {GIF_PAL_MULS[0]} % 256 + i0 * {GIF_PAL_MULS[1]} % 256
-                    + i0 * {GIF_PAL_MULS[2]} % 256
-                    THEN 1 << bpos ELSE 0 END) AS INT) AS b2,
-               CAST(SUM(CASE WHEN band_idx = 3 AND
-                    i1 * {GIF_PAL_MULS[0]} % 256 + i1 * {GIF_PAL_MULS[1]} % 256
-                    + i1 * {GIF_PAL_MULS[2]} % 256
-                    > i0 * {GIF_PAL_MULS[0]} % 256 + i0 * {GIF_PAL_MULS[1]} % 256
-                    + i0 * {GIF_PAL_MULS[2]} % 256
-                    THEN 1 << bpos ELSE 0 END) AS INT) AS b3
-        FROM samp
+               CAST(SUM(bit) FILTER (WHERE band_idx = 0) AS INT) AS b0,
+               CAST(SUM(bit) FILTER (WHERE band_idx = 1) AS INT) AS b1,
+               CAST(SUM(bit) FILTER (WHERE band_idx = 2) AS INT) AS b2,
+               CAST(SUM(bit) FILTER (WHERE band_idx = 3) AS INT) AS b3
+        FROM bits
         GROUP BY doc_id
     ),
     bands AS (
@@ -2376,10 +2190,10 @@ def _image_apply_oracle() -> str:
     WITH RECURSIVE {_IMAGE_PHASH_CTES},
     {labels}
     SELECT doc_id,
-           CAST(doc_id % 5 + 4 AS INT) AS w,
-           CAST(n_chars % 4 + 3 AS INT) AS h,
-           CAST(doc_id % 3 + 2 AS INT) AS n_frames
-    FROM documents
+           CAST(w AS INT) AS w,
+           CAST(h AS INT) AS h,
+           CAST(nf AS INT) AS n_frames
+    FROM p
     WHERE doc_id NOT IN (SELECT doc_id FROM labels WHERE doc_id <> cluster_id)
 """
 
@@ -2421,46 +2235,10 @@ def _audio_fp_events_builder(skip_frames: int):
     the integer-basis phase and snippet peaks equal the original
     frames' peaks shifted by skip_frames."""
 
-    def build(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                rate = 8000 * (1 + doc_id % 3)
-                ch = 1 + doc_id % 2
-                n_samples = n_chars % 1000 + 1
-                vals = decode_wav_samples(build_wav(rate, ch, n_samples, doc_id))
-                v = np.asarray(vals, dtype=np.int64)[skip_frames * AUDIO_FRAME :]
-                if len(v) == 0:
-                    continue
-                i = np.arange(len(v))
-                offs = np.arange(0, len(v), AUDIO_FRAME)
-                c4 = np.array([1, 0, -1, 0])[i % 4]
-                s4 = np.array([0, 1, 0, -1])[i % 4]
-                alt = np.array([1, -1])[i % 2]
-                dc_f = np.add.reduceat(v, offs)
-                qc_f = np.add.reduceat(v * c4, offs)
-                qs_f = np.add.reduceat(v * s4, offs)
-                ny_f = np.add.reduceat(v * alt, offs)
-                e = np.stack(
-                    [dc_f * dc_f, qc_f * qc_f + qs_f * qs_f, ny_f * ny_f]
-                )
-                dom = np.argmax(e, axis=0)
-                peak_e = e[dom, np.arange(e.shape[1])]
-                il = [int(x).bit_length() for x in peak_e.tolist()]
-                nf = len(offs)
-                for f in range(nf):
-                    for dt in range(1, FP_FANOUT + 1):
-                        if f + dt >= nf:
-                            break
-                        dil = max(-8, min(7, il[f] - il[f + dt]))
-                        base = (
-                            (int(dom[f]) * 3 + int(dom[f + dt])) * 4 + dt
-                        ) * 16 + dil + 8
-                        rows.append((doc_id, base * 64 + min(il[f], 63), f))
-            yield pd.DataFrame(rows, columns=["doc_id", "fp_hash", "anchor"])
+    @_per_doc(AUDIO_FP_EVENT_SCHEMA)
+    def build(doc_id: int, n_chars: int) -> list[tuple]:
+        v = _doc_pcm(doc_id, n_chars)[skip_frames * AUDIO_FRAME :]
+        return [(doc_id, hsh * 64 + min(il, 63), f) for f, hsh, il in _peak_pairs(v)]
 
     return build
 
@@ -2546,65 +2324,25 @@ def q_multimodal_audio_fp_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _audio_pk_event_sql(p: str, start_frame: int, doc_filter: str) -> str:
-    """CTE chain computing the per-frame peak table and fingerprint
-    EVENTS for the closed-form audio, frames re-anchored to
-    start_frame (the snippet slice). Shared by the lookup oracle's
-    index (start 0) and probe (start FP_SNIP_START) sides."""
-    return f"""
-    {p}samp AS (
-        SELECT doc_id, i,
-               (doc_id * 7 + i * 13) % 4096 - 2048 AS s,
-               i // {AUDIO_FRAME} - {start_frame} AS f
-        FROM base, LATERAL (SELECT unnest(range({start_frame * AUDIO_FRAME}, nv))
-                            AS i) g{p}
-        {doc_filter}
-    ),
-    {p}fr AS (
-        SELECT doc_id, f,
-               CAST(sum(s) AS BIGINT) AS dc,
-               CAST(sum(s * (CASE i % 4 WHEN 0 THEN 1 WHEN 2 THEN -1
-                             ELSE 0 END)) AS BIGINT) AS qc,
-               CAST(sum(s * (CASE i % 4 WHEN 1 THEN 1 WHEN 3 THEN -1
-                             ELSE 0 END)) AS BIGINT) AS qs,
-               CAST(sum(s * (CASE i % 2 WHEN 0 THEN 1 ELSE -1 END))
-                    AS BIGINT) AS ny
-        FROM {p}samp GROUP BY 1, 2
-    ),
-    {p}pk AS (
-        SELECT doc_id, f,
-               CASE WHEN dc * dc >= qc * qc + qs * qs
-                         AND dc * dc >= ny * ny THEN 0
-                    WHEN qc * qc + qs * qs >= ny * ny THEN 1
-                    ELSE 2 END AS dom,
-               CASE WHEN greatest(dc * dc, qc * qc + qs * qs, ny * ny) = 0
-                    THEN 0
-                    ELSE length(printf('%b',
-                         greatest(dc * dc, qc * qc + qs * qs, ny * ny)))
-                    END AS il
-        FROM {p}fr
-    ),
+def _fp_events_sql(p: str, start_frame: int, doc_filter: str = "") -> str:
+    """`{p}ev`: fingerprint EVENTS (doc_id, fp_hash, anchor) of the
+    closed-form audio from frame start_frame on (the snippet slice).
+    Shared by the lookup oracle's index (start 0) and probe (start
+    FP_SNIP_START) sides."""
+    return f"""{_pcm_samples_sql(p, start_frame, doc_filter)},
+    {_bands_sql(p)},
+    {_peak_pairs_sql(p)},
     {p}ev AS (
-        SELECT a.doc_id,
-               CAST((((a.dom * 3 + b.dom) * 4 + (b.f - a.f)) * 16
-                     + least(greatest(a.il - b.il, -8), 7) + 8) * 64
-                    + least(a.il, 63) AS INT) AS fp_hash,
-               a.f AS anchor
-        FROM {p}pk a
-        JOIN {p}pk b ON b.doc_id = a.doc_id
-                    AND b.f - a.f BETWEEN 1 AND {FP_FANOUT}
+        SELECT doc_id, CAST(pair_hash * 64 + least(il, 63) AS INT) AS fp_hash, anchor
+        FROM {p}pairs
     )"""
 
 
 AUDIO_FP_LOOKUP_ORACLE = f"""
-    WITH base AS (
-        SELECT doc_id, (n_chars % 1000 + 1) * (1 + doc_id % 2) AS nv
-        FROM documents
-    ),
-    {_audio_pk_event_sql('i', 0, '')},
-    {_audio_pk_event_sql(
-        'p', FP_SNIP_START,
-        f'WHERE doc_id % {FP_PROBE_MOD} = {FP_PROBE_RES}')},
+    WITH {_PCM_BASE_SQL},
+    {_fp_events_sql('i', 0)},
+    {_fp_events_sql(
+        'p', FP_SNIP_START, f'WHERE doc_id % {FP_PROBE_MOD} = {FP_PROBE_RES}')},
     icap AS (
         SELECT doc_id, fp_hash, anchor FROM (
             SELECT *, dense_rank() OVER (

@@ -229,11 +229,6 @@ def test_simhash_near_dups_have_close_hashes(spark, sf_dir):
     assert close / len(pairs) >= 0.6, f"{close}/{len(pairs)} pairs within Hamming 10"
 
 
-def test_decode_image_stub_raises_cleanly():
-    with pytest.raises(NotImplementedError, match="PIL"):
-        M.decode_image(b"\x89PNG")
-
-
 def test_wav_roundtrip_and_malformed():
     got = M.decode_wav(M.build_wav(44100, 2, 321))
     assert got == {

@@ -202,11 +202,15 @@ def test_audio_fbank_matches_python_replica(spark, sf_dir):
 
 
 def test_frexp_exponent_is_bit_length():
-    """The numpy shortcut the UDF uses must equal int.bit_length for
-    every representable band energy (ints exact in float64)."""
+    """The integer log2 the UDFs use (multimodal._ilog2) must equal
+    int.bit_length for band energies — and agrees with the float64
+    frexp exponent while the ints are exact in float64."""
+    from dfs_w_mapreduce_spark.operators.multimodal import _ilog2
+
     e = np.array([0, 1, 2, 3, 4, 255, 256, (1 << 39) - 1, 1 << 39], dtype=np.int64)
-    got = np.where(e > 0, np.frexp(e.astype(np.float64))[1], 0)
-    assert list(got) == [int(x).bit_length() for x in e]
+    want = [int(x).bit_length() for x in e]
+    assert _ilog2(e).tolist() == want
+    assert list(np.where(e > 0, np.frexp(e.astype(np.float64))[1], 0)) == want
 
 
 # ------------------------------------------------- mimic hardening
