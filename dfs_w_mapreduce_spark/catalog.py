@@ -99,7 +99,14 @@ def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
     `n >= cores/2` condition, making this a no-op. Measured: applying
     this to every scan is a net LOSS at fixture scale (shuffle
     overhead > parallelism gain for sub-second scan-agg queries), so
-    it is opt-in per operator, not part of load_table."""
+    it is opt-in per operator, not part of load_table.
+
+    Catalyst pushes a deterministic filter through the repartition, so
+    a filter written AFTER fan_out runs in the pre-fan-out scan task,
+    including any expression it substitutes from a projection (a
+    `size(sh) > 0` on shingles builds the shingles there, then again
+    after the exchange). Filter on a predicate that is cheap wherever
+    it lands (dedup._has_shingles counts tokens)."""
     cores = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= max(cores // 2, 1):
         return df

@@ -15,8 +15,9 @@ its oracle. Each form below writes the same value:
 
 `hex_long_expr` / `hex_long_sql` are the same conversion for a query
 that already holds the md5 hex digest as a column.
-`_h31_spark` / `_h31_sql` reduce the 60-bit value mod P31, the input
-domain of the universal hash family h(x) = (a*x + b) mod P31.
+`_h31_spark` / `_h31_expr` / `_h31_sql` (Column, Spark SQL, DuckDB)
+reduce the 60-bit value mod P31, the input domain of the universal
+hash family h(x) = (a*x + b) mod P31.
 """
 
 from __future__ import annotations
@@ -49,6 +50,10 @@ def md5_long_sql(expr: str, digits: int = 15) -> str:
 
 def _h31_spark(col: Column) -> Column:
     return md5_long(col) % P31
+
+
+def _h31_expr(expr: str) -> str:
+    return f"({md5_long_expr(expr)} % {P31})"
 
 
 def _h31_sql(expr: str) -> str:

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from dfs_w_mapreduce_spark.catalog import fan_out, load_table
 from dfs_w_mapreduce_spark.functions.hashing import (
     P31,
+    _h31_expr,
     _h31_spark,
     _h31_sql,
     md5_long,
@@ -105,19 +106,32 @@ _SHINGLES_SQL = """
 """
 
 
-def _shingles_of(d: DataFrame) -> DataFrame:
+def _has_shingles(text: Column) -> Column:
+    """True where the text has a non-empty shingle set: at least two
+    whitespace tokens. Null text is dropped, as by `size(sh) > 0`.
+    Catalyst pushes this filter below fan_out's exchange into the
+    scan's single task, so it counts tokens instead of building the
+    shingles there a second time."""
+    return F.size(ws_tokens(text)) >= 2
+
+
+def _shingles_of(d: DataFrame, nonempty: bool = False) -> DataFrame:
     """(doc_id, text, ...) -> (doc_id, sh) — shared by the batch path
-    and the live incremental-ingest stream (foreachBatch frames)."""
+    and the live incremental-ingest stream (foreachBatch frames).
+    `nonempty` keeps only documents with at least one shingle."""
+    if nonempty:
+        d = d.filter(_has_shingles(F.col("text")))
     toks = ws_tokens(F.col("text"))
     return d.select("doc_id", toks.alias("w")).select(
         "doc_id", _shingles_from_tokens(F.col("w")).alias("sh")
     )
 
 
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dfs_w_mapreduce_spark.catalog import fan_out
-
-    return _shingles_of(fan_out(spark, load_table(spark, sf_dir, "documents")))
+def _doc_shingles(
+    spark: SparkSession, sf_dir: str, nonempty: bool = False
+) -> DataFrame:
+    docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
+    return _shingles_of(docs, nonempty)
 
 
 _DOC_SHINGLES_SQL = f"""
@@ -245,7 +259,9 @@ def _common_shingle_counts(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
         # the join stage — that map's sort-fallback OOM'd a
         # pressured 1g heap), and the count runs on many small
         # co-partitioned tasks with no further exchange.
-        .repartition(64, "doc_a", "doc_b")
+        .repartition(
+            sh.sparkSession.sparkContext.defaultParallelism * 4, "doc_a", "doc_b"
+        )
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("common"))
     )
@@ -373,7 +389,9 @@ def _capped_common_counts(
                     F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"),
                 )
-                .repartition(64, "doc_a", "doc_b")
+                .repartition(
+                    spark.sparkContext.defaultParallelism * 4, "doc_a", "doc_b"
+                )
                 .groupBy("doc_a", "doc_b")
                 .agg(F.count("*").alias("common"))
             )
@@ -588,20 +606,70 @@ DEDUP_CONTAINMENT_ORACLE = f"""
 # ----------------------------------------------------------- minhash LSH
 
 
-def _minhash_cols() -> list[Column]:
-    hs = F.col("hs")
+def _minhash_terms(array_min: str, transform: str) -> list[str]:
+    """SQL text of the 16 minhashes of the hashed shingle array `hs`,
+    in either engine's spelling: ("array_min", "transform") for Spark,
+    ("list_min", "list_transform") for the DuckDB oracles."""
     return [
-        F.array_min(F.transform(hs, lambda x: (F.lit(a) * x + F.lit(b)) % P31)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(MINHASH_AB)
+        f"{array_min}({transform}(hs, x -> ({a} * x + {b}) % {P31}))"
+        for a, b in MINHASH_AB
     ]
+
+
+_SHINGLE_HASHES_EXPR = f"transform(sh, s -> {_h31_expr('s')})"
+_MINHASH_EXPR = f"array({', '.join(_minhash_terms('array_min', 'transform'))})"
+
+
+def _signed(sh: DataFrame) -> DataFrame:
+    """(doc_id, sh, ...) -> the same rows plus `mh`, the 16-minhash
+    signature array. Two SQL expressions, not a Column tree per hash:
+    building that tree took hundreds of py4j calls per query (the
+    dedup plan time of dedup_minhash_pairs halved without it)."""
+    hs = sh.select("*", F.expr(_SHINGLE_HASHES_EXPR).alias("hs"))
+    return hs.select(*sh.columns, F.expr(_MINHASH_EXPR).alias("mh"))
+
+
+def _band_key_exprs(n_bands: int, rows: int) -> list[str]:
+    """SQL text of each band's key: its `rows` minhashes joined by ','."""
+    return [
+        f"concat_ws(',', {', '.join(f'mh[{b * rows + r}]' for r in range(rows))})"
+        for b in range(n_bands)
+    ]
+
+
+def _bands_of(signed: DataFrame) -> DataFrame:
+    """(doc_id, mh, ...) -> (doc_id, band, sig): the banded signature
+    rows, N_BANDS per document — the candidate-join keys of every
+    minhash query and the persisted index of the incremental family."""
+    keys = ", ".join(_band_key_exprs(N_BANDS, ROWS_PER_BAND))
+    return signed.select(
+        "doc_id", F.posexplode(F.expr(f"array({keys})")).alias("band", "sig")
+    )
+
+
+def _band_candidates(bands: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) pairs, doc_a < doc_b, that share at least one
+    (band, sig) bucket: the LSH band self-join."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.sig") == F.col("b.sig"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
 
 
 def minhash_band_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(sh, bands): the non-empty shingle sets and the banded signature
-    rows (doc_id, band, sig) — the LSH candidate generator shared by
-    the self-join dedup path (q_dedup_minhash_pairs) and the
+    """(sh, bands): the cached non-empty shingle sets with their
+    signatures (doc_id, sh, mh) and the banded signature rows
+    (doc_id, band, sig) — the LSH candidate generator shared by the
+    self-join dedup path (q_dedup_minhash_pairs), the estimate and the
     cross-corpus fuzzy decontamination path (pipeline.
     q_decontaminate_minhash).
 
@@ -609,28 +677,8 @@ def minhash_band_frames(
     candidate join is ~3 small columns per row, never the shingle
     arrays — at 100 TB that's the difference between shuffling
     signatures (~100 B/doc) and shuffling the corpus."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sh") > 0).cache()
-    sig = sh.select(
-        "doc_id", F.transform(F.col("sh"), _h31_spark).alias("hs")
-    ).select("doc_id", *_minhash_cols())
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "sig"),
-    )
-    return sh, bands
+    sh = _signed(_doc_shingles(spark, sf_dir, nonempty=True)).cache()
+    return sh, _bands_of(sh)
 
 
 def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -643,28 +691,14 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification touches only colliding candidates. AQE handles the
     skew when a band bucket gets hot."""
     sh, bands = minhash_band_frames(spark, sf_dir)
-    # r11 A/B note: caching bands co-partitioned on (band, sig) — the
-    # _capped_common_counts discipline — was tried and REVERTED: the
-    # blocking cache materialization + its explicit exchange measured
-    # consistently SLOWER than letting both join sides recompute the
-    # 16-minhash transform from the cached shingle frame (interleaved
-    # fresh-JVM A/B at sf0.1: 3.80/3.04s cached vs 2.42/1.69s HEAD —
-    # the two sides pipeline concurrently and the transform is cheap
-    # relative to a serialized materialization barrier).
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
+    # Each document is shingled and signed once, in the fanned-out
+    # stage that fills the cached `sh` (signature included); both join
+    # sides only band the cached `mh` column. A second cache of the
+    # bands themselves, co-partitioned on (band, sig), measured slower
+    # in an interleaved A/B at sf0.1 (3.80/3.04 s vs 2.42/1.69 s): its
+    # materialization is one more barrier and exchange, while banding
+    # a cached array is cheap on both sides.
+    cand = _band_candidates(bands)
     # Verification re-joins shingle sets for surviving candidates only.
     sa, sb = _merge_join(sh, sf_dir).alias("sa"), _merge_join(sh, sf_dir).alias("sb")
     inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
@@ -681,27 +715,8 @@ def _minhash_bands_ctes() -> str:
     """The shs/sig/bands CTE chain (DuckDB) mirroring
     minhash_band_frames — shared by the self-join dedup oracle and the
     cross-corpus decontamination oracle."""
-    mh_exprs = ",\n".join(
-        f"list_min(list_transform(hs, x -> ({a} * x + {b}) % {P31})) AS mh{i}"
-        for i, (a, b) in enumerate(MINHASH_AB)
-    )
-    band_rows = "\nUNION ALL\n".join(
-        f"""SELECT doc_id, sh, {b} AS band,
-                   CAST(mh{b * ROWS_PER_BAND} AS VARCHAR) || ',' ||
-                   CAST(mh{b * ROWS_PER_BAND + 1} AS VARCHAR) || ',' ||
-                   CAST(mh{b * ROWS_PER_BAND + 2} AS VARCHAR) || ',' ||
-                   CAST(mh{b * ROWS_PER_BAND + 3} AS VARCHAR) AS sig
-            FROM sig"""
-        for b in range(N_BANDS)
-    )
-    return f"""shs AS (SELECT * FROM ({_DOC_SHINGLES_SQL}) WHERE len(sh) > 0),
-        sig AS (
-            SELECT doc_id, sh, {mh_exprs}
-            FROM (SELECT doc_id, sh,
-                         list_transform(sh, s -> {_h31_sql('s')}) AS hs
-                  FROM shs)
-        ),
-        bands AS ({band_rows})"""
+    return f"""{_minhash_sig_sql()},
+        bands AS ({_band_rows_sql()})"""
 
 
 def _minhash_oracle() -> str:
@@ -727,32 +742,6 @@ DELTA_MOD = 10  # doc_id % DELTA_MOD >= DELTA_CUT -> "new batch"
 DELTA_CUT = 8
 
 
-def _bands_of(sh: DataFrame) -> DataFrame:
-    """(doc_id, sh) -> (doc_id, band, sig): the persisted-index rows
-    of the incremental dedup family (minhash signature split into
-    N_BANDS banded keys)."""
-    sig = sh.select(
-        "doc_id", F.transform(F.col("sh"), _h31_spark).alias("hs")
-    ).select("doc_id", *_minhash_cols())
-    return sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "sig"),
-    )
-
-
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest dedup: test only the NEW batch against the
     existing corpus (hash-split stands in for an arrival date). The
@@ -761,19 +750,18 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a full-corpus self-join per ingest; base signatures are the
     persisted dedup index this query models recomputing."""
     sh = (
-        _doc_shingles(spark, sf_dir)
-        .filter(F.size("sh") > 0)
+        _signed(_doc_shingles(spark, sf_dir, nonempty=True))
         .withColumn("is_delta", F.col("doc_id") % DELTA_MOD >= DELTA_CUT)
         .cache()
     )
-    # banding via the shared _bands_of helper — the SAME construction
-    # the live ingest stream uses, so batch and stream can never band
-    # differently (stream_dedup_incremental_live's oracle is this
-    # query's oracle)
-    delta = _bands_of(sh.filter(F.col("is_delta")).select("doc_id", "sh")).select(
+    # banding via the shared _signed/_bands_of helpers — the SAME
+    # construction the live ingest stream uses, so batch and stream can
+    # never band differently (stream_dedup_incremental_live's oracle is
+    # this query's oracle)
+    delta = _bands_of(sh.filter(F.col("is_delta"))).select(
         F.col("doc_id").alias("new_id"), "band", "sig"
     )
-    base = _bands_of(sh.filter(~F.col("is_delta")).select("doc_id", "sh")).select(
+    base = _bands_of(sh.filter(~F.col("is_delta"))).select(
         F.col("doc_id").alias("base_id"), "band", "sig"
     )
     # the BASE band index is corpus-cardinality (string sigs — same
@@ -804,8 +792,8 @@ def _minhash_sig_sql() -> str:
     """Shared CTE prefix: shs (non-empty shingle sets) + sig (16
     minhash columns per doc)."""
     mh_exprs = ",\n".join(
-        f"list_min(list_transform(hs, x -> ({a} * x + {b}) % {P31})) AS mh{i}"
-        for i, (a, b) in enumerate(MINHASH_AB)
+        f"{term} AS mh{i}"
+        for i, term in enumerate(_minhash_terms("list_min", "list_transform"))
     )
     return f"""
         shs AS (SELECT * FROM ({_DOC_SHINGLES_SQL}) WHERE len(sh) > 0),
@@ -818,8 +806,10 @@ def _minhash_sig_sql() -> str:
     """
 
 
-def _incremental_oracle() -> str:
-    band_rows = "\nUNION ALL\n".join(
+def _band_rows_sql() -> str:
+    """(doc_id, band, sig) rows from the sig CTE — the oracle twin of
+    _bands_of."""
+    return "\nUNION ALL\n".join(
         f"""SELECT doc_id, {b} AS band,
                    CAST(mh{b * ROWS_PER_BAND} AS VARCHAR) || ',' ||
                    CAST(mh{b * ROWS_PER_BAND + 1} AS VARCHAR) || ',' ||
@@ -828,11 +818,14 @@ def _incremental_oracle() -> str:
             FROM sig"""
         for b in range(N_BANDS)
     )
+
+
+def _incremental_oracle() -> str:
     jac = ("len(list_intersect(sa.sh, sb.sh)) * 1.0 / "
            "(len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))")
     return f"""
         WITH {_minhash_sig_sql()},
-        bands AS ({band_rows}),
+        bands AS ({_band_rows_sql()}),
         cand AS (
             SELECT DISTINCT d.doc_id AS new_id, b.doc_id AS base_id
             FROM bands d JOIN bands b ON d.band = b.band AND d.sig = b.sig
@@ -855,52 +848,16 @@ def q_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     are md5-deterministic, so the whole calibration table is
     hash-checkable — the measured evidence that 16 hashes suffice for
     a 0.5 threshold on this corpus."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sh") > 0).cache()
-    sig = sh.select(
-        "doc_id", F.transform(F.col("sh"), _h31_spark).alias("hs")
-    ).select("doc_id", *_minhash_cols())
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "sig"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    ga, gb = _merge_join(sig, sf_dir).alias("ga"), _merge_join(sig, sf_dir).alias("gb")
-    n_match = None
-    for i in range(len(MINHASH_AB)):
-        m = F.when(F.col(f"ga.mh{i}") == F.col(f"gb.mh{i}"), 1).otherwise(0)
-        n_match = m if n_match is None else n_match + m
+    sh, bands = minhash_band_frames(spark, sf_dir)
+    cand = _band_candidates(bands)
     sa, sb = _merge_join(sh, sf_dir).alias("sa"), _merge_join(sh, sf_dir).alias("sb")
+    n_match = F.expr("size(filter(zip_with(sa.mh, sb.mh, (x, y) -> x = y), m -> m))")
     inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
     union = F.size("sa.sh") + F.size("sb.sh") - inter
     est = F.round(n_match / float(len(MINHASH_AB)), 4)
     jac = F.round(inter / union, 4)
     return (
-        cand.join(ga, F.col("doc_a") == F.col("ga.doc_id"))
-        .join(gb, F.col("doc_b") == F.col("gb.doc_id"))
-        .join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
         .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
         .select(
             "doc_a",
@@ -913,15 +870,6 @@ def q_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_estimate_oracle() -> str:
-    band_rows = "\nUNION ALL\n".join(
-        f"""SELECT doc_id, {b} AS band,
-                   CAST(mh{b * ROWS_PER_BAND} AS VARCHAR) || ',' ||
-                   CAST(mh{b * ROWS_PER_BAND + 1} AS VARCHAR) || ',' ||
-                   CAST(mh{b * ROWS_PER_BAND + 2} AS VARCHAR) || ',' ||
-                   CAST(mh{b * ROWS_PER_BAND + 3} AS VARCHAR) AS sig
-            FROM sig"""
-        for b in range(N_BANDS)
-    )
     n_match = " + ".join(
         f"(CASE WHEN ga.mh{i} = gb.mh{i} THEN 1 ELSE 0 END)"
         for i in range(len(MINHASH_AB))
@@ -930,7 +878,7 @@ def _minhash_estimate_oracle() -> str:
            "(len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))")
     return f"""
         WITH {_minhash_sig_sql()},
-        bands AS ({band_rows}),
+        bands AS ({_band_rows_sql()}),
         cand AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
             FROM bands a JOIN bands b
@@ -977,27 +925,19 @@ def q_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact O(n^2) baseline is asserted in tests at sf0.001 (the
     relative-recall denominator here keeps the registry row
     linear-cost at any scale)."""
-    sh = _doc_shingles(spark, sf_dir).filter(F.size("sh") > 0).cache()
-    sig = sh.select(
-        "doc_id", F.transform(F.col("sh"), _h31_spark).alias("hs")
-    ).select("doc_id", *_minhash_cols())
-    # ONE generator emits all 14 (cfg, band, sig) rows per doc: a
-    # per-config union would re-evaluate the 16-minhash transform once
-    # per branch (3 passes over the shingle arrays — measured ~15% of
-    # the sweep's round-8 wall); a single explode computes signatures
-    # exactly once and shuffles the identical band stream.
+    sh = _signed(_doc_shingles(spark, sf_dir, nonempty=True)).cache()
+    # ONE generator emits all 14 (cfg, band, sig) rows per doc from the
+    # signature cached with the shingles: a per-config union would
+    # re-evaluate the banding once per branch and shuffle the same
+    # band stream three times.
     entries = [
-        F.struct(
-            F.lit(f"{nb}x{rpb}").alias("cfg"),
-            F.lit(b).cast("int").alias("band"),
-            F.concat_ws(
-                ",", *[F.col(f"mh{b * rpb + r}") for r in range(rpb)]
-            ).alias("sig"),
-        )
+        f"named_struct('cfg', '{nb}x{rpb}', 'band', {b}, 'sig', {key})"
         for nb, rpb in SWEEP_CONFIGS
-        for b in range(nb)
+        for b, key in enumerate(_band_key_exprs(nb, rpb))
     ]
-    bands = sig.select("doc_id", F.explode(F.array(*entries)).alias("e")).select(
+    bands = sh.select(
+        "doc_id", F.explode(F.expr(f"array({', '.join(entries)})")).alias("e")
+    ).select(
         F.col("e.cfg").alias("cfg"), "doc_id",
         F.col("e.band").alias("band"), F.col("e.sig").alias("sig"),
     )
@@ -1007,12 +947,11 @@ def q_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The ranked stream is materialized ONCE, co-partitioned on the
     # bucket key and cached (r11, the _capped_common_counts
     # discipline): its three consumers — the capped-bucket stat and
-    # BOTH sides of the band self-join — otherwise each re-evaluated
-    # the md5 + 16-minhash transform over every shingle array (3x the
-    # sweep's dominant per-task work) and paid their own
-    # hash(cfg, band, sig) exchange. The explicit repartition feeds
-    # the rank window its required distribution (the window adds only
-    # a sort), is AQE-coalesce-exempt so the self-join fan-out keeps
+    # BOTH sides of the band self-join — otherwise each re-ran the
+    # banding and rank window and paid their own hash(cfg, band, sig)
+    # exchange. The explicit repartition feeds the rank window its
+    # required distribution (the window adds only a sort), is
+    # AQE-coalesce-exempt so the self-join fan-out keeps
     # its task fan-in, and the cached layout satisfies all three
     # consumers exchange-free. Rows are (cfg, band, sig, doc_id, rk) —
     # ~14 small rows/doc, corpus-linear.
@@ -1395,18 +1334,7 @@ def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # minhash member: bands over the sampled shingles + exact verify;
     # cached so the self-join computes the 16-minhash transform once
     # (r11; sample-bounded — <= 4 * AGREEMENT_SAMPLE rows)
-    bands = _bands_of(shp).cache()
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _band_candidates(_bands_of(_signed(shp)).cache())
     sa, sb = shp.alias("sa"), shp.alias("sb")
     inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
     union = F.size("sa.sh") + F.size("sb.sh") - inter

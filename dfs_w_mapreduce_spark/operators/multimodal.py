@@ -40,17 +40,17 @@ from dfs_w_mapreduce_spark.registry import QuerySpec
 
 
 def _decode_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (doc_id, n_chars) manifest the HEAVY Python decoder maps
-    over, fanned out to machine parallelism: q_multimodal_decode's
-    full-codec pass (zlib PNG + Huffman/IDCT JPEG per document) is
-    CPU-bound Python, and the fixture's single-file parquet scan
-    yields ONE split — without the fan-out the whole corpus's decode
-    ran on a single task (measured 4.48s -> 1.71s at sf0.1).
-    catalog.fan_out is a no-op once the scan already has >= cores/2
-    splits, i.e. on any real many-file dataset, so this stays
-    scale-adaptive rather than local-tuned. The LIGHT builders (audio
-    synth, dHash, GIF frames) deliberately do NOT fan out: their
-    Python work is ~0.5s and the extra exchange measured as a net
+    """The (doc_id, n_chars) manifest that the CPU-heavy Python builders
+    map over, fanned out to machine parallelism. The fixture's
+    single-file parquet scan yields ONE split, so without the fan-out
+    a builder runs on a single task: q_multimodal_decode's full-codec
+    pass (zlib PNG + Huffman/IDCT JPEG per document) measured 4.48s ->
+    1.71s at sf0.1 with it, q_multimodal_audio_fbank's filterbank
+    1.18s -> 0.78s. catalog.fan_out is a no-op once the scan already
+    has >= cores/2 splits, i.e. on any real many-file dataset, so this
+    stays scale-adaptive rather than local-tuned. The LIGHT builders
+    (audio synth, dHash, GIF frames) do NOT fan out: their Python work
+    is well under a second and the extra exchange measured as a net
     loss (audio_frames 0.85 -> 1.44s)."""
     d = load_table(spark, sf_dir, "documents")
     return fan_out(spark, d.select("doc_id", "n_chars"))
@@ -1332,9 +1332,10 @@ def q_multimodal_audio_fbank(spark: SparkSession, sf_dir: str) -> DataFrame:
     framer -> filterbank bit-for-bit. Same scale shape as the other
     audio batteries: one Arrow-batched mapInPandas pass, per-row numpy
     reduction, one fixed-width row per document (nothing sample-sized
-    reaches a shuffle)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", "n_chars").mapInPandas(
+    reaches a shuffle) — run over the fanned-out manifest
+    (_decode_manifest), since the single-split scan would leave it one
+    Python task."""
+    return _decode_manifest(spark, sf_dir).mapInPandas(
         _build_audio_fbank, schema=AUDIO_FBANK_SCHEMA
     )
 
@@ -1686,10 +1687,22 @@ def decode_gif(b: bytes) -> list[dict]:
     return frames
 
 
-def _doc_gif(doc_id: int, n_chars: int) -> tuple[int, int, list[dict]]:
+def _gif_params(doc_id, n_chars):
+    """(width, height, n_frames) of the document's GIF. Plain arithmetic,
+    so it takes ints (the builders) or Spark Columns (q_dedup_image_apply)."""
+    return doc_id % 5 + 4, n_chars % 4 + 3, doc_id % 3 + 2
+
+
+def _doc_gif(
+    doc_id: int, n_chars: int, max_frames: int | None = None
+) -> tuple[int, int, list[dict]]:
     """The document's animated GIF built and decoded back: (width,
-    height, decoded frames)."""
-    w, h, nf = doc_id % 5 + 4, n_chars % 4 + 3, doc_id % 3 + 2
+    height, decoded frames). `max_frames` builds only the first frames:
+    frame f depends on (doc_id, f) alone, so they decode as in the full
+    GIF."""
+    w, h, nf = _gif_params(doc_id, n_chars)
+    if max_frames is not None:
+        nf = min(nf, max_frames)
     return w, h, decode_gif(build_gif(w, h, nf, doc_id))
 
 
@@ -1912,7 +1925,7 @@ def _build_image_phash(doc_id: int, n_chars: int) -> list[tuple]:
     palette bug flips hash bits and breaks the oracle match. The hash
     is returned as four 16-bit band keys (b0 = bits 0..15 from the
     LSB) — the blocking keys for the Hamming band join."""
-    w, h, frames = _doc_gif(doc_id, n_chars)
+    w, h, frames = _doc_gif(doc_id, n_chars, max_frames=1)
     idx = frames[0]["idx"]
     luma = [sum(i * m % 256 for m in GIF_PAL_MULS) for i in range(GIF_COLORS)]
     bits = 0
@@ -2172,11 +2185,12 @@ def q_dedup_image_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(~F.col("is_keeper"))
         .select("doc_id")
     )
+    w, h, n_frames = _gif_params(F.col("doc_id"), F.col("n_chars"))
     return d.join(drop, "doc_id", "left_anti").select(
         "doc_id",
-        (F.col("doc_id") % 5 + 4).cast("int").alias("w"),
-        (F.col("n_chars") % 4 + 3).cast("int").alias("h"),
-        (F.col("doc_id") % 3 + 2).cast("int").alias("n_frames"),
+        w.cast("int").alias("w"),
+        h.cast("int").alias("h"),
+        n_frames.cast("int").alias("n_frames"),
     )
 
 

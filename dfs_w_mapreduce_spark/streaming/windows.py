@@ -797,6 +797,7 @@ def q_stream_dedup_incremental_live(spark: SparkSession, sf_dir: str) -> DataFra
         JACCARD_T,
         _bands_of,
         _shingles_of,
+        _signed,
     )
 
     base_dir = tempfile.mkdtemp(prefix="graft_stream_incdedup_")
@@ -806,9 +807,9 @@ def q_stream_dedup_incremental_live(spark: SparkSession, sf_dir: str) -> DataFra
 
     # 1) build + persist the base dedup index (shingles for the exact
     # verify, banded signatures for candidate generation)
-    base_sh = _shingles_of(d.filter(~is_delta)).filter(F.size("sh") > 0)
+    base_sh = _shingles_of(d.filter(~is_delta), nonempty=True)
     base_sh.write.mode("overwrite").parquet(f"{idx}/shingles")
-    _bands_of(spark.read.parquet(f"{idx}/shingles")).withColumnRenamed(
+    _bands_of(_signed(spark.read.parquet(f"{idx}/shingles"))).withColumnRenamed(
         "doc_id", "base_id"
     ).write.mode("overwrite").parquet(f"{idx}/bands")
 
@@ -832,11 +833,11 @@ def q_stream_dedup_incremental_live(spark: SparkSession, sf_dir: str) -> DataFra
     def attach(batch_df, batch_id):
         from dfs_w_mapreduce_spark.operators.dedup import _merge_join
 
-        sh_b = _shingles_of(batch_df).filter(F.size("sh") > 0)
+        sh_b = _shingles_of(batch_df, nonempty=True)
         # base band index + base shingles are corpus-cardinality with
         # string payloads — size-gated like every shingle-class join side
         cand = (
-            _bands_of(sh_b)
+            _bands_of(_signed(sh_b))
             .withColumnRenamed("doc_id", "new_id")
             .join(_merge_join(spark.read.parquet(f"{idx}/bands"), sf_dir),
                   ["band", "sig"])

@@ -6,6 +6,8 @@ at scale — these tests pin the plan properties."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
@@ -489,3 +491,88 @@ def test_keyphrases_islands_partition_by_doc_and_topk(spark, sf_dir):
     plan = formatted_plan(q_text_keyphrases(spark, sf_dir))
     assert "hashpartitioning(doc_id" in plan, plan[:2500]
     assert "TakeOrderedAndProject" in plan
+
+
+def _plan_tree(plan: str) -> tuple[list[tuple[int, str, int]], dict[int, str]]:
+    """(nodes, details) of a formatted plan: nodes are (depth, name, id)
+    in tree order, details map each id to its detail block."""
+    tree, _, rest = plan.partition("\n\n\n")
+    nodes = []
+    for line in tree.splitlines():
+        m = re.match(r"^([ :|]*(?:\+- |:- )?)(\w[\w ]*?) \((\d+)\)$", line)
+        if m:
+            nodes.append((len(m.group(1)), m.group(2), int(m.group(3))))
+    details = {
+        int(m.group(1)): m.group(2)
+        for m in re.finditer(r"^\((\d+)\) (.*?)(?=^\(\d+\) |\Z)", rest, re.S | re.M)
+    }
+    return nodes, details
+
+
+def _below(nodes: list[tuple[int, str, int]], is_top) -> set[int]:
+    """Ids of the nodes under every node that is_top(name, id) picks."""
+    ids: set[int] = set()
+    for i, (depth, name, nid) in enumerate(nodes):
+        if is_top(name, nid):
+            for d, _, sub in nodes[i + 1:]:
+                if d <= depth:
+                    break
+                ids.add(sub)
+    return ids
+
+
+def _fans_out(spark, sf_dir) -> bool:
+    from dfs_w_mapreduce_spark.catalog import fan_out
+
+    docs = load_table(spark, sf_dir, "documents")
+    return fan_out(spark, docs) is not docs
+
+
+def test_minhash_pairs_shingle_and_sign_after_fan_out(spark, sf_dir):
+    """Shingles are built only after the fan-out exchange (the non-empty
+    filter Catalyst pushes below it counts tokens), and the 16-minhash
+    signature is evaluated only inside the cached relation."""
+    from dfs_w_mapreduce_spark.operators.dedup import q_dedup_minhash_pairs
+
+    plan = formatted_plan(q_dedup_minhash_pairs(spark, sf_dir))
+    nodes, details = _plan_tree(plan)
+    round_robin = _below(
+        nodes, lambda name, nid: name == "Exchange"
+        and "RoundRobinPartitioning" in details[nid]
+    )
+    assert bool(round_robin) == _fans_out(spark, sf_dir), plan[:3000]
+    shingling = [nid for nid in round_robin
+                 if "zip_with" in details[nid] or "array_distinct" in details[nid]]
+    assert not shingling, plan
+    signing = {nid for nid, text in details.items() if "array_min(transform" in text}
+    cached = _below(nodes, lambda name, nid: name == "InMemoryRelation")
+    assert signing and signing <= cached, plan
+
+
+def test_audio_fbank_udf_runs_after_fan_out(spark, sf_dir):
+    """The filterbank's Python UDF reads the fanned-out manifest, not
+    the single-split scan."""
+    from dfs_w_mapreduce_spark.operators.multimodal import q_multimodal_audio_fbank
+
+    plan = formatted_plan(q_multimodal_audio_fbank(spark, sf_dir))
+    nodes, details = _plan_tree(plan)
+    under_udf = _below(nodes, lambda name, nid: name == "MapInPandas")
+    round_robin = [nid for nid in under_udf
+                   if "RoundRobinPartitioning" in details[nid]]
+    assert bool(round_robin) == _fans_out(spark, sf_dir), plan
+
+
+def test_token_count_predicate_keeps_docs_with_shingles(spark):
+    """_has_shingles (two or more tokens) keeps exactly the documents
+    whose shingle set is non-empty, so filtering on it before shingling
+    equals filtering on size(sh) > 0 after."""
+    from dfs_w_mapreduce_spark.operators.dedup import _has_shingles, _shingles_of
+
+    texts = ["", "   ", "one", "a a", "a\tb", "\t a \t", "a b c", None, "x\x0By"]
+    d = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    by_shingles = {r.doc_id for r in _shingles_of(d).filter(F.size("sh") > 0).collect()}
+    by_tokens = {r.doc_id for r in d.filter(_has_shingles(F.col("text"))).collect()}
+    assert by_tokens == by_shingles == {3, 4, 6, 8}
+    assert sorted(_shingles_of(d, nonempty=True).collect()) == sorted(
+        _shingles_of(d).filter(F.size("sh") > 0).collect()
+    )

@@ -4,8 +4,9 @@ The whitespace tokenizer and the md5 → integer hash decide whether a
 query matches its DuckDB oracle, so each is written once, in
 functions/text.py and functions/hashing.py. The synthetic media
 fixtures (operators/multimodal.py) derive each document's WAV, PNG and
-GIF from (doc_id, n_chars); each rule is written once in Python and
-once in the SQL of the oracles. These tests read the package's source
+GIF from (doc_id, n_chars); each rule is written once in Python (a
+Spark Column expression counts as Python) and once in the SQL of the
+oracles. These tests read the package's source
 (no Spark) and fail on a copy.
 """
 
@@ -54,17 +55,25 @@ def test_no_inline_tokenizer_or_hash_outside_functions():
 
 
 # Fixture rules of the multimodal builders and their DuckDB twins: WAV
-# samples per channel, the WAV waveform, GIF width, PNG width.
+# samples per channel, the WAV waveform, GIF width, PNG width. Python
+# counts both plain arithmetic and Spark Column expressions.
 FIXTURE_FORMULAS = ["% 1000 + 1", "% 4096 - 2048", "doc_id % 5 + 4", "doc_id % 16 + 4"]
 _STRING_TOKENS = {tokenize.STRING, getattr(tokenize, "FSTRING_MIDDLE", tokenize.STRING)}
 _LAYOUT_TOKENS = {tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
                   tokenize.DEDENT, tokenize.ENDMARKER}
 
 
+# A Spark Column reference, F.col("doc_id"), spells the same rule as
+# the bare name doc_id in a Python builder.
+_COLUMN_REF = re.compile(r"\bF\.col(?:umn)?\(\s*([\"'])(\w+)\1\s*\)")
+
+
 def _engine_texts(src: str) -> tuple[str, str]:
     """(python, sql) of one module: its code tokens without strings or
-    comments, and its string literals other than docstrings — the SQL
-    the oracles run. Whitespace is collapsed in both."""
+    comments, with each F.col("name") read as the name, and its string
+    literals other than docstrings — the SQL the oracles run.
+    Whitespace is collapsed in both."""
+    src = _COLUMN_REF.sub(r"\2", src)
     doc_lines = {
         node.body[0].lineno
         for node in ast.walk(ast.parse(src))
