@@ -1,196 +1,33 @@
-"""Benchmark runner — the driver executes this per round.
+"""Benchmark runner: the headline queries, one JSON line on stdout.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints exactly
-one JSON line:
-    {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    python bench.py                                   # full headline suite
+    SPARK_GRAFT_BENCH_ONLY=q1,q2 python bench.py      # named keys, one JVM
 
-Each query is forced to full materialization via the noop sink (no
-driver-side collect cost, no result truncation), after a small warmup
-to exclude JVM/codegen warm-up from the first measured query.
+Protocol. The headline queries run at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is
+materialized through the noop sink (no collect, no truncation) REPS
+times and its minimum is recorded: min-of-N is the steady-state
+estimator for a shared machine. Between repetitions the cache is
+cleared and a full GC runs outside the timed region; one warm-up scan
+of lineitem precedes the first query. The full suite runs in fresh-JVM
+subprocesses of CHUNK_SIZE keys, so no key is measured in a JVM aged by
+the whole suite. After it, ISOLATED_KEYS, plus up to ISOLATED_EXTRA_MAX
+keys that ran more than ISOLATED_RATIO times slower than the prior
+record at the same sf and core count, are re-measured in one more
+fresh JVM as `queries_isolated`.
 
-Each query runs three times and the MINIMUM is reported: a single
-local[32] run carries multi-hundred-ms scheduler/GC noise, which
-round-over-round regression tracking would misread as perf changes;
-min-of-N is the standard steady-state estimator for that.
+Output: {"metric", "unit", "sf", "queries", "n_queries", "value",
+"cpus", ...} with the summary fields after `queries`, because a caller
+may keep only the last 2000 characters of stdout. A run at sf0.1
+also writes the full record to BENCH_LOCAL.json unless that file holds
+a record taken at another core count.
 
-Adjudication rule for cross-round comparison (written after round 5,
-where the driver's run landed +21% on UNTOUCHED queries and isolated
-re-measurement reproduced the round-4 numbers — pure environment
-noise): a regression is only attributable to code if (a) the query's
-implementation or a shared helper changed that round, or (b) the
-regression reproduces in the `queries_isolated` companion record,
-which re-measures the heaviest keys min-of-3 in a FRESH JVM
-subprocess after the main suite (a fresh JVM is the only real reset —
-a restarted SparkSession reuses the warm, pressured JVM). A broad
-same-direction drift across untouched keys that the isolated record
-does not reproduce is machine noise; compare `queries_isolated`
-first, then per-key deltas.
-
-Cross-round comparability note (r3 -> r4): the headline set grew from
-56 to 70 keys, and a longer single-session suite accumulates JVM
-codegen-cache/GC pressure that inflates sub-second queries by
-100-300ms late in the run. Shared-key sums across rounds therefore
-overstate regressions; isolated min-of-3 re-measurement (fresh
-session) reproduces the r3 numbers for every non-adjudicated shared
-key (e.g. wordcount 0.42s, question_pct 0.31s, tpch_q5 0.84s,
-udaf_grouped_agg 0.47s). The genuinely changed keys are adjudicated
-in the notes below and in the QuerySpec docs (tpch_q1 decimal,
-multimodal_decode PNG codec, dedup_embedding_pairs_lsh banding).
-
-Round-11 END-OF-ROUND record (149 keys, 330.2s vs the same-protocol
-372.1s baseline below = 0.89x on identical keys, measured in a ~1.2x
-slower machine window — see OPTIMIZATION_r11.md for the per-change
-attribution and the full A/B history, including the dense-tfidf
-blocked rewrite that a degraded-window A/B landed and a clean-window
-interleaved A/B reverted). Every in-batch outlier in the record is
-walked back by its fresh-JVM isolated companion taken in the same
-run (semdedup_prune 11.6 -> 4.91 isolated vs prior 5.03;
-dedup_clusters 4.9 -> 2.39 vs prior 2.88; dedup_image_clusters
-11.5 -> 9.44 vs prior 11.71); no unadjudicated regression remains.
-
-Round-11 chunked BASELINE record (149 keys, 372.1s; common-142-key sum vs the
-r10 driver record 326.9 -> 333.6s = 1.02x): the fresh-JVM chunking
-ends the batch-vs-isolated divergence as designed — every r10
-in-batch outlier lands at its isolated level IN BATCH
-(text_bigram_lm 7.70 -> 2.64 vs isolated 2.00; quality_repeated
-2.88 -> 0.64 vs 0.67; dedup_paragraph 4.12 -> 1.87 vs 1.87;
-semdedup_prune 8.93 -> 5.03; dedup_ngram_pairs 12.08 -> 8.81), and
-the remaining in-batch vs isolated gaps on the heavy keys are
-1.05-1.15x (tfidf_cosine_pairs 23.8 vs 21.3; dedup_embedding_clusters
-15.4 vs 14.3). The 8 promoted keys (now ranked by absolute drift) all
-re-measure within the machine-noise band of their priors in fresh
-JVMs (tpch_q3 isolated 0.72 vs prior 0.85 — BELOW), with zero edits
-to any of their paths this round. New keys add 38.5s of coverage:
-ann_recall 10.4 (gained the graph-search 4th row), dedup_image_apply
-8.4 (rides the full clusters chain), knn_graph_search 6.7,
-multimodal_audio_fp_lookup 5.2, quality_domain_ensemble 4.4,
-mix_doremi 3.0, corpus_governance_flags 0.4.
-
-Adjudicated r10 -> r11 (VERDICT r10 what's-wrong #1, the three drifts
-that escaped the ratio-ranked promotion): fresh-JVM min-of-3 at sf0.1
-measures knn_ivfpq 5.09s then 3.80s across two runs (prior 3.80 —
-the in-batch 6.79 does not reproduce and the second run sits exactly
-at prior; the 5.09 first run is itself the machine-variance band),
-semdedup_prune 5.89s (prior 5.44, in-batch 8.93 — 1.08x = noise),
-dedup_ngram_pairs 8.29s (prior 7.96, in-batch 12.08 — 1.04x = noise).
-git log shows zero edits to any of the three paths in round 10. All
-three are machine noise, not regressions; the promotion rule now
-ranks by absolute seconds-over-prior so this class cannot escape
-again, and the full-suite run is chunked into fresh JVMs so in-batch
-numbers stop diverging in the first place.
-
-Adjudicated r9 -> r10 (VERDICT r9 what's-wrong #1): the r9 isolated
-tfidf_cosine_pairs record of 30.2s (vs 20.2s in r8, while in-batch
-IMPROVED 25.1 -> 20.4s) does NOT reproduce — two round-10 fresh-JVM
-isolated min-of-3 runs measured 20.5s and 23.8s on unchanged code,
-i.e. back at the r8 level and consistent with the r9 in-batch 20.4s.
-The contradiction (isolated worse while in-batch better) is resolved
-as a one-off machine-state artifact in the r9 companion subprocess,
-the same class adjudicated for r7's multimodal_decode. Round 10 also
-adds SESSION_ROTATE_EVERY to the main suite so in-batch numbers stop
-drifting away from their isolated companions in the first place.
-
-Adjudicated r10 record (141 keys, 311.4s; common-135-key sum vs r9
-249.9 -> 280.8s = 1.12x): the isolated companions reproduce
-a UNIFORM +10-20% on untouched code (dedup_embedding_clusters 10.36
--> 11.35, dedup_clusters_incremental 4.27 -> 4.66,
-dedup_embedding_pairs_lsh 2.50 -> 3.05; git shows zero edits to any
-of those paths this round) — the machine-state shift class already
-adjudicated for the r8 second session, measured after this box ran a
-90-minute 100x probe marathon. The one prior isolated anomaly
-resolves the other way: tfidf_cosine_pairs isolated 30.2 (r9) ->
-19.78 (r10), confirming the r9 record as the artifact. New keys add
-30.5s, dominated by dedup_image_clusters (21.7s: the verified-phash
-pair pipeline once + ~log-diameter propagation rounds over dense
-dup-cluster pairs — the same shared _min_label_components machinery
-as dedup_embedding_clusters, whose 100x posture is probed; accepted
-as the honest cost of image dup RESOLUTION vs the 4.0s per-doc
-rollup).
-POST-RECORD fix, same round: _min_label_components now checkpoints
-the pair pipeline once before mirroring it into undirected edges
-(the union executed candidate generation TWICE) and co-partitions
-edges by src — measured warm best-of-2 at sf0.1:
-dedup_image_clusters 19.4 -> 11.5s, dedup_clusters 4.3 -> 2.7s,
-dedup_embedding_clusters 16.5 -> 14.8s. BENCH_LOCAL.json predates
-the fix; expect the driver's BENCH_r10 run to land those keys lower.
-
-Adjudicated r8 second-session record (126 keys, 227.8s): shared-key
-sum vs the prior r8 record is 174.3s -> 205.6s (+18%) spread
-uniformly across keys whose code did not change this session (the 14
-new operators are pure additions; git shows zero edits to any drifted
-key's path). Fresh-JVM adjudication of the largest absolute movers:
-tfidf_cosine_pairs 21.9s/23.4s across two isolated JVMs (prior
-isolated 16.6s), dedup_span_apply 2.17s (prior 1.55s),
-dedup_minhash_pairs 1.25-1.62s (prior 1.23s) — identical code
-re-measuring uniformly higher, i.e. the machine-state shift class the
-r7->r8 worktree experiment proved (identical r6 code re-measured at
-the higher level on this machine). Cross-round deltas should be read
-against THIS record's levels; no regression, no fix owed.
-
-Adjudicated r8 final record (112 keys, 174.3s): the promotion rule
-fired on 8 more untouched sub-second keys (asof_join_nearest,
-rolling_user_features, grouped_linear_fit, pit_training_join,
-funnel_stages, heartbeat_liveness, watermark_lateness, join_dpp);
-their fresh-JVM isolated numbers land back at or BELOW the prior
-record (join_dpp isolated 1.05s vs prior main 1.17s) — the isolated
-record does not reproduce the drift, so by this file's own rule it is
-machine noise, not regression.
-
-Adjudicated r8 (mid-round record, 109 keys): shared-key sum 161.3s
-vs the r7 record's 158.9s (+1.5%, noise). The auto-promotion rule
-fired on 8 sub-second keys (sample_weighted, hierarchy_closure,
-chunk_placement, recovery_plan, grouped_linear_fit, scd2_build,
-tpch_q3, question_pct): none changed this round, absolute deltas are
-70-270 ms, and the fresh-JVM isolated numbers scatter BOTH directions
-around the prior record (tpch_q3 isolated 0.567s vs prior main
-0.854s; question_pct isolated 0.254s vs prior 0.381s) — the
-late-suite heap/codegen-pressure class the r3->r4 note documents,
-amplified by the suite growing 97 -> 109 keys; machine noise, not
-regressions. dedup_embedding_clusters/dedup_embedding_pairs_lsh
-isolated drifted 8.37->10.31s / 2.85->3.32s with zero code change —
-the same machine-state shift adjudicated below for r7's
-multimodal_decode/recursive_cte (identical code re-measured higher on
-this machine). Real deltas this round: tfidf_cosine_pairs 23.7->18.9s
-isolated (the dense-vocabulary strategy pick) and tfidf_cosine_zipf
-15.7->7.2s (threshold moved onto the candidate cliff), both
-code-attributed improvements.
-
-Adjudicated r7 -> r8: the two escaped 1.25x drifts from round 7
-(`multimodal_decode` 3.46->4.38s, `recursive_cte` 1.85->2.34s, neither
-isolated that round because the promotion gate read the r05 baseline —
-fixed by the BENCH_LOCAL sf-guard) are MACHINE drift, not code: a git
-worktree of the round-6 commit re-run isolated on the round-8 machine
-measures recursive_cte 2.396s and multimodal_decode 3.534s — the same
-values the round-8 tree measures (2.42-2.51s / 3.87s min-of-3 fresh
-JVM). The r6-vs-r7+ delta exists with IDENTICAL r6 code, so the r6
-tail numbers were taken on a lighter machine state; no regression, no
-fix owed. (Both queries are also re-verified for correctness in the
-round-8 driver window.)
-
-Adjudicated r6 -> r7 (builder-run, vs the 69 keys visible in
-BENCH_r06.json's stdout tail — r06's parsed record is null because
-the per-query JSON line outgrew the driver's 2000-char tail, hence
-this round's BENCH_LOCAL.json + summary-last key ordering): median
-shared-key ratio 0.915, shared-key sum 128.6s vs 136.4s — ~6% faster
-on identical keys (minhash_band_sweep got faster despite gaining the
-SWEEP_BUCKET_CAP rank stage: the explicit pre-distinct pair-key
-repartition removed the fan-out-sized partial maps). The round-7
-auto-promotion rule fired on multimodal_decode / knn_graph / knn_pq
-(>1.25x vs the last parseable record, r05): their fresh-JVM isolated
-numbers are 3.53s / 2.93s / 2.14s vs r6's 3.46s / 2.53s / 1.76s —
-1.02-1.2x with zero code change in any of them, i.e. the session-noise
-class the isolated record exists to identify; not regressions.
-
-Adjudicated r5 -> r6 (builder-run shared-key comparison: 71 keys,
-median ratio 1.03 — noise): `multimodal_decode` ~1.6s -> ~4.6s is a
-DELIBERATE feature cost, not a regression — round 6 added the real
-baseline-JPEG entropy codec (canonical Huffman + dequant + float IDCT
-per document) and real decoded-PCM waveform statistics to the same
-query; the Python-side decode work roughly tripled by design. The
-round-6 additions to HEADLINE (control-plane trio, GIF codec,
-shuffle_epochs, kmeans_lloyd, stream_cdc_store_live) grow the total by
-~28s of new coverage; compare shared keys, not totals.
+Attribution rule: a key's regression counts only if its code (or a
+helper it uses) changed, or its fresh-JVM isolated rerun reproduces
+it; a same-direction drift across untouched keys that the isolated
+rerun does not reproduce is machine noise. To compare two runs of
+the repository benchmark, use `python3 perfbench/diff.py PARENT
+CHANGE`.
 """
 
 from __future__ import annotations

@@ -27,9 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
@@ -117,15 +114,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view (for the SQL API)."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def list_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`ls`-equivalent: one row per table with file size — the
-    reference's `ls` + `info` diagnostics surface (SURVEY.md S4/S5)
-    as a DataFrame instead of a REPL printout."""
-    rows = []
-    for name in TABLES:
-        p = table_path(sf_dir, name)
-        size = os.path.getsize(p) if os.path.exists(p) else None
-        rows.append((name, p, size))
-    return spark.createDataFrame(rows, "table_name string, path string, size_bytes long")

@@ -25,9 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The literal field delimiter; F.split takes a Java regex, so escape
-# the '+' and '$' metacharacters.
-DELIM_LITERAL = " +++$+++ "
+# The field delimiter " +++$+++ " as a Java regex for F.split, with
+# the '+' and '$' metacharacters escaped.
 DELIM_RE = r" \+\+\+\$\+\+\+ "
 
 

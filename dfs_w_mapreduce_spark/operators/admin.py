@@ -23,9 +23,7 @@ def q_catalog_ls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`ls`: one row per catalog table with its exact row count — the
     fixture-static fact a DuckDB oracle can recompute from the same
     parquet (round-6 verdict: oracle the admin diagnostics). Counting
-    parquet is row-group-metadata-cheap at any scale. Path/size-bytes
-    operational listing (volatile: writer- and layout-dependent) stays
-    available to library users as `catalog.list_tables`."""
+    parquet is row-group-metadata-cheap at any scale."""
     out = None
     for name in TABLES:
         one = load_table(spark, sf_dir, name).agg(

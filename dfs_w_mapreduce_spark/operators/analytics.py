@@ -1758,6 +1758,46 @@ ATTRIBUTION_ORACLE = """
 ACF_MAX_LAG = 3
 
 
+def _daily_event_counts(ev: DataFrame) -> DataFrame:
+    """(event_type, day, n): each event type's count on every day of
+    the events' [min, max] day range, 0 on a day without events."""
+    bounds = ev.agg(F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi"))
+    days = bounds.select(F.explode(F.sequence("lo", "hi")).alias("day"))
+    return (
+        days.crossJoin(ev.select("event_type").distinct())
+        .join(
+            ev.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
+                F.count("*").alias("n")
+            ),
+            ["day", "event_type"],
+            "left",
+        )
+        .select("event_type", "day", F.coalesce("n", F.lit(0)).alias("n"))
+    )
+
+
+def _day_spine_ctes(value: str) -> str:
+    """DuckDB twin of _daily_event_counts: CTEs ending in daily
+    (event_type, day, value), where value reads the day's count a.n
+    (null on a day without events)."""
+    return f"""bounds AS (
+        SELECT CAST(min(ts) AS DATE) AS lo, CAST(max(ts) AS DATE) AS hi FROM events
+    ),
+    days AS (
+        SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
+        FROM bounds
+    ),
+    actual AS (
+        SELECT CAST(ts AS DATE) AS day, event_type, count(*) AS n
+        FROM events GROUP BY 1, 2
+    ),
+    daily AS (
+        SELECT t.event_type, d.day, {value}
+        FROM days d CROSS JOIN (SELECT DISTINCT event_type FROM events) t
+        LEFT JOIN actual a ON a.day = d.day AND a.event_type = t.event_type
+    )"""
+
+
 def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1..3 autocorrelation of the daily event-count series per
     event type — the seasonality probe a pipeline runs before picking
@@ -1772,20 +1812,7 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: the heavy side is one (type, day) hash aggregate
     over the fact table; everything after operates on the tiny
     per-day frame (window lag over days, then a 15-row rollup)."""
-    ev = load_table(spark, sf_dir, "events")
-    day = F.to_date("ts").alias("day")
-    bounds = ev.agg(F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi"))
-    days = bounds.select(F.explode(F.sequence("lo", "hi")).alias("day"))
-    types = ev.select("event_type").distinct()
-    daily = (
-        days.crossJoin(types)
-        .join(
-            ev.groupBy(day, "event_type").agg(F.count("*").alias("n")),
-            ["day", "event_type"],
-            "left",
-        )
-        .select("event_type", "day", F.coalesce("n", F.lit(0)).alias("n"))
-    )
+    daily = _daily_event_counts(load_table(spark, sf_dir, "events"))
     w = W.partitionBy("event_type").orderBy("day")
     lagged = daily.select(
         "event_type",
@@ -1817,23 +1844,7 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TS_AUTOCORR_ORACLE = f"""
-    WITH bounds AS (
-        SELECT CAST(min(ts) AS DATE) AS lo, CAST(max(ts) AS DATE) AS hi FROM events
-    ),
-    days AS (
-        SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
-        FROM bounds
-    ),
-    types AS (SELECT DISTINCT event_type FROM events),
-    actual AS (
-        SELECT CAST(ts AS DATE) AS day, event_type, count(*) AS n
-        FROM events GROUP BY 1, 2
-    ),
-    daily AS (
-        SELECT t.event_type, d.day, coalesce(a.n, 0) AS n
-        FROM days d CROSS JOIN types t
-        LEFT JOIN actual a ON a.day = d.day AND a.event_type = t.event_type
-    ),
+    WITH {_day_spine_ctes('coalesce(a.n, 0) AS n')},
     lagged AS (
         SELECT event_type, n,
                lag(n, 1) OVER w AS l1, lag(n, 2) OVER w AS l2,
@@ -1953,21 +1964,8 @@ def q_ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     range — 30 here; a year is 365 doubles) folded in a single
     expression. The series array is bounded by the date span, never
     by the fact-row count."""
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")
-    )
-    days = bounds.select(F.explode(F.sequence("lo", "hi")).alias("day"))
-    daily = (
-        days.crossJoin(ev.select("event_type").distinct())
-        .join(
-            ev.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
-                F.count("*").alias("n")
-            ),
-            ["day", "event_type"],
-            "left",
-        )
-        .select("event_type", "day", F.coalesce("n", F.lit(0)).cast("double").alias("x"))
+    daily = _daily_event_counts(load_table(spark, sf_dir, "events")).select(
+        "event_type", "day", F.col("n").cast("double").alias("x")
     )
     ser = daily.groupBy("event_type").agg(
         F.transform(
@@ -2011,23 +2009,7 @@ def q_ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TS_HOLT_ORACLE = f"""
-    WITH RECURSIVE bounds AS (
-        SELECT CAST(min(ts) AS DATE) AS lo, CAST(max(ts) AS DATE) AS hi FROM events
-    ),
-    days AS (
-        SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
-        FROM bounds
-    ),
-    actual AS (
-        SELECT CAST(ts AS DATE) AS day, event_type, count(*) AS n
-        FROM events GROUP BY 1, 2
-    ),
-    daily AS (
-        SELECT t.event_type, d.day,
-               CAST(coalesce(a.n, 0) AS DOUBLE) AS x
-        FROM days d CROSS JOIN (SELECT DISTINCT event_type FROM events) t
-        LEFT JOIN actual a ON a.day = d.day AND a.event_type = t.event_type
-    ),
+    WITH RECURSIVE {_day_spine_ctes('CAST(coalesce(a.n, 0) AS DOUBLE) AS x')},
     ser AS (
         SELECT event_type, list(x ORDER BY day) AS xs FROM daily GROUP BY 1
     ),
@@ -2174,21 +2156,8 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (type, day) hash aggregate, a type-partitioned
     cumulative window over the tiny day frame, and a WindowGroupLimit
     rank to pick the peak. Nothing global."""
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")
-    )
-    days = bounds.select(F.explode(F.sequence("lo", "hi")).alias("day"))
-    daily = (
-        days.crossJoin(ev.select("event_type").distinct())
-        .join(
-            ev.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
-                F.count("*").alias("n")
-            ),
-            ["day", "event_type"],
-            "left",
-        )
-        .select("event_type", "day", F.coalesce("n", F.lit(0)).alias("x"))
+    daily = _daily_event_counts(load_table(spark, sf_dir, "events")).withColumnRenamed(
+        "n", "x"
     )
     wt = W.partitionBy("event_type")
     stats = daily.withColumn("n_days", F.count("*").over(wt)).withColumn(
@@ -2217,23 +2186,8 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-TS_CHANGEPOINT_ORACLE = """
-    WITH bounds AS (
-        SELECT CAST(min(ts) AS DATE) AS lo, CAST(max(ts) AS DATE) AS hi FROM events
-    ),
-    days AS (
-        SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
-        FROM bounds
-    ),
-    actual AS (
-        SELECT CAST(ts AS DATE) AS day, event_type, count(*) AS n
-        FROM events GROUP BY 1, 2
-    ),
-    daily AS (
-        SELECT t.event_type, d.day, CAST(coalesce(a.n, 0) AS BIGINT) AS x
-        FROM days d CROSS JOIN (SELECT DISTINCT event_type FROM events) t
-        LEFT JOIN actual a ON a.day = d.day AND a.event_type = t.event_type
-    ),
+TS_CHANGEPOINT_ORACLE = f"""
+    WITH {_day_spine_ctes('CAST(coalesce(a.n, 0) AS BIGINT) AS x')},
     stats AS (
         SELECT event_type, day, x,
                count(*) OVER wt AS n_days,

@@ -31,7 +31,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
@@ -372,22 +372,7 @@ def q_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fan_out(
         spark, load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    toks = F.split("text", " ")
-    npos = F.size(toks) - (SPAN_N - 1)
-    grams = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.when(npos >= 1, F.sequence(F.lit(1), npos)).otherwise(F.array())
-            ).alias("pos"),
-            toks.alias("toks"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            md5_long(F.array_join(F.slice("toks", F.col("pos"), SPAN_N), " ")).alias("h"),
-        )
-    )
+    grams = _span_grams(d)
     hot = (
         grams.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("n_docs"))
@@ -408,21 +393,41 @@ def q_dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the SPAN_N-token gram at `pos` of the token list `l` (DuckDB)
-_SPAN_GRAM_SQL = (
-    f"array_to_string(l[CAST(pos AS INT):CAST(pos AS INT) + {SPAN_N - 1}], ' ')"
-)
+def _span_grams(d: DataFrame) -> DataFrame:
+    """(doc_id, pos, h): the 60-bit hash of the SPAN_N-token gram that
+    starts at each 1-based token position pos of d's space-split text."""
+    toks = F.split("text", " ")
+    npos = F.size(toks) - (SPAN_N - 1)
+    return (
+        d.select(
+            "doc_id",
+            F.explode(
+                F.when(npos >= 1, F.sequence(F.lit(1), npos)).otherwise(F.array())
+            ).alias("pos"),
+            toks.alias("toks"),
+        )
+        .select(
+            "doc_id",
+            "pos",
+            md5_long(F.array_join(F.slice("toks", F.col("pos"), SPAN_N), " ")).alias("h"),
+        )
+    )
 
-DUP_NGRAM_SPANS_ORACLE = f"""
-    WITH grams AS (
+
+# DuckDB twin of _span_grams: the CTEs t (doc_id, token list l) and
+# grams (doc_id, pos, h)
+_SPAN_GRAMS_CTES = f"""t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
+    grams AS (
         SELECT doc_id, pos,
-               {md5_long_sql(_SPAN_GRAM_SQL)} AS h
+               {md5_long_sql(f"array_to_string(l[CAST(pos AS INT):CAST(pos AS INT) + {SPAN_N - 1}], ' ')")} AS h
         FROM (
             SELECT doc_id, l, unnest(range(1, len(l) - {SPAN_N - 1} + 1)) AS pos
-            FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
-            WHERE len(l) - {SPAN_N - 1} >= 1
+            FROM t WHERE len(l) - {SPAN_N - 1} >= 1
         )
-    ),
+    )"""
+
+DUP_NGRAM_SPANS_ORACLE = f"""
+    WITH {_SPAN_GRAMS_CTES},
     hot AS (
         SELECT h, count(DISTINCT doc_id) AS n_docs
         FROM grams GROUP BY h HAVING count(DISTINCT doc_id) >= 2
@@ -466,21 +471,7 @@ def q_dedup_span_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.posexplode(toks).alias("pos0", "tok"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
-    npos = F.size(toks) - (SPAN_N - 1)
-    grams = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.when(npos >= 1, F.sequence(F.lit(1), npos)).otherwise(F.array())
-            ).alias("pos"),
-            toks.alias("toks"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            md5_long(F.array_join(F.slice("toks", F.col("pos"), SPAN_N), " ")).alias("h"),
-        )
-    )
+    grams = _span_grams(d)
     owners = (
         grams.groupBy("h")
         .agg(
@@ -526,18 +517,10 @@ def q_dedup_span_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_SPAN_APPLY_ORACLE = f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
+    WITH {_SPAN_GRAMS_CTES},
     tok_stream AS (
         SELECT doc_id, pos, l[CAST(pos AS INT)] AS tok
         FROM (SELECT doc_id, l, unnest(range(1, len(l) + 1)) AS pos FROM t)
-    ),
-    grams AS (
-        SELECT doc_id, pos,
-               {md5_long_sql(_SPAN_GRAM_SQL)} AS h
-        FROM (
-            SELECT doc_id, l, unnest(range(1, len(l) - {SPAN_N - 1} + 1)) AS pos
-            FROM t WHERE len(l) - {SPAN_N - 1} >= 1
-        )
     ),
     owners AS (
         SELECT h, min(doc_id) AS owner
@@ -1087,6 +1070,38 @@ def _importance_resample_oracle() -> str:
     """
 
 
+def _doc_host_domain() -> tuple[Column, Column]:
+    """(host, domain) of each document's synthetic URL
+    https://{www|cdn|blog}.<source>.org/docs/<doc_id>?lang=<lang>: the
+    host parsed back out of it, and its registrable domain, the last
+    two labels."""
+    sub = (
+        F.when(F.col("doc_id") % 3 == 0, F.lit("www"))
+        .when(F.col("doc_id") % 3 == 1, F.lit("cdn"))
+        .otherwise(F.lit("blog"))
+    )
+    url = F.concat(
+        F.lit("https://"), sub, F.lit("."), F.col("source"),
+        F.lit(".org/docs/"), F.col("doc_id").cast("string"),
+        F.lit("?lang="), F.col("lang"),
+    )
+    host = F.parse_url(url, F.lit("HOST"))
+    parts = F.split(host, r"\.")
+    return host, F.concat_ws(".", F.element_at(parts, -2), F.element_at(parts, -1))
+
+
+# DuckDB twins of _doc_host_domain
+_DOC_HOST_SQL = """regexp_extract(
+                'https://' ||
+                CASE WHEN doc_id % 3 = 0 THEN 'www'
+                     WHEN doc_id % 3 = 1 THEN 'cdn'
+                     ELSE 'blog' END
+                || '.' || source || '.org/docs/'
+                || CAST(doc_id AS VARCHAR) || '?lang=' || lang,
+                'https://([^/?]+)', 1)"""
+_DOC_DOMAIN_SQL = f"regexp_extract({_DOC_HOST_SQL}, '([^.]+\\.[^.]+)$', 1)"
+
+
 def q_corpus_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL/host-level corpus governance rollup — the per-domain cut
     CCNet/RefinedWeb-style curation makes before sampling: synthesize
@@ -1108,21 +1123,7 @@ def q_corpus_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Domains are the natural partition key for every downstream
     per-domain sampling decision."""
     d = load_table(spark, sf_dir, "documents")
-    sub = (
-        F.when(F.col("doc_id") % 3 == 0, F.lit("www"))
-        .when(F.col("doc_id") % 3 == 1, F.lit("cdn"))
-        .otherwise(F.lit("blog"))
-    )
-    url = F.concat(
-        F.lit("https://"), sub, F.lit("."), F.col("source"),
-        F.lit(".org/docs/"), F.col("doc_id").cast("string"),
-        F.lit("?lang="), F.col("lang"),
-    )
-    host = F.parse_url(url, F.lit("HOST"))
-    parts = F.split(host, r"\.")
-    domain = F.concat_ws(
-        ".", F.element_at(parts, -2), F.element_at(parts, -1)
-    )
+    host, domain = _doc_host_domain()
     base = d.select(
         domain.alias("domain"),
         host.alias("host"),
@@ -1266,18 +1267,7 @@ def q_quality_domain_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    sub = (
-        F.when(F.col("doc_id") % 3 == 0, F.lit("www"))
-        .when(F.col("doc_id") % 3 == 1, F.lit("cdn"))
-        .otherwise(F.lit("blog"))
-    )
-    url = F.concat(
-        F.lit("https://"), sub, F.lit("."), F.col("source"),
-        F.lit(".org/docs/"), F.col("doc_id").cast("string"),
-        F.lit("?lang="), F.col("lang"),
-    )
-    parts = F.split(F.parse_url(url, F.lit("HOST")), r"\.")
-    domain = F.concat_ws(".", F.element_at(parts, -2), F.element_at(parts, -1))
+    _, domain = _doc_host_domain()
     base = d.select(
         "doc_id", domain.alias("domain"), F.md5("text").alias("th")
     )
@@ -1307,17 +1297,7 @@ def _quality_domain_ensemble_oracle() -> str:
     return f"""
     WITH {GOPHER_DOC_CTES},
     dom AS (
-        SELECT doc_id,
-               regexp_extract(
-                   regexp_extract(
-                       'https://' ||
-                       CASE WHEN doc_id % 3 = 0 THEN 'www'
-                            WHEN doc_id % 3 = 1 THEN 'cdn'
-                            ELSE 'blog' END
-                       || '.' || source || '.org/docs/'
-                       || CAST(doc_id AS VARCHAR) || '?lang=' || lang,
-                       'https://([^/?]+)', 1),
-                   '([^.]+\\.[^.]+)$', 1) AS domain,
+        SELECT doc_id, {_DOC_DOMAIN_SQL} AS domain,
                md5(text) AS th
         FROM documents
     ),
@@ -1471,26 +1451,8 @@ URL_CANONICAL_DEDUP_ORACLE = f"""
 CORPUS_DOMAIN_ROLLUP_ORACLE = f"""
     WITH base AS (
         SELECT
-            -- registrable domain = last two labels of the host parsed
-            -- back out of the synthesized URL (mirrors parse_url HOST)
-            regexp_extract(
-                regexp_extract(
-                    'https://' ||
-                    CASE WHEN doc_id % 3 = 0 THEN 'www'
-                         WHEN doc_id % 3 = 1 THEN 'cdn'
-                         ELSE 'blog' END
-                    || '.' || source || '.org/docs/'
-                    || CAST(doc_id AS VARCHAR) || '?lang=' || lang,
-                    'https://([^/?]+)', 1),
-                '([^.]+\\.[^.]+)$', 1) AS domain,
-            regexp_extract(
-                'https://' ||
-                CASE WHEN doc_id % 3 = 0 THEN 'www'
-                     WHEN doc_id % 3 = 1 THEN 'cdn'
-                     ELSE 'blog' END
-                || '.' || source || '.org/docs/'
-                || CAST(doc_id AS VARCHAR) || '?lang=' || lang,
-                'https://([^/?]+)', 1) AS host,
+            {_DOC_DOMAIN_SQL} AS domain,
+            {_DOC_HOST_SQL} AS host,
             lang,
             md5(text) AS th,
             len({ws_tokens_sql('text')})

@@ -219,30 +219,43 @@ def _common_shingle_counts(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
     UNCAPPED exact inverted-index co-occurrence core, now used only
     where an outer bound already exists (dedup_agreement's fixed-size
     doc sample); the full-corpus baselines go through
-    _capped_common_counts. Carries the two hard-won OOM guards:
-    shuffle_hash (never broadcast the exploded corpus) and
-    pre-aggregation repartition (no partial-agg map over the
-    quadratic pair stream)."""
+    _capped_common_counts."""
     sizes = sh.select("doc_id", F.size("sh").alias("n"))
-    # Join on a 60-bit md5-derived long, not the shingle string: the
-    # inverted-index shuffle and join hash tables then carry 8-byte
-    # keys instead of ~15-char strings (the memory peak of this
-    # operator). Distinct shingles collide with ~2^-60 probability;
-    # the oracle hashes identically so both engines agree regardless.
-    ex = sh.select("doc_id", F.explode("sh").alias("s0")).select(
-        "doc_id",
-        md5_long("s0").alias("s"),
-    )
-    # Materialize the exploded hashed-occurrence stream ONCE,
-    # co-partitioned on the shingle key (r11, mirroring
-    # _capped_common_counts): the self-join otherwise runs the
-    # explode + md5 pipeline once per side and each side pays its own
-    # hash(s) exchange; the cached HashPartitioning(s) layout
-    # satisfies both sides exchange-free.
+    return _count_common(_hashed_occurrences(sh)), sizes
+
+
+def _hashed_occurrences(sh: DataFrame) -> DataFrame:
+    """(doc_id, sh) -> (doc_id, s): every shingle occurrence as a
+    60-bit md5-derived long, repartitioned on s and cached.
+
+    The long key puts 8-byte keys instead of ~15-char strings in the
+    inverted-index shuffle and join hash tables (the memory peak of
+    this operator); distinct shingles collide with ~2^-60 probability
+    and the oracle hashes identically, so both engines agree
+    regardless. Materializing the stream once, co-partitioned on s,
+    runs the explode + md5 pipeline once for all consumers:
+    the HashPartitioning(s) layout satisfies both sides of the
+    self-join, the plan-pick stat groupBy and the rank window without
+    an exchange. The cache (MEMORY_AND_DISK, the tfidf tf.cache()
+    precedent) holds the bytes the uncached plan wrote to its shuffle
+    files and spills gracefully."""
     sh_parts = max(64, sh.sparkSession.sparkContext.defaultParallelism * 2)
-    ex = ex.repartition(sh_parts, "s").cache()
+    return (
+        sh.select("doc_id", F.explode("sh").alias("s0"))
+        .select("doc_id", md5_long("s0").alias("s"))
+        .repartition(sh_parts, "s")
+        .cache()
+    )
+
+
+def _count_common(ex: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, common) for every doc pair sharing a key of ex
+    (doc_id, s), doc_a < doc_b: the exact inverted-index self-join.
+    Carries the two hard-won OOM guards: shuffle_hash (never broadcast
+    the exploded corpus) and pre-aggregation repartition (no
+    partial-agg map over the quadratic pair stream)."""
     a, b = ex.alias("a"), ex.alias("b")
-    common = (
+    return (
         # shuffle_hash hint: the exploded corpus-sized frame must
         # never be broadcast (AQE would try at fixture scale and build a
         # hundreds-of-MB HashedRelation in the driver heap; observed
@@ -260,12 +273,11 @@ def _common_shingle_counts(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
         # pressured 1g heap), and the count runs on many small
         # co-partitioned tasks with no further exchange.
         .repartition(
-            sh.sparkSession.sparkContext.defaultParallelism * 4, "doc_a", "doc_b"
+            ex.sparkSession.sparkContext.defaultParallelism * 4, "doc_a", "doc_b"
         )
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("common"))
     )
-    return common, sizes
 
 
 # Per-shingle candidate-generation posting cap for the VERIFY branch,
@@ -326,29 +338,9 @@ def _capped_common_counts(
     df fits the cap to the exact count path, so this branch runs only
     where capping genuinely engages."""
     sizes = sh.select("doc_id", F.size("sh").alias("n"))
-    # Build the exploded hashed-occurrence stream ONCE, repartitioned
-    # on the shingle key and cached (r11): the stat aggregate, the
-    # count-path self-join, and the verify-branch rank window ALL
-    # consume ex keyed by s — without this the shingling + explode +
-    # md5 pipeline executed once per consumer and the stat and the
-    # join each paid their own hash(s) exchange. The cached frame's
-    # HashPartitioning(s) pre-satisfies every consumer: the stat
-    # groupBy and the rank window run exchange-free, and the
-    # self-join is co-partitioned on both sides (zero join
-    # exchanges). Cache follows the tfidf tf.cache() precedent:
-    # MEMORY_AND_DISK, occurrence-stream-sized (the same bytes the
-    # old plan wrote to its shuffle files), spills gracefully.
-    sh_parts = max(64, spark.sparkContext.defaultParallelism * 2)
-    ex = (
-        sh.select("doc_id", F.explode("sh").alias("s0"))
-        .select(
-            "doc_id",
-            # 60-bit md5-derived join key: 8-byte shuffle keys, oracle-equal
-            md5_long("s0").alias("s"),
-        )
-        .repartition(sh_parts, "s")
-        .cache()
-    )
+    # the stat aggregate, the count-path self-join and the
+    # verify-branch rank window all consume ex keyed by s
+    ex = _hashed_occurrences(sh)
     # Runtime plan pick (the tfidf_plan_pick discipline): one
     # map-side-combining stat aggregate computes the exact count
     # path's cost — sum(df^2), its join fan-out row count — and takes
@@ -374,28 +366,7 @@ def _capped_common_counts(
             or 0
         )
         if mass <= NGRAM_COUNT_PATH_BUDGET:
-            # exact count path over the CACHED co-partitioned ex: the
-            # same join/aggregate as _common_shingle_counts, minus its
-            # separate shingling pass and both join-side exchanges
-            a, b = ex.alias("a"), ex.alias("b")
-            common = (
-                a.hint("shuffle_hash")
-                .join(
-                    b,
-                    (F.col("a.s") == F.col("b.s"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")),
-                )
-                .select(
-                    F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                )
-                .repartition(
-                    spark.sparkContext.defaultParallelism * 4, "doc_a", "doc_b"
-                )
-                .groupBy("doc_a", "doc_b")
-                .agg(F.count("*").alias("common"))
-            )
-            return common, sizes
+            return _count_common(ex), sizes
     kept = (
         ex.withColumn(
             # GLOBAL per-doc rank key (see NGRAM_POSTING_CAP): identical
@@ -700,15 +671,52 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a cached array is cheap on both sides.
     cand = _band_candidates(bands)
     # Verification re-joins shingle sets for surviving candidates only.
-    sa, sb = _merge_join(sh, sf_dir).alias("sa"), _merge_join(sh, sf_dir).alias("sb")
+    return _jaccard_verified(
+        cand, "doc_a", "doc_b", _merge_join(sh, sf_dir), _merge_join(sh, sf_dir)
+    )
+
+
+def _shingle_pairs(cand: DataFrame, a: str, b: str, sa: DataFrame, sb: DataFrame) -> DataFrame:
+    """cand with the shingle frame sa (doc_id, sh) joined on its column
+    a and sb on b, aliased sa and sb for _pair_jaccard."""
+    sa, sb = sa.alias("sa"), sb.alias("sb")
+    return cand.join(sa, F.col(a) == F.col("sa.doc_id")).join(
+        sb, F.col(b) == F.col("sb.doc_id")
+    )
+
+
+def _pair_jaccard() -> Column:
+    """Exact Jaccard of the joined shingle sets sa.sh and sb.sh, 4 dp."""
     inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
     union = F.size("sa.sh") + F.size("sb.sh") - inter
+    return F.round(inter / union, 4)
+
+
+def _jaccard_verified(
+    cand: DataFrame, a: str, b: str, sa: DataFrame, sb: DataFrame,
+    out_a: str | None = None, out_b: str | None = None, threshold: float = JACCARD_T,
+) -> DataFrame:
+    """The pairs (a, b) of cand whose shingle sets in sa and sb have
+    exact Jaccard >= threshold, as (out_a, out_b, jaccard)."""
+    def keep(c, out):
+        return c if out is None else F.col(c).alias(out)
+
     return (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", F.round(inter / union, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_T)
+        _shingle_pairs(cand, a, b, sa, sb)
+        .select(keep(a, out_a), keep(b, out_b), _pair_jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
+
+
+# DuckDB twins: _pair_jaccard over the joined shs rows sa and sb, and
+# the band self-join of _band_candidates over a bands CTE
+_PAIR_JACCARD_SQL = """round(len(list_intersect(sa.sh, sb.sh)) * 1.0 /
+                     (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)"""
+_BAND_CAND_CTE = """cand AS (
+            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+            FROM bands a JOIN bands b
+              ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+        )"""
 
 
 def _minhash_bands_ctes() -> str:
@@ -722,19 +730,12 @@ def _minhash_bands_ctes() -> str:
 def _minhash_oracle() -> str:
     return f"""
         WITH {_minhash_bands_ctes()},
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        )
-        SELECT doc_a, doc_b,
-               round(len(list_intersect(sa.sh, sb.sh)) * 1.0 /
-                     (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4) AS jaccard
+        {_BAND_CAND_CTE}
+        SELECT doc_a, doc_b, {_PAIR_JACCARD_SQL} AS jaccard
         FROM cand
         JOIN shs sa ON doc_a = sa.doc_id
         JOIN shs sb ON doc_b = sb.doc_id
-        WHERE round(len(list_intersect(sa.sh, sb.sh)) * 1.0 /
-                    (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4) >= {JACCARD_T}
+        WHERE {_PAIR_JACCARD_SQL} >= {JACCARD_T}
     """
 
 
@@ -773,18 +774,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("new_id", "base_id")
         .distinct()
     )
-    sa, sb = _merge_join(sh, sf_dir).alias("sa"), _merge_join(sh, sf_dir).alias("sb")
-    inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
-    union = F.size("sa.sh") + F.size("sb.sh") - inter
-    return (
-        cand.join(sa, F.col("new_id") == F.col("sa.doc_id"))
-        .join(sb, F.col("base_id") == F.col("sb.doc_id"))
-        .select(
-            F.col("new_id").alias("doc_id"),
-            F.col("base_id").alias("dup_of"),
-            F.round(inter / union, 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_T)
+    return _jaccard_verified(
+        cand, "new_id", "base_id", _merge_join(sh, sf_dir), _merge_join(sh, sf_dir),
+        "doc_id", "dup_of",
     )
 
 
@@ -821,22 +813,19 @@ def _band_rows_sql() -> str:
 
 
 def _incremental_oracle() -> str:
-    jac = ("len(list_intersect(sa.sh, sb.sh)) * 1.0 / "
-           "(len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))")
     return f"""
-        WITH {_minhash_sig_sql()},
-        bands AS ({_band_rows_sql()}),
+        WITH {_minhash_bands_ctes()},
         cand AS (
             SELECT DISTINCT d.doc_id AS new_id, b.doc_id AS base_id
             FROM bands d JOIN bands b ON d.band = b.band AND d.sig = b.sig
             WHERE d.doc_id % {DELTA_MOD} >= {DELTA_CUT}
               AND b.doc_id % {DELTA_MOD} < {DELTA_CUT}
         )
-        SELECT new_id AS doc_id, base_id AS dup_of, round({jac}, 4) AS jaccard
+        SELECT new_id AS doc_id, base_id AS dup_of, {_PAIR_JACCARD_SQL} AS jaccard
         FROM cand
         JOIN shs sa ON new_id = sa.doc_id
         JOIN shs sb ON base_id = sb.doc_id
-        WHERE round({jac}, 4) >= {JACCARD_T}
+        WHERE {_PAIR_JACCARD_SQL} >= {JACCARD_T}
     """
 
 
@@ -850,15 +839,11 @@ def q_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 0.5 threshold on this corpus."""
     sh, bands = minhash_band_frames(spark, sf_dir)
     cand = _band_candidates(bands)
-    sa, sb = _merge_join(sh, sf_dir).alias("sa"), _merge_join(sh, sf_dir).alias("sb")
     n_match = F.expr("size(filter(zip_with(sa.mh, sb.mh, (x, y) -> x = y), m -> m))")
-    inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
-    union = F.size("sa.sh") + F.size("sb.sh") - inter
     est = F.round(n_match / float(len(MINHASH_AB)), 4)
-    jac = F.round(inter / union, 4)
+    jac = _pair_jaccard()
     return (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        _shingle_pairs(cand, "doc_a", "doc_b", _merge_join(sh, sf_dir), _merge_join(sh, sf_dir))
         .select(
             "doc_a",
             "doc_b",
@@ -874,21 +859,14 @@ def _minhash_estimate_oracle() -> str:
         f"(CASE WHEN ga.mh{i} = gb.mh{i} THEN 1 ELSE 0 END)"
         for i in range(len(MINHASH_AB))
     )
-    jac = ("len(list_intersect(sa.sh, sb.sh)) * 1.0 / "
-           "(len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))")
     return f"""
-        WITH {_minhash_sig_sql()},
-        bands AS ({_band_rows_sql()}),
-        cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        )
+        WITH {_minhash_bands_ctes()},
+        {_BAND_CAND_CTE}
         SELECT doc_a, doc_b,
                round(({n_match}) / {float(len(MINHASH_AB))}, 4) AS est_jaccard,
-               round({jac}, 4) AS jaccard,
+               {_PAIR_JACCARD_SQL} AS jaccard,
                round(abs(round(({n_match}) / {float(len(MINHASH_AB))}, 4)
-                         - round({jac}, 4)), 4) AS abs_err
+                         - {_PAIR_JACCARD_SQL}), 4) AS abs_err
         FROM cand
         JOIN sig ga ON doc_a = ga.doc_id
         JOIN sig gb ON doc_b = gb.doc_id
@@ -996,17 +974,9 @@ def q_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sa, sb = _merge_join(sh, sf_dir).alias("sa"), _merge_join(sh, sf_dir).alias("sb")
-    inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
-    union = F.size("sa.sh") + F.size("sb.sh") - inter
-    ver = (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "cfg", "doc_a", "doc_b",
-            (F.round(inter / union, 4) >= JACCARD_T).alias("is_true"),
-        )
-    )
+    ver = _shingle_pairs(
+        cand, "doc_a", "doc_b", _merge_join(sh, sf_dir), _merge_join(sh, sf_dir)
+    ).select("cfg", "doc_a", "doc_b", (_pair_jaccard() >= JACCARD_T).alias("is_true"))
     n_union = (
         ver.filter("is_true")
         .select("doc_a", "doc_b")
@@ -1040,8 +1010,6 @@ def _minhash_band_sweep_oracle() -> str:
             band_rows.append(
                 f"SELECT '{nb}x{rpb}' AS cfg, doc_id, {b} AS band, {sig_expr} AS sig FROM sig"
             )
-    jac = ("len(list_intersect(sa.sh, sb.sh)) * 1.0 / "
-           "(len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))")
     return f"""
         WITH {_minhash_sig_sql()},
         all_bands AS ({" UNION ALL ".join(band_rows)}),
@@ -1066,7 +1034,7 @@ def _minhash_band_sweep_oracle() -> str:
                  AND a.doc_id < b.doc_id
         ),
         ver AS (
-            SELECT cfg, doc_a, doc_b, round({jac}, 4) >= {JACCARD_T} AS is_true
+            SELECT cfg, doc_a, doc_b, {_PAIR_JACCARD_SQL} >= {JACCARD_T} AS is_true
             FROM cand
             JOIN shs sa ON doc_a = sa.doc_id
             JOIN shs sb ON doc_b = sb.doc_id
@@ -1335,15 +1303,7 @@ def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached so the self-join computes the 16-minhash transform once
     # (r11; sample-bounded — <= 4 * AGREEMENT_SAMPLE rows)
     cand = _band_candidates(_bands_of(_signed(shp)).cache())
-    sa, sb = shp.alias("sa"), shp.alias("sb")
-    inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
-    union = F.size("sa.sh") + F.size("sb.sh") - inter
-    mh = (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", F.round(inter / union, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_T)
-    )
+    mh = _jaccard_verified(cand, "doc_a", "doc_b", shp, shp)
     # simhash member: the sketch is doc-local, so the sample prune is
     # pushed BELOW the 48-sum token aggregate (r11) — the sketch scan
     # tokenizes only the 2000 sampled documents instead of sketching

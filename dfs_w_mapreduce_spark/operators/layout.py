@@ -65,6 +65,38 @@ def _zvalue_sql(x: str, y: str) -> str:
     return "(" + " | ".join(parts) + ")"
 
 
+def _scaled_keys(li: DataFrame, x: str, y: str) -> DataFrame:
+    """lineitem's (l_partkey, l_suppkey) min/max-normalized into the
+    ZBITS-bit grid as columns x and y."""
+    bounds = li.agg(
+        F.min("l_partkey").alias("pmin"),
+        F.max("l_partkey").alias("pmax"),
+        F.min("l_suppkey").alias("smin"),
+        F.max("l_suppkey").alias("smax"),
+    )
+    # min/max-normalize each key into the 10-bit z domain with pure
+    # integer division (`div`): exact on both engines at any SF, unlike
+    # a double divide whose floor can straddle a boundary ulp.
+    return li.crossJoin(F.broadcast(bounds)).select(
+        F.expr(f"(l_partkey - pmin) * {1 << ZBITS} div (pmax - pmin + 1)").alias(x),
+        F.expr(f"(l_suppkey - smin) * {1 << ZBITS} div (smax - smin + 1)").alias(y),
+    )
+
+
+def _scaled_keys_ctes(x: str, y: str) -> str:
+    """DuckDB twin of _scaled_keys: the CTEs bounds and pts (x, y)."""
+    return f"""bounds AS (
+            SELECT min(l_partkey) AS pmin, max(l_partkey) AS pmax,
+                   min(l_suppkey) AS smin, max(l_suppkey) AS smax
+            FROM lineitem
+        ),
+        pts AS (
+            SELECT CAST((l_partkey - pmin) * {1 << ZBITS} // (pmax - pmin + 1) AS BIGINT) AS {x},
+                   CAST((l_suppkey - smin) * {1 << ZBITS} // (smax - smin + 1) AS BIGINT) AS {y}
+            FROM lineitem CROSS JOIN bounds
+        )"""
+
+
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order lineitem on (l_partkey, l_suppkey) and report each
     layout bucket's min/max envelope on both dimensions.
@@ -76,20 +108,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     `repartitionByRange(zvalue).sortWithinPartitions(zvalue)` rewrite;
     the bucket envelope aggregation below is the evidence query and is
     a single hash-agg over integer columns — exactly reproducible."""
-    li = load_table(spark, sf_dir, "lineitem")
-    bounds = li.agg(
-        F.min("l_partkey").alias("pmin"),
-        F.max("l_partkey").alias("pmax"),
-        F.min("l_suppkey").alias("smin"),
-        F.max("l_suppkey").alias("smax"),
-    )
-    # min/max-normalize each key into the 10-bit z domain with pure
-    # integer division (`div`): exact on both engines at any SF, unlike
-    # a double divide whose floor can straddle a boundary ulp.
-    scaled = li.crossJoin(F.broadcast(bounds)).select(
-        F.expr(f"(l_partkey - pmin) * {1 << ZBITS} div (pmax - pmin + 1)").alias("x"),
-        F.expr(f"(l_suppkey - smin) * {1 << ZBITS} div (smax - smin + 1)").alias("y"),
-    )
+    scaled = _scaled_keys(load_table(spark, sf_dir, "lineitem"), "x", "y")
     z = _zvalue_spark(F.col("x"), F.col("y"))
     return (
         scaled.select("x", "y", F.shiftright(z, ZBUCKET_SHIFT).alias("bucket"))
@@ -107,16 +126,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zorder_oracle() -> str:
     z = _zvalue_sql("x", "y")
     return f"""
-        WITH bounds AS (
-            SELECT min(l_partkey) AS pmin, max(l_partkey) AS pmax,
-                   min(l_suppkey) AS smin, max(l_suppkey) AS smax
-            FROM lineitem
-        ),
-        pts AS (
-            SELECT CAST((l_partkey - pmin) * {1 << ZBITS} // (pmax - pmin + 1) AS BIGINT) AS x,
-                   CAST((l_suppkey - smin) * {1 << ZBITS} // (smax - smin + 1) AS BIGINT) AS y
-            FROM lineitem CROSS JOIN bounds
-        )
+        WITH {_scaled_keys_ctes('x', 'y')}
         SELECT ({z} >> {ZBUCKET_SHIFT}) AS bucket,
                count(*) AS n_rows,
                min(x) AS min_x, max(x) AS max_x,
@@ -166,17 +176,7 @@ def q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (see _hilbert_d). At 100 TB the rewrite is a one-time
     repartitionByRange(d) + sortWithinPartitions(d); this evidence
     aggregation is one hash-agg over integers."""
-    li = load_table(spark, sf_dir, "lineitem")
-    bounds = li.agg(
-        F.min("l_partkey").alias("pmin"),
-        F.max("l_partkey").alias("pmax"),
-        F.min("l_suppkey").alias("smin"),
-        F.max("l_suppkey").alias("smax"),
-    )
-    scaled = li.crossJoin(F.broadcast(bounds)).select(
-        F.expr(f"(l_partkey - pmin) * {1 << ZBITS} div (pmax - pmin + 1)").alias("xi"),
-        F.expr(f"(l_suppkey - smin) * {1 << ZBITS} div (smax - smin + 1)").alias("yi"),
-    )
+    scaled = _scaled_keys(load_table(spark, sf_dir, "lineitem"), "xi", "yi")
     walked = _hilbert_d(
         scaled.select(
             "xi", "yi",
@@ -214,16 +214,7 @@ def _hilbert_oracle() -> str:
                  + ((y >> {k}) & 1) * (1 - 2 * ((x >> {k}) & 1))) AS d
             FROM ({walk})"""
     return f"""
-        WITH bounds AS (
-            SELECT min(l_partkey) AS pmin, max(l_partkey) AS pmax,
-                   min(l_suppkey) AS smin, max(l_suppkey) AS smax
-            FROM lineitem
-        ),
-        pts AS (
-            SELECT CAST((l_partkey - pmin) * {1 << ZBITS} // (pmax - pmin + 1) AS BIGINT) AS xi,
-                   CAST((l_suppkey - smin) * {1 << ZBITS} // (smax - smin + 1) AS BIGINT) AS yi
-            FROM lineitem CROSS JOIN bounds
-        )
+        WITH {_scaled_keys_ctes('xi', 'yi')}
         SELECT (d >> {ZBUCKET_SHIFT}) AS bucket,
                count(*) AS n_rows,
                min(xi) AS min_x, max(xi) AS max_x,

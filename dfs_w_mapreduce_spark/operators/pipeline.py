@@ -18,7 +18,7 @@ tokenization:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
@@ -154,6 +154,7 @@ def q_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from dfs_w_mapreduce_spark.operators.dedup import (
+        _jaccard_verified,
         _merge_join,
         minhash_band_frames,
     )
@@ -185,17 +186,9 @@ def q_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sa = _merge_join(sh, sf_dir).alias("sa")
-    sb = _merge_join(sh, sf_dir).alias("sb")
-    inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
-    union = F.size("sa.sh") + F.size("sb.sh") - inter
-    scored = (
-        cand.join(sa, F.col("corpus_id") == F.col("sa.doc_id"))
-        .join(sb, F.col("bench_id") == F.col("sb.doc_id"))
-        .select(
-            "corpus_id", "bench_id", F.round(inter / union, 4).alias("jaccard")
-        )
-        .filter(F.col("jaccard") >= DECON_MINHASH_T)
+    scored = _jaccard_verified(
+        cand, "corpus_id", "bench_id", _merge_join(sh, sf_dir), _merge_join(sh, sf_dir),
+        threshold=DECON_MINHASH_T,
     )
     win = W.partitionBy("corpus_id").orderBy(
         F.desc("jaccard"), F.col("bench_id")
@@ -211,7 +204,10 @@ def q_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decontaminate_minhash_oracle() -> str:
-    from dfs_w_mapreduce_spark.operators.dedup import _minhash_bands_ctes
+    from dfs_w_mapreduce_spark.operators.dedup import (
+        _PAIR_JACCARD_SQL,
+        _minhash_bands_ctes,
+    )
 
     return f"""
         WITH {_minhash_bands_ctes()},
@@ -228,10 +224,7 @@ def _decontaminate_minhash_oracle() -> str:
                  <> (b.doc_id % {DECON_MINHASH_MOD} = 0)
         ),
         scored AS (
-            SELECT corpus_id, bench_id,
-                   round(len(list_intersect(sa.sh, sb.sh)) * 1.0 /
-                         (len(sa.sh) + len(sb.sh)
-                          - len(list_intersect(sa.sh, sb.sh))), 4) AS jaccard
+            SELECT corpus_id, bench_id, {_PAIR_JACCARD_SQL} AS jaccard
             FROM cand
             JOIN shs sa ON corpus_id = sa.doc_id
             JOIN shs sb ON bench_id = sb.doc_id
@@ -375,18 +368,31 @@ PACK_SEQUENCES_ORACLE = f"""
 SPLIT_TRAIN_PCT, SPLIT_VAL_PCT = 80, 90
 
 
+def _split_of_doc() -> Column:
+    """The split of each document: train, val or test by
+    h31(doc_id) % 100 against the SPLIT_*_PCT thresholds."""
+    h = _h31_spark(F.col("doc_id").cast("string")) % 100
+    return (
+        F.when(h < SPLIT_TRAIN_PCT, F.lit("train"))
+        .when(h < SPLIT_VAL_PCT, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+
+
+def _split_of_doc_sql() -> str:
+    h = _h31_sql("CAST(doc_id AS VARCHAR)")
+    return f"""CASE WHEN {h} % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
+                    WHEN {h} % 100 < {SPLIT_VAL_PCT} THEN 'val'
+                    ELSE 'test' END"""
+
+
 def q_split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment: the split follows the
     document hash, not row order, so it is stable across reruns,
     engines, and repartitioning — then rolled up per (source, split)
     to verify the mix. Single hash-agg; scan-bound at 100 TB."""
     d = load_table(spark, sf_dir, "documents")
-    h = _h31_spark(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(h < SPLIT_TRAIN_PCT, F.lit("train"))
-        .when(h < SPLIT_VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
+    split = _split_of_doc()
     return (
         d.select("source", split.alias("split"))
         .groupBy("source", "split")
@@ -395,12 +401,8 @@ def q_split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_oracle() -> str:
-    h = _h31_sql("CAST(doc_id AS VARCHAR)")
     return f"""
-        SELECT source,
-               CASE WHEN {h} % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
-                    WHEN {h} % 100 < {SPLIT_VAL_PCT} THEN 'val'
-                    ELSE 'test' END AS split,
+        SELECT source, {_split_of_doc_sql()} AS split,
                count(*) AS n_docs
         FROM documents
         GROUP BY 1, 2
@@ -422,12 +424,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dfs_w_mapreduce_spark.operators.dedup import _doc_shingles
 
     d = load_table(spark, sf_dir, "documents")
-    h = _h31_spark(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(h < SPLIT_TRAIN_PCT, F.lit("train"))
-        .when(h < SPLIT_VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
+    split = _split_of_doc()
     splits = d.select("doc_id", "source", split.alias("split"))
     ex = (
         _doc_shingles(spark, sf_dir)
@@ -459,13 +456,9 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_leakage_oracle() -> str:
-    h = _h31_sql("CAST(doc_id AS VARCHAR)")
     return f"""
         WITH splits AS (
-            SELECT doc_id, source,
-                   CASE WHEN {h} % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
-                        WHEN {h} % 100 < {SPLIT_VAL_PCT} THEN 'val'
-                        ELSE 'test' END AS split
+            SELECT doc_id, source, {_split_of_doc_sql()} AS split
             FROM documents
         ),
         sh AS (
@@ -1379,25 +1372,8 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_fertility_oracle() -> str:
-    ctes = ",".join(_bpe_round_ctes(k) for k in range(1, BPE_ROUNDS + 1))
     return f"""
-    WITH ws AS (
-        SELECT source, word, count(*) AS freq FROM (
-            SELECT source,
-                   unnest(list_filter({ws_split_sql('lower(text)')},
-                                      t -> regexp_matches(t, '^[a-z0-9]+$')))
-                   AS word
-            FROM documents
-        ) GROUP BY 1, 2
-    ),
-    w0 AS (SELECT word, sum(freq) AS freq FROM ws GROUP BY 1),
-    s0 AS (
-        SELECT word, freq,
-               list_append(list_transform(range(1, len(word) + 1),
-                                          i -> substr(word, CAST(i AS INT), 1)),
-                           '_') AS syms
-        FROM w0
-    ),{ctes},
+    WITH {_bpe_vocab_ctes()},
     enc AS (
         SELECT word, len(syms) AS post_tokens FROM s{BPE_ROUNDS}
     )
@@ -1417,25 +1393,8 @@ def _bpe_fertility_oracle() -> str:
 
 
 def _bpe_apply_oracle() -> str:
-    ctes = ",".join(_bpe_round_ctes(k) for k in range(1, BPE_ROUNDS + 1))
     return f"""
-    WITH ws AS (
-        SELECT source, word, count(*) AS freq FROM (
-            SELECT source,
-                   unnest(list_filter({ws_split_sql('lower(text)')},
-                                      t -> regexp_matches(t, '^[a-z0-9]+$')))
-                   AS word
-            FROM documents
-        ) GROUP BY 1, 2
-    ),
-    w0 AS (SELECT word, sum(freq) AS freq FROM ws GROUP BY 1),
-    s0 AS (
-        SELECT word, freq,
-               list_append(list_transform(range(1, len(word) + 1),
-                                          i -> substr(word, CAST(i AS INT), 1)),
-                           '_') AS syms
-        FROM w0
-    ),{ctes},
+    WITH {_bpe_vocab_ctes()},
     enc AS (
         SELECT word, len(word) + 1 AS pre_tokens, len(syms) AS post_tokens
         FROM s{BPE_ROUNDS}
@@ -1476,29 +1435,40 @@ def _bpe_round_ctes(k: int) -> str:
 
 
 def _bpe_oracle() -> str:
-    ctes = ",".join(_bpe_round_ctes(k) for k in range(1, BPE_ROUNDS + 1))
     union = " UNION ALL ".join(
         f"SELECT * FROM b{k}" for k in range(1, BPE_ROUNDS + 1)
     )
     return f"""
-    WITH w0 AS (
-        SELECT word, count(*) AS freq FROM (
-            SELECT unnest(list_filter({ws_split_sql('lower(text)')},
+    WITH {_bpe_vocab_ctes()}
+    SELECT CAST(round AS INT) AS round, pa, pb, pa || pb AS merged, cnt
+    FROM ({union})
+    """
+
+
+def _bpe_vocab_ctes() -> str:
+    """The BPE training corpus of the oracles as CTEs: ws (per-source
+    counts of the lowercased alphanumeric words), w0 (corpus counts),
+    s0 (each word's characters plus the end marker '_'), then
+    p/b/s1..BPE_ROUNDS (each round's pair counts, best pair, merged
+    symbols)."""
+    ctes = ",".join(_bpe_round_ctes(k) for k in range(1, BPE_ROUNDS + 1))
+    return f"""ws AS (
+        SELECT source, word, count(*) AS freq FROM (
+            SELECT source,
+                   unnest(list_filter({ws_split_sql('lower(text)')},
                                       t -> regexp_matches(t, '^[a-z0-9]+$')))
                    AS word
             FROM documents
-        ) GROUP BY 1
+        ) GROUP BY 1, 2
     ),
+    w0 AS (SELECT word, sum(freq) AS freq FROM ws GROUP BY 1),
     s0 AS (
         SELECT word, freq,
                list_append(list_transform(range(1, len(word) + 1),
                                           i -> substr(word, CAST(i AS INT), 1)),
                            '_') AS syms
         FROM w0
-    ),{ctes}
-    SELECT CAST(round AS INT) AS round, pa, pb, pa || pb AS merged, cnt
-    FROM ({union})
-    """
+    ),{ctes}"""
 
 
 SHUFFLE_EPOCHS = 2   # training epochs to materialize orders for

@@ -58,7 +58,6 @@ PLANE_BANDS = [
      (61, 37), (71, 2), (83, 29), (3, 83), (5, 73), (2, 89)],
 ]
 N_BANDS = len(PLANE_BANDS)
-PLANE_AB = PLANE_BANDS[0][:MIN_PLANES]  # legacy alias (docs/tests)
 
 
 def _dot(x: Column, y: Column) -> Column:
@@ -80,6 +79,13 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select("vec_id", v.alias("v")).select(
         "vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm")
     )
+
+
+# DuckDB twin of _d2 over the list expressions {a} and {b}
+_D2_SQL = (
+    "(list_dot_product({a}, {a}) + list_dot_product({b}, {b})"
+    " - 2 * list_dot_product({a}, {b}))"
+)
 
 
 _VECS_SQL = """
@@ -646,19 +652,40 @@ def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     64 floats into 8 nibbles — 64x compression); a query scan touches
     codes + a 20x128 distance table, never the original vectors."""
     v = _vecs(spark, sf_dir)
-    sub = v.select(
-        "vec_id",
+    sub = _pq_subspaces(v.select("vec_id", "v"), "v", "sv")
+    queries = sub.filter(F.col("vec_id") < N_QUERIES).withColumnRenamed(
+        "vec_id", "query_id"
+    )
+    return _pq_adc_topk(v, sub, queries, "sv", [])
+
+
+def _pq_subspaces(df: DataFrame, vcol: str, out: str) -> DataFrame:
+    """df with its vector column vcol exploded into PQ_SUB rows
+    (j, out): the j-th PQ_SUBDIM-wide subvector."""
+    keep = [c for c in df.columns if c != vcol]
+    return df.select(
+        *keep,
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(PQ_SUB - 1)),
                 lambda j: F.struct(
                     j.alias("j"),
-                    F.slice("v", j * PQ_SUBDIM + 1, PQ_SUBDIM).alias("sv"),
+                    F.slice(vcol, j * PQ_SUBDIM + 1, PQ_SUBDIM).alias(out),
                 ),
             )
         ).alias("s"),
-    ).select("vec_id", F.col("s.j").alias("j"), F.col("s.sv").alias("sv"))
+    ).select(*keep, F.col("s.j").alias("j"), F.col(f"s.{out}").alias(out))
 
+
+def _pq_adc_topk(
+    v: DataFrame, sub: DataFrame, qsub: DataFrame, qcol: str, keys: list[str]
+) -> DataFrame:
+    """The TOP_K neighbors of each query by ADC: the codebook is the
+    subvectors (sv) of sub's first PQ_K seed vectors, each sub vector
+    is encoded to its nearest codeword per subspace, and each query
+    subvector (qsub's qcol) gets a distance table. Codes and tables
+    join on keys plus (j, code_id); the PQ_SUB per-subspace distances
+    re-add in fixed j order through conditional sums."""
     # Take the PQ_K smallest seed ids with a distributed top-K
     # (TakeOrderedAndProject) FIRST, so the unpartitioned ranking
     # window only ever sees PQ_K rows — the previous formulation ran
@@ -672,32 +699,24 @@ def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(PQ_K)
         .select("vec_id", (F.row_number().over(seed_w) - 1).alias("code_id"))
     )
-    codebook = (
-        sub.join(F.broadcast(seeds), "vec_id")
-        .select("code_id", "j", F.col("sv").alias("cw"))
+    codebook = sub.join(F.broadcast(seeds), "vec_id").select(
+        "code_id", "j", F.col("sv").alias("cw")
     )
-
     enc = sub.join(F.broadcast(codebook), "j").select(
-        "vec_id", "j", "code_id",
+        "vec_id", *keys, "j", "code_id",
         F.round(_d2(F.col("sv"), F.col("cw")), 6).alias("d2"),
     )
     w_enc = W.partitionBy("vec_id", "j").orderBy("d2", "code_id")
     codes = (
         enc.withColumn("rk", F.row_number().over(w_enc))
         .filter(F.col("rk") == 1)
-        .select("vec_id", "j", "code_id")
+        .select("vec_id", *keys, "j", "code_id")
     )
-
-    dtable = (
-        sub.filter(F.col("vec_id") < N_QUERIES)
-        .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(codebook), "j")
-        .select(
-            "query_id", "j", "code_id",
-            _d2(F.col("sv"), F.col("cw")).alias("qd"),
-        )
+    dtable = qsub.join(F.broadcast(codebook), "j").select(
+        "query_id", *keys, "j", "code_id",
+        _d2(F.col(qcol), F.col("cw")).alias("qd"),
     )
-    joined = codes.join(F.broadcast(dtable), ["j", "code_id"]).filter(
+    joined = codes.join(F.broadcast(dtable), [*keys, "j", "code_id"]).filter(
         F.col("vec_id") != F.col("query_id")
     )
     parts = joined.groupBy("query_id", F.col("vec_id").alias("neighbor_id")).agg(
@@ -721,19 +740,31 @@ def q_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_pq_oracle() -> str:
-    d2 = (
-        "(list_dot_product({a}, {a}) + list_dot_product({b}, {b})"
-        " - 2 * list_dot_product({a}, {b}))"
-    )
-    cond = " + ".join(f"sum(CASE WHEN j = {k} THEN qd END)" for k in range(PQ_SUB))
     return f"""
         WITH v AS ({_VECS_SQL}),
-        sub AS (
-            SELECT vec_id, CAST(j AS INT) AS j,
-                   v[(j * {PQ_SUBDIM} + 1):(j * {PQ_SUBDIM} + {PQ_SUBDIM})] AS sv
-            FROM (SELECT vec_id, v, unnest(range(0, {PQ_SUB})) AS j FROM v)
-        ),
-        seeds AS (
+        sub AS ({_pq_subspaces_sql("v", "v", "sv", "vec_id")}),
+        qsub AS (SELECT vec_id AS query_id, j, sv AS qsv FROM sub
+                 WHERE vec_id < {N_QUERIES}),
+        {_pq_adc_topk_sql([])}
+    """
+
+
+def _pq_subspaces_sql(src: str, vcol: str, out: str, keep: str) -> str:
+    """DuckDB twin of _pq_subspaces: the keep columns of src, j and the
+    j-th subvector of vcol as out."""
+    return f"""
+            SELECT {keep}, CAST(j AS INT) AS j,
+                   {vcol}[(j * {PQ_SUBDIM} + 1):(j * {PQ_SUBDIM} + {PQ_SUBDIM})] AS {out}
+            FROM (SELECT {keep}, {vcol}, unnest(range(0, {PQ_SUB})) AS j FROM {src})"""
+
+
+def _pq_adc_topk_sql(keys: list[str]) -> str:
+    """DuckDB twin of _pq_adc_topk: the CTEs after v, sub (vec_id,
+    keys, j, sv) and qsub (query_id, keys, j, qsv), then the final
+    top-K SELECT."""
+    cond = " + ".join(f"sum(CASE WHEN j = {k} THEN qd END)" for k in range(PQ_SUB))
+    kc = "".join(f"{k}, " for k in keys)
+    return f"""seeds AS (
             SELECT vec_id, rn - 1 AS code_id FROM (
                 SELECT vec_id, row_number() OVER (ORDER BY vec_id) AS rn
                 FROM v WHERE vec_id % {PQ_SEED_MOD} = 0
@@ -744,24 +775,22 @@ def _knn_pq_oracle() -> str:
             FROM sub JOIN seeds USING (vec_id)
         ),
         enc AS (
-            SELECT vec_id, j, code_id,
+            SELECT vec_id, {kc}j, code_id,
                    row_number() OVER (
                        PARTITION BY vec_id, j
-                       ORDER BY round({d2.format(a='sv', b='cw')}, 6), code_id
+                       ORDER BY round({_D2_SQL.format(a='sv', b='cw')}, 6), code_id
                    ) AS rk
             FROM sub JOIN codebook USING (j)
         ),
-        codes AS (SELECT vec_id, j, code_id FROM enc WHERE rk = 1),
+        codes AS (SELECT vec_id, {kc}j, code_id FROM enc WHERE rk = 1),
         dtable AS (
-            SELECT sub.vec_id AS query_id, j, code_id,
-                   {d2.format(a='sv', b='cw')} AS qd
-            FROM sub JOIN codebook USING (j)
-            WHERE sub.vec_id < {N_QUERIES}
+            SELECT query_id, {"".join(f"qsub.{k}, " for k in keys)}j, code_id,
+                   {_D2_SQL.format(a='qsv', b='cw')} AS qd
+            FROM qsub JOIN codebook USING (j)
         ),
         scored AS (
-            SELECT query_id, vec_id AS neighbor_id,
-                   round({cond}, 6) AS approx_d2
-            FROM codes JOIN dtable USING (j, code_id)
+            SELECT query_id, vec_id AS neighbor_id, round({cond}, 6) AS approx_d2
+            FROM codes JOIN dtable USING ({kc}j, code_id)
             WHERE vec_id <> query_id
             GROUP BY 1, 2
         )
@@ -769,8 +798,7 @@ def _knn_pq_oracle() -> str:
             SELECT *, row_number() OVER (PARTITION BY query_id
                                          ORDER BY approx_d2, neighbor_id) AS rk
             FROM scored
-        ) WHERE rk <= {TOP_K}
-    """
+        ) WHERE rk <= {TOP_K}"""
 
 
 def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,86 +846,13 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cid").alias("list_id"),
         resid.alias("qr"),
     )
-
-    def _subspaces(df, vcol, out):
-        return df.select(
-            *[c for c in df.columns if c != vcol],
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(PQ_SUB - 1)),
-                    lambda j: F.struct(
-                        j.alias("j"),
-                        F.slice(vcol, j * PQ_SUBDIM + 1, PQ_SUBDIM).alias(out),
-                    ),
-                )
-            ).alias("s"),
-        ).select(
-            *[c for c in df.columns if c != vcol],
-            F.col("s.j").alias("j"),
-            F.col(f"s.{out}").alias(out),
-        )
-
-    rsub = _subspaces(members, "r", "sv")
-    seed_w = W.orderBy("vec_id")
-    seeds = (
-        v.filter(F.col("vec_id") % PQ_SEED_MOD == 0)
-        .select("vec_id")
-        .orderBy("vec_id")
-        .limit(PQ_K)
-        .select("vec_id", (F.row_number().over(seed_w) - 1).alias("code_id"))
-    )
-    codebook = rsub.join(F.broadcast(seeds), "vec_id").select(
-        "code_id", "j", F.col("sv").alias("cw")
-    )
-    enc = rsub.join(F.broadcast(codebook), "j").select(
-        "vec_id", "list_id", "j", "code_id",
-        F.round(_d2(F.col("sv"), F.col("cw")), 6).alias("d2"),
-    )
-    w_enc = W.partitionBy("vec_id", "j").orderBy("d2", "code_id")
-    codes = (
-        enc.withColumn("rk", F.row_number().over(w_enc))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "list_id", "j", "code_id")
-    )
-    qsub = _subspaces(probes, "qr", "qsv")
-    dtable = qsub.join(F.broadcast(codebook), "j").select(
-        "query_id", "list_id", "j", "code_id",
-        _d2(F.col("qsv"), F.col("cw")).alias("qd"),
-    )
-    joined = codes.join(
-        F.broadcast(dtable), ["list_id", "j", "code_id"]
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    parts = joined.groupBy(
-        "query_id", F.col("vec_id").alias("neighbor_id")
-    ).agg(
-        *[
-            F.sum(F.when(F.col("j") == k, F.col("qd"))).alias(f"_d{k}")
-            for k in range(PQ_SUB)
-        ]
-    )
-    total = F.col("_d0")
-    for k in range(1, PQ_SUB):
-        total = total + F.col(f"_d{k}")
-    scored = parts.select(
-        "query_id", "neighbor_id", F.round(total, 6).alias("approx_d2")
-    )
-    w = W.partitionBy("query_id").orderBy("approx_d2", "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id", "neighbor_id", "approx_d2",
-            F.col("rk").cast("int").alias("rk"),
-        )
+    return _pq_adc_topk(
+        v, _pq_subspaces(members, "r", "sv"), _pq_subspaces(probes, "qr", "qsv"),
+        "qsv", ["list_id"],
     )
 
 
 def _knn_ivfpq_oracle() -> str:
-    d2 = (
-        "(list_dot_product({a}, {a}) + list_dot_product({b}, {b})"
-        " - 2 * list_dot_product({a}, {b}))"
-    )
-    cond = " + ".join(f"sum(CASE WHEN j = {k} THEN qd END)" for k in range(PQ_SUB))
     resid = "[{v}[i] - {c}[i] FOR i IN range(1, len({v}) + 1)]"
     return f"""
         WITH v AS ({_VECS_SQL}),
@@ -907,7 +862,7 @@ def _knn_ivfpq_oracle() -> str:
             SELECT v.vec_id, v.v, cent.cid, cent.cv,
                    row_number() OVER (
                        PARTITION BY v.vec_id
-                       ORDER BY round({d2.format(a='v.v', b='cent.cv')}, 6),
+                       ORDER BY round({_D2_SQL.format(a='v.v', b='cent.cv')}, 6),
                                 cent.cid) AS crk
             FROM v CROSS JOIN cent
         ),
@@ -917,53 +872,9 @@ def _knn_ivfpq_oracle() -> str:
         probes AS (SELECT vec_id AS query_id, cid AS list_id,
                           {resid.format(v='v', c='cv')} AS qr
                    FROM vc WHERE crk <= {N_PROBE} AND vec_id < {N_QUERIES}),
-        rsub AS (
-            SELECT vec_id, list_id, CAST(j AS INT) AS j,
-                   r[(j * {PQ_SUBDIM} + 1):(j * {PQ_SUBDIM} + {PQ_SUBDIM})] AS sv
-            FROM (SELECT vec_id, list_id, r, unnest(range(0, {PQ_SUB})) AS j
-                  FROM members)
-        ),
-        seeds AS (
-            SELECT vec_id, rn - 1 AS code_id FROM (
-                SELECT vec_id, row_number() OVER (ORDER BY vec_id) AS rn
-                FROM v WHERE vec_id % {PQ_SEED_MOD} = 0
-            ) WHERE rn <= {PQ_K}
-        ),
-        codebook AS (
-            SELECT seeds.code_id, rsub.j, rsub.sv AS cw
-            FROM rsub JOIN seeds USING (vec_id)
-        ),
-        enc AS (
-            SELECT vec_id, list_id, j, code_id,
-                   row_number() OVER (
-                       PARTITION BY vec_id, j
-                       ORDER BY round({d2.format(a='sv', b='cw')}, 6), code_id
-                   ) AS rk
-            FROM rsub JOIN codebook USING (j)
-        ),
-        codes AS (SELECT vec_id, list_id, j, code_id FROM enc WHERE rk = 1),
-        qsub AS (
-            SELECT query_id, list_id, CAST(j AS INT) AS j,
-                   qr[(j * {PQ_SUBDIM} + 1):(j * {PQ_SUBDIM} + {PQ_SUBDIM})] AS qsv
-            FROM (SELECT query_id, list_id, qr, unnest(range(0, {PQ_SUB})) AS j
-                  FROM probes)
-        ),
-        dtable AS (
-            SELECT query_id, qsub.list_id, j, code_id,
-                   {d2.format(a='qsv', b='cw')} AS qd
-            FROM qsub JOIN codebook USING (j)
-        ),
-        scored AS (
-            SELECT query_id, vec_id AS neighbor_id, round({cond}, 6) AS approx_d2
-            FROM codes JOIN dtable USING (list_id, j, code_id)
-            WHERE vec_id <> query_id
-            GROUP BY 1, 2
-        )
-        SELECT query_id, neighbor_id, approx_d2, CAST(rk AS INT) AS rk FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY approx_d2, neighbor_id) AS rk
-            FROM scored
-        ) WHERE rk <= {TOP_K}
+        sub AS ({_pq_subspaces_sql("members", "r", "sv", "vec_id, list_id")}),
+        qsub AS ({_pq_subspaces_sql("probes", "qr", "qsv", "query_id, list_id")}),
+        {_pq_adc_topk_sql(["list_id"])}
     """
 
 
@@ -1364,17 +1275,13 @@ def q_sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _coreset_oracle() -> str:
-    d2 = (
-        "(list_dot_product({a}, {a}) + list_dot_product({b}, {b})"
-        " - 2 * list_dot_product({a}, {b}))"
-    )
     body = [
         f"""
         v AS ({_VECS_SQL}),
         p1 AS (SELECT vec_id, v FROM v ORDER BY vec_id LIMIT 1),
         r1 AS (
             SELECT v.vec_id, v.v,
-                   round({d2.format(a='v.v', b='p.v')}, 6) + 0.0 AS md
+                   round({_D2_SQL.format(a='v.v', b='p.v')}, 6) + 0.0 AS md
             FROM v CROSS JOIN p1 p
         )"""
     ]
@@ -1388,7 +1295,7 @@ def _coreset_oracle() -> str:
         r{k} AS (
             SELECT r.vec_id, r.v,
                    LEAST(r.md,
-                         round({d2.format(a='r.v', b='p.v')}, 6) + 0.0) AS md
+                         round({_D2_SQL.format(a='r.v', b='p.v')}, 6) + 0.0) AS md
             FROM r{k - 1} r CROSS JOIN p{k} p
         )""")
     selects = [

@@ -16,7 +16,7 @@ for data-pipeline debugging at scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
@@ -213,6 +213,46 @@ KMV_K = 64
 _KMV_SCALE = float(1 << 60)  # h is a 60-bit md5 prefix
 
 
+def _kmv_sketches(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(hh, sk): each source's distinct 60-bit token hashes, and its
+    KMV sketch, the KMV_K smallest of them."""
+    from pyspark.sql import Window as W
+
+    hh = d.select(
+        "source",
+        F.explode(ws_tokens(F.lower(F.col("text")))).alias("token"),
+    ).select(
+        "source",
+        F.expr(md5_long_expr("token")).alias("h"),
+    ).distinct()
+    rk = F.row_number().over(W.partitionBy("source").orderBy("h"))
+    sk = hh.withColumn("rk", rk).filter(F.col("rk") <= KMV_K).select("source", "h")
+    return hh, sk
+
+
+def _kmv_est(n: Column, kth: Column) -> Column:
+    """The KMV distinct estimate of a sketch of n hashes whose largest
+    is kth: exact below KMV_K hashes, else (k-1)/kth normalized."""
+    return F.when(n < KMV_K, n).otherwise(
+        F.round(F.lit((KMV_K - 1) * _KMV_SCALE) / kth, 0).cast("long")
+    )
+
+
+# DuckDB twin of _kmv_sketches: the CTEs toks, hh and sk
+_KMV_SKETCH_CTES = f"""toks AS (
+        SELECT source,
+               unnest({ws_tokens_sql('lower(text)')}) AS token
+        FROM documents
+    ),
+    hh AS (SELECT DISTINCT source,
+                  {md5_long_sql('token')} AS h
+           FROM toks),
+    sk AS (SELECT source, h FROM (
+               SELECT source, h,
+                      row_number() OVER (PARTITION BY source ORDER BY h) AS rk
+               FROM hh) WHERE rk <= {KMV_K})"""
+
+
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum-values) distinct sketch — the mergeable
     cardinality sketch whose STATE is deterministic: the k smallest
@@ -226,21 +266,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive the shuffle); the merge touches n_sources*k rows."""
     from pyspark.sql import Window as W
 
-    d = load_table(spark, sf_dir, "documents")
-    hh = d.select(
-        "source",
-        F.explode(ws_tokens(F.lower(F.col("text")))).alias("token"),
-    ).select(
-        "source",
-        F.expr(md5_long_expr("token")).alias("h"),
-    ).distinct()
-    rk = F.row_number().over(W.partitionBy("source").orderBy("h"))
-    sk = hh.withColumn("rk", rk).filter(F.col("rk") <= KMV_K).select("source", "h")
-
-    def est(n_sk, kth):
-        return F.when(n_sk < KMV_K, n_sk).otherwise(
-            F.round(F.lit((KMV_K - 1) * _KMV_SCALE) / kth, 0).cast("long")
-        )
+    hh, sk = _kmv_sketches(load_table(spark, sf_dir, "documents"))
 
     per = (
         sk.groupBy("source")
@@ -251,7 +277,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "exact_distinct",
             "sketch_size",
             "kth_min",
-            est(F.col("sketch_size"), F.col("kth_min")).alias("kmv_est"),
+            _kmv_est(F.col("sketch_size"), F.col("kth_min")).alias("kmv_est"),
             F.lit(True).alias("merge_exact"),
         )
     )
@@ -285,7 +311,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "exact_distinct",
             "sketch_size",
             "kth_min",
-            est(F.col("sketch_size"), F.col("kth_min")).alias("kmv_est"),
+            _kmv_est(F.col("sketch_size"), F.col("kth_min")).alias("kmv_est"),
             (
                 (F.col("m_kth") == F.col("kth_min"))
                 & (F.col("m_n") == F.col("sketch_size"))
@@ -311,18 +337,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 KMV_DISTINCT_ORACLE = f"""
-    WITH toks AS (
-        SELECT source,
-               unnest({ws_tokens_sql('lower(text)')}) AS token
-        FROM documents
-    ),
-    hh AS (SELECT DISTINCT source,
-                  {md5_long_sql('token')} AS h
-           FROM toks),
-    sk AS (SELECT source, h FROM (
-               SELECT source, h,
-                      row_number() OVER (PARTITION BY source ORDER BY h) AS rk
-               FROM hh) WHERE rk <= {KMV_K}),
+    WITH {_KMV_SKETCH_CTES},
     per AS (
         SELECT s.source, e.exact_distinct,
                CAST(count(*) AS BIGINT) AS sketch_size,
@@ -383,25 +398,11 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the sketches exactly."""
     from pyspark.sql import Window as W
 
-    d = load_table(spark, sf_dir, "documents")
-    hh = d.select(
-        "source",
-        F.explode(ws_tokens(F.lower(F.col("text")))).alias("token"),
-    ).select(
-        "source",
-        F.expr(md5_long_expr("token")).alias("h"),
-    ).distinct()
-    rk = F.row_number().over(W.partitionBy("source").orderBy("h"))
-    sk = hh.withColumn("rk", rk).filter(F.col("rk") <= KMV_K).select("source", "h")
-
-    def est(n, kth):
-        return F.when(n < KMV_K, n).otherwise(
-            F.round(F.lit((KMV_K - 1) * _KMV_SCALE) / kth, 0).cast("long")
-        )
+    hh, sk = _kmv_sketches(load_table(spark, sf_dir, "documents"))
 
     stats = sk.groupBy("source").agg(
         F.max("h").alias("kth"), F.count("*").alias("n")
-    ).select("source", est(F.col("n"), F.col("kth")).alias("est"))
+    ).select("source", _kmv_est(F.col("n"), F.col("kth")).alias("est"))
     srcs = hh.select("source").distinct()
     pairs = (
         srcs.select(F.col("source").alias("src_a"))
@@ -418,7 +419,7 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ustats = u.groupBy("src_a", "src_b").agg(
         F.max("h").alias("u_kth"), F.count("*").alias("u_n")
     ).select(
-        "src_a", "src_b", est(F.col("u_n"), F.col("u_kth")).alias("union_est")
+        "src_a", "src_b", _kmv_est(F.col("u_n"), F.col("u_kth")).alias("union_est")
     )
     # exact calibration side
     ex = hh.groupBy("source").agg(F.count("*").alias("ex"))
@@ -459,18 +460,7 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 KMV_SET_OPS_ORACLE = f"""
-    WITH toks AS (
-        SELECT source,
-               unnest({ws_tokens_sql('lower(text)')}) AS token
-        FROM documents
-    ),
-    hh AS (SELECT DISTINCT source,
-                  {md5_long_sql('token')} AS h
-           FROM toks),
-    sk AS (SELECT source, h FROM (
-               SELECT source, h,
-                      row_number() OVER (PARTITION BY source ORDER BY h) AS rk
-               FROM hh) WHERE rk <= {KMV_K}),
+    WITH {_KMV_SKETCH_CTES},
     stats AS (
         SELECT source,
                CASE WHEN count(*) < {KMV_K} THEN CAST(count(*) AS BIGINT)

@@ -24,6 +24,42 @@ from dfs_w_mapreduce_spark.registry import QuerySpec
 USER_MOD = 50
 
 
+def _asof_union(spark: SparkSession, sf_dir: str, with_us: bool = False) -> DataFrame:
+    """Events (side 0) and orders (side 1) keyed to the shared user
+    space u, in one frame (u, ts, side, ev_id, o_orderkey); with_us
+    adds each event's ts as exact integer microseconds, ev_us."""
+    ev = load_table(spark, sf_dir, "events").select(
+        (F.col("user_id") % USER_MOD).alias("u"), "ts", "event_id"
+    )
+    orders = load_table(spark, sf_dir, "orders").select(
+        (F.col("o_custkey") % USER_MOD).alias("u"),
+        F.col("o_orderdate").alias("ts"),
+        "o_orderkey",
+    )
+    no_long = F.lit(None).cast("long")
+    ev_us = [F.unix_micros(F.col("ts").cast("timestamp")).alias("ev_us")] if with_us else []
+    no_us = [no_long.alias("ev_us")] if with_us else []
+    return ev.select(
+        "u", "ts", F.lit(0).alias("side"), F.col("event_id").alias("ev_id"),
+        *ev_us, no_long.alias("o_orderkey"),
+    ).unionByName(
+        orders.select(
+            "u", "ts", F.lit(1).alias("side"), no_long.alias("ev_id"), *no_us, "o_orderkey"
+        )
+    )
+
+
+# The orders side (o) and the events side with equal-ts ties resolved
+# by agg(event_id) of the DuckDB ASOF JOIN oracles
+_ASOF_ORDERS_CTE = f"""o AS (SELECT o_orderkey, o_custkey % {USER_MOD} AS u, o_orderdate AS ts
+               FROM orders)"""
+
+
+def _asof_events_sql(agg: str) -> str:
+    return f"""SELECT user_id % {USER_MOD} AS u, ts, {agg}(event_id) AS event_id
+          FROM events GROUP BY 1, 2"""
+
+
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each order (keyed to user o_custkey % 50), the
     latest event at-or-before the order date.
@@ -33,23 +69,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_value(ignorenulls). One shuffle on user, no range explosion;
     this is the scalable as-of idiom when the right side is too big to
     broadcast."""
-    ev = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % USER_MOD).alias("u"),
-        F.col("ts"),
-        F.col("event_id"),
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") % USER_MOD).alias("u"),
-        F.col("o_orderdate").alias("ts"),
-        F.col("o_orderkey"),
-    )
-    unioned = ev.select(
-        "u", "ts", F.lit(0).alias("side"), F.col("event_id").alias("ev_id"), F.lit(None).cast("long").alias("o_orderkey")
-    ).unionByName(
-        orders.select(
-            "u", "ts", F.lit(1).alias("side"), F.lit(None).cast("long").alias("ev_id"), "o_orderkey"
-        )
-    )
+    unioned = _asof_union(spark, sf_dir)
     w = (
         W.partitionBy("u")
         .orderBy("ts", "side", "ev_id")
@@ -66,13 +86,11 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ASOF_JOIN_ORACLE = f"""
-    WITH o AS (SELECT o_orderkey, o_custkey % {USER_MOD} AS u, o_orderdate AS ts
-               FROM orders),
+    WITH {_ASOF_ORDERS_CTE},
     -- DuckDB ASOF JOIN picks the row with the greatest event ts <=
     -- order ts per join key; ties on ts are broken by max event_id to
     -- match the Spark window's (ts, side, ev_id) ordering.
-    e AS (SELECT user_id % {USER_MOD} AS u, ts, max(event_id) AS event_id
-          FROM events GROUP BY 1, 2)
+    e AS ({_asof_events_sql('max')})
     SELECT o.o_orderkey, o.u AS user_id, e.event_id
     FROM o ASOF LEFT JOIN e ON o.u = e.u AND o.ts >= e.ts
 """
@@ -129,21 +147,7 @@ def q_asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-check each other."""
     import pandas as pd
 
-    ev = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % USER_MOD).alias("u"), "ts", "event_id"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") % USER_MOD).alias("u"),
-        F.col("o_orderdate").alias("ts"),
-        "o_orderkey",
-    )
-    tagged = ev.select(
-        "u", "ts", F.lit(0).alias("side"),
-        F.col("event_id").alias("ev_id"), F.lit(None).cast("long").alias("o_orderkey"),
-    ).unionByName(
-        orders.select("u", "ts", F.lit(1).alias("side"),
-                      F.lit(None).cast("long").alias("ev_id"), "o_orderkey")
-    )
+    tagged = _asof_union(spark, sf_dir)
 
     def asof(pdf: pd.DataFrame) -> pd.DataFrame:
         left = (
@@ -177,24 +181,7 @@ def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     same union + window idiom with the time axis reversed (order by
     ts DESC so "carry the last event seen" means "smallest ts >= T").
     Ties on ts resolve to the minimum event_id on both engines."""
-    ev = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % USER_MOD).alias("u"), "ts", "event_id"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") % USER_MOD).alias("u"),
-        F.col("o_orderdate").alias("ts"),
-        "o_orderkey",
-    )
-    unioned = ev.select(
-        "u", "ts", F.lit(0).alias("side"),
-        F.col("event_id").alias("ev_id"),
-        F.lit(None).cast("long").alias("o_orderkey"),
-    ).unionByName(
-        orders.select(
-            "u", "ts", F.lit(1).alias("side"),
-            F.lit(None).cast("long").alias("ev_id"), "o_orderkey",
-        )
-    )
+    unioned = _asof_union(spark, sf_dir)
     w = (
         W.partitionBy("u")
         .orderBy(F.desc("ts"), "side", F.desc("ev_id"))
@@ -211,10 +198,8 @@ def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ASOF_FORWARD_ORACLE = f"""
-    WITH o AS (SELECT o_orderkey, o_custkey % {USER_MOD} AS u, o_orderdate AS ts
-               FROM orders),
-    e AS (SELECT user_id % {USER_MOD} AS u, ts, min(event_id) AS event_id
-          FROM events GROUP BY 1, 2)
+    WITH {_ASOF_ORDERS_CTE},
+    e AS ({_asof_events_sql('min')})
     SELECT o.o_orderkey, o.u AS user_id, e.event_id
     FROM o ASOF LEFT JOIN e ON o.u = e.u AND o.ts <= e.ts
 """
@@ -227,26 +212,7 @@ def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows run over the same unioned frame — one shuffle on the user
     key, two in-partition sorts, no second join. Gaps compare in exact
     integer microseconds (`unix_micros`), never float seconds."""
-    ev = load_table(spark, sf_dir, "events").select(
-        (F.col("user_id") % USER_MOD).alias("u"), "ts", "event_id"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") % USER_MOD).alias("u"),
-        F.col("o_orderdate").alias("ts"),
-        "o_orderkey",
-    )
-    ev_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    unioned = ev.select(
-        "u", "ts", F.lit(0).alias("side"),
-        F.col("event_id").alias("ev_id"), ev_us.alias("ev_us"),
-        F.lit(None).cast("long").alias("o_orderkey"),
-    ).unionByName(
-        orders.select(
-            "u", "ts", F.lit(1).alias("side"),
-            F.lit(None).cast("long").alias("ev_id"),
-            F.lit(None).cast("long").alias("ev_us"), "o_orderkey",
-        )
-    )
+    unioned = _asof_union(spark, sf_dir, with_us=True)
     # Same tie rules as the directional queries: backward resolves
     # equal-ts to max event_id, forward to min.
     wb = (
@@ -283,12 +249,9 @@ def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ASOF_NEAREST_ORACLE = f"""
-    WITH o AS (SELECT o_orderkey, o_custkey % {USER_MOD} AS u, o_orderdate AS ts
-               FROM orders),
-    eb AS (SELECT user_id % {USER_MOD} AS u, ts, max(event_id) AS event_id
-           FROM events GROUP BY 1, 2),
-    ef AS (SELECT user_id % {USER_MOD} AS u, ts, min(event_id) AS event_id
-           FROM events GROUP BY 1, 2),
+    WITH {_ASOF_ORDERS_CTE},
+    eb AS ({_asof_events_sql('max')}),
+    ef AS ({_asof_events_sql('min')}),
     b AS (SELECT o.o_orderkey, o.u, e.event_id AS back_id, epoch_us(e.ts) AS back_us,
                  epoch_us(CAST(o.ts AS TIMESTAMP)) AS o_us
           FROM o ASOF LEFT JOIN eb e ON o.u = e.u AND o.ts >= e.ts),

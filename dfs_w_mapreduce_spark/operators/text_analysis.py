@@ -371,15 +371,21 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_TFIDF_ORACLE = f"""
-    WITH toks AS (
+# each document's lowercased whitespace tokens, as the CTE toks
+_LOWER_TOKS_CTE = f"""toks AS (
         SELECT doc_id, unnest({ws_tokens_sql('lower(text)')}) AS term
         FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+    )"""
+# term frequency, document frequency and corpus size over a toks CTE
+_TF_DF_N_CTES = """tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
     df AS (SELECT term, count(*) AS df
            FROM (SELECT DISTINCT doc_id, term FROM toks) GROUP BY 1),
-    n AS (SELECT count(*) AS n_docs FROM documents),
+    n AS (SELECT count(*) AS n_docs FROM documents)"""
+
+
+TEXT_TFIDF_ORACLE = f"""
+    WITH {_LOWER_TOKS_CTE},
+    {_TF_DF_N_CTES},
     scored AS (
         SELECT doc_id, term,
                round(tf * ln(n_docs * 1.0 / df), 6) AS tfidf
@@ -703,18 +709,14 @@ def _prefix_filtered_num(
     )
 
 
-TFIDF_COSINE_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, unnest({ws_tokens_sql('lower(text)')}) AS term
-        FROM documents
-    ),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-    df AS (SELECT term, count(*) AS df
-           FROM (SELECT DISTINCT doc_id, term FROM toks) GROUP BY 1),
-    n AS (SELECT count(*) AS n_docs FROM documents),
+def _tfidf_cosine_oracle(toks_ctes: str, threshold: float) -> str:
+    """DuckDB twin of _allpairs_cosine over the token stream toks_ctes
+    defines: exact within the df cap (the cap is part of the operator's
+    semantics), with the Spark side's 1e8-scaled-long dot products."""
+    return f"""
+    WITH {toks_ctes},
+    {_TF_DF_N_CTES},
     w AS (
-        -- exact-within-cap contract: the df cap is part of the
-        -- operator's semantics and is applied identically here
         SELECT doc_id, term, round(tf * ln(n_docs * 1.0 / df), 6) AS w
         FROM tf JOIN df USING (term) CROSS JOIN n
         WHERE round(tf * ln(n_docs * 1.0 / df), 6) > 0
@@ -728,7 +730,6 @@ TFIDF_COSINE_ORACLE = f"""
         FROM w GROUP BY 1
     ),
     num AS (
-        -- 1e8-scaled-long accumulation, exactly mirroring the Spark side
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                CAST(sum(CAST(round(round(a.w * b.w, 8) * 100000000, 0) AS BIGINT))
                     AS DOUBLE) / 100000000 AS num
@@ -743,10 +744,13 @@ TFIDF_COSINE_ORACLE = f"""
         FROM num
         JOIN norms na ON num.doc_a = na.doc_id
         JOIN norms nb ON num.doc_b = nb.doc_id
-        WHERE round(num / (na.nrm * nb.nrm), 4) >= {TFIDF_COS_T}
+        WHERE round(num / (na.nrm * nb.nrm), 4) >= {threshold}
     )
     GROUP BY 1
 """
+
+
+TFIDF_COSINE_ORACLE = _tfidf_cosine_oracle(_LOWER_TOKS_CTE, TFIDF_COS_T)
 
 
 TFIDF_ZIPF_COS_T = 0.3
@@ -837,44 +841,7 @@ _ZIPF_TOKS_CTES = f"""base AS (
     )"""
 
 
-TFIDF_ZIPF_ORACLE = f"""
-    WITH {_ZIPF_TOKS_CTES},
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-    df AS (SELECT term, count(*) AS df
-           FROM (SELECT DISTINCT doc_id, term FROM toks) GROUP BY 1),
-    n AS (SELECT count(*) AS n_docs FROM documents),
-    w AS (
-        SELECT doc_id, term, round(tf * ln(n_docs * 1.0 / df), 6) AS w
-        FROM tf JOIN df USING (term) CROSS JOIN n
-        WHERE round(tf * ln(n_docs * 1.0 / df), 6) > 0
-          AND df <= (SELECT CAST(floor({TFIDF_DF_CAP_FRAC} * count(*)) AS BIGINT)
-                     FROM documents)
-    ),
-    norms AS (
-        SELECT doc_id,
-               sqrt(CAST(sum(CAST(round(w * w, 8) AS DECIMAL(28,8))) AS DOUBLE))
-                   AS nrm
-        FROM w GROUP BY 1
-    ),
-    num AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(sum(CAST(round(round(a.w * b.w, 8) * 100000000, 0) AS BIGINT))
-                    AS DOUBLE) / 100000000 AS num
-        FROM w a JOIN w b ON a.term = b.term AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT doc_a AS doc_id, count(*) AS n_similar,
-           max(cosine) AS max_cosine, min(cosine) AS min_cosine
-    FROM (
-        SELECT doc_a, doc_b,
-               round(num / (na.nrm * nb.nrm), 4) AS cosine
-        FROM num
-        JOIN norms na ON num.doc_a = na.doc_id
-        JOIN norms nb ON num.doc_b = nb.doc_id
-        WHERE round(num / (na.nrm * nb.nrm), 4) >= {TFIDF_ZIPF_COS_T}
-    )
-    GROUP BY 1
-"""
+TFIDF_ZIPF_ORACLE = _tfidf_cosine_oracle(_ZIPF_TOKS_CTES, TFIDF_ZIPF_COS_T)
 
 
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1744,10 +1711,7 @@ def q_postings_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 POSTINGS_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, unnest({ws_tokens_sql('lower(text)')}) AS term
-        FROM documents
-    ),
+    WITH {_LOWER_TOKS_CTE},
     tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
     pl AS (
         SELECT term,

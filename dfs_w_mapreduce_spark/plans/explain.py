@@ -40,16 +40,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
-def uses_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in formatted_plan(df)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans (wider = fewer Python/
-    interpretive breaks in the pipeline)."""
-    return formatted_plan(df).count("WholeStageCodegen")
-
-
 def exchange_count(df: DataFrame) -> int:
     """Number of shuffle Exchange operators — the scale currency.
     Every one is a full network + disk round of the data below it."""

@@ -94,7 +94,26 @@ class ChunkFileCommit(WriterCommitMessage):
         self.n_lines = n_lines
 
 
-class ChunkedTextWriter(DataSourceWriter):
+class _ChunkFileWriter(DataSourceWriter):
+    """Commit and abort of the chunk writers: each task writes its
+    chunk files in place and reports their paths in a ChunkFileCommit,
+    so commit has nothing to finalize and abort removes the files."""
+
+    def commit(self, messages):
+        pass  # files are already in place; nothing to finalize
+
+    def abort(self, messages):
+        import os
+
+        for m in messages:
+            if m is None:
+                continue
+            for p in m.paths:
+                if os.path.exists(p):
+                    os.remove(p)
+
+
+class ChunkedTextWriter(_ChunkFileWriter):
     """The reference's chunked `put` as a Spark sink: each task writes
     its rows as line-oriented chunk files of at most `lines_per_chunk`
     lines (client.go SendLineChunks splits on line boundaries at a
@@ -133,19 +152,6 @@ class ChunkedTextWriter(DataSourceWriter):
             if f is not None:
                 f.close()
         return ChunkFileCommit(paths, n)
-
-    def commit(self, messages):
-        pass  # files are already in place; nothing to finalize
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            if m is None:
-                continue
-            for p in m.paths:
-                if os.path.exists(p):
-                    os.remove(p)
 
 
 class BytesChunkPartition(InputPartition):
@@ -200,7 +206,7 @@ class ChunkedBytesReader(DataSourceReader):
             yield (e["file_name"], e["chunk_idx"], len(data), ck, data)
 
 
-class ChunkedBytesWriter(DataSourceWriter):
+class ChunkedBytesWriter(_ChunkFileWriter):
     """The reference's BINARY `put` path (client.go SendByteChunks:
     335-384, reached via the is-text dispatch at client.go:461-469 —
     dead in the reference only because IsTextFile is hardcoded true,
@@ -252,19 +258,6 @@ class ChunkedBytesWriter(DataSourceWriter):
             json.dump(entries, fh)
         paths.append(mpath)
         return ChunkFileCommit(paths, len(entries))
-
-    def commit(self, messages):
-        pass  # files are already in place; nothing to finalize
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            if m is None:
-                continue
-            for p in m.paths:
-                if os.path.exists(p):
-                    os.remove(p)
 
 
 class ChunkedTextStreamReader(SimpleDataSourceStreamReader):

@@ -341,9 +341,8 @@ def q_source_chunked_stream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batch DataSourceReader vs streaming offset reader) — any drift
     in offset arithmetic, replay slicing, or per-chunk numbering
     hash-mismatches."""
-    import uuid as _uuid
-
     from dfs_w_mapreduce_spark.sources.chunked_source import ChunkedTextDataSource
+    from dfs_w_mapreduce_spark.streaming.windows import _run_to_memory
 
     spark.dataSource.register(ChunkedTextDataSource)
     df = (
@@ -358,18 +357,7 @@ def q_source_chunked_stream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("line_no").alias("max_line"),
         F.sum(checksum).alias("checksum"),
     )
-    name = "t_" + _uuid.uuid4().hex[:12]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _run_to_memory(agg, "complete")
 
 
 def q_sink_chunked_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

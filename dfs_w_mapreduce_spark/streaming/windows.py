@@ -35,10 +35,6 @@ from pyspark.sql import functions as F
 from dfs_w_mapreduce_spark.catalog import load_table, table_path
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
 SESSION_GAP_MIN = 10
 
 
@@ -53,6 +49,21 @@ def _drain(q, timeout: int = 300) -> None:
         )
     finally:
         q.stop()
+
+
+def _run_to_memory(df: DataFrame, mode: str) -> DataFrame:
+    """Run the streaming frame df to completion (availableNow) into a
+    uniquely named memory sink in output mode mode, and return the
+    sink's table."""
+    name = "t_" + uuid.uuid4().hex[:12]
+    _drain(
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return df.sparkSession.table(name)
 
 
 def tumbling_agg(events: DataFrame) -> DataFrame:
@@ -413,16 +424,7 @@ def q_stream_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     window state; the memory sink therefore holds exactly the batch
     tumbling aggregate and `STREAM_TUMBLING_ORACLE` checks it."""
     agg = tumbling_agg(stream_events(spark, sf_dir).withWatermark("ts", "1 hour"))
-    name = "t_" + uuid.uuid4().hex[:12]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(name)
+    return _run_to_memory(agg, "complete")
 
 
 def q_stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -438,16 +440,7 @@ def q_stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", F.window("ts", "5 minutes").getField("start").alias("w")
     ).dropDuplicates(["user_id", "event_type", "w"])
     agg = keyed.groupBy("event_type").agg(F.count("*").alias("n_active_buckets"))
-    name = "t_" + uuid.uuid4().hex[:12]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(name)
+    return _run_to_memory(agg, "complete")
 
 
 STREAM_DEDUP_LIVE_ORACLE = """
@@ -478,16 +471,7 @@ def q_stream_topk_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_events"), "user_id")
         .limit(10)
     )
-    name = "t_" + uuid.uuid4().hex[:12]
-    q = (
-        top.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(name)
+    return _run_to_memory(top, "complete")
 
 
 STREAM_TOPK_LIVE_ORACLE = """
@@ -515,16 +499,7 @@ def q_stream_wmdedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum(F.col("event_id") % 97).alias("id_chk"),
     )
-    name = "t_" + uuid.uuid4().hex[:12]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(name)
+    return _run_to_memory(agg, "complete")
 
 
 STREAM_WMDEDUP_LIVE_ORACLE = """
@@ -563,16 +538,7 @@ def q_stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total",
         )
     )
-    name = "t_" + uuid.uuid4().hex[:12]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(name)
+    return _run_to_memory(agg, "complete")
 
 
 
@@ -592,16 +558,7 @@ def q_stream_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "n", "total")
     )
-    name = "t_" + uuid.uuid4().hex[:12]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return spark.table(name)
+    return _run_to_memory(agg, "complete")
 
 
 
@@ -794,8 +751,9 @@ def q_stream_dedup_incremental_live(spark: SparkSession, sf_dir: str) -> DataFra
     from dfs_w_mapreduce_spark.operators.dedup import (
         DELTA_CUT,
         DELTA_MOD,
-        JACCARD_T,
         _bands_of,
+        _jaccard_verified,
+        _merge_join,
         _shingles_of,
         _signed,
     )
@@ -831,8 +789,6 @@ def q_stream_dedup_incremental_live(spark: SparkSession, sf_dir: str) -> DataFra
     ).write.mode("overwrite").parquet(out)
 
     def attach(batch_df, batch_id):
-        from dfs_w_mapreduce_spark.operators.dedup import _merge_join
-
         sh_b = _shingles_of(batch_df, nonempty=True)
         # base band index + base shingles are corpus-cardinality with
         # string payloads — size-gated like every shingle-class join side
@@ -845,22 +801,11 @@ def q_stream_dedup_incremental_live(spark: SparkSession, sf_dir: str) -> DataFra
             .distinct()
         )
 
-        sa = sh_b.alias("sa")
-        sb = _merge_join(spark.read.parquet(f"{idx}/shingles"), sf_dir).alias("sb")
-        inter = F.size(F.array_intersect("sa.sh", "sb.sh"))
-        union = F.size("sa.sh") + F.size("sb.sh") - inter
-        (
-            cand.join(sa, F.col("new_id") == F.col("sa.doc_id"))
-            .join(sb, F.col("base_id") == F.col("sb.doc_id"))
-            .select(
-                F.col("new_id").alias("doc_id"),
-                F.col("base_id").alias("dup_of"),
-                F.round(inter / union, 4).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= JACCARD_T)
-            .write.mode("append")
-            .parquet(out)
-        )
+        _jaccard_verified(
+            cand, "new_id", "base_id",
+            sh_b, _merge_join(spark.read.parquet(f"{idx}/shingles"), sf_dir),
+            "doc_id", "dup_of",
+        ).write.mode("append").parquet(out)
         n_batches["n"] += 1
 
     q = (
@@ -1022,16 +967,11 @@ def q_stream_stateful_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    name = "t_" + uuid.uuid4().hex[:12]
-    q = (
-        counted.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    return (
+        _run_to_memory(counted, "update")
+        .groupBy("user_id")
+        .agg(F.max("n").alias("n_events"))
     )
-    _drain(q)
-    return spark.table(name).groupBy("user_id").agg(F.max("n").alias("n_events"))
 
 
 STREAM_STATEFUL_ORACLE = """
@@ -1077,18 +1017,9 @@ def q_stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.col("view_ts") + F.expr(f"INTERVAL {STREAM_JOIN_WINDOW_MIN} MINUTES")
         ),
     )
-    name = "t_" + uuid.uuid4().hex[:12]
-    q = (
-        pairs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
     lat = F.unix_micros("click_ts") - F.unix_micros("view_ts")
     return (
-        spark.table(name)
+        _run_to_memory(pairs, "append")
         .groupBy(F.col("v_user").alias("user_id"))
         .agg(
             F.count("*").alias("n_pairs"),

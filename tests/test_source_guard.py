@@ -6,8 +6,9 @@ functions/text.py and functions/hashing.py. The synthetic media
 fixtures (operators/multimodal.py) derive each document's WAV, PNG and
 GIF from (doc_id, n_chars); each rule is written once in Python (a
 Spark Column expression counts as Python) and once in the SQL of the
-oracles. These tests read the package's source
-(no Spark) and fail on a copy.
+oracles. More generally, a rule that two queries use is one helper
+per engine, so no block of code lines repeats. These tests read the
+package's source (no Spark) and fail on a copy.
 """
 
 from __future__ import annotations
@@ -99,3 +100,50 @@ def test_fixture_formulas_written_once_per_engine():
     copies = [f"{engine} {formula!r}: {where}"
               for (formula, engine), where in counts.items() if len(where) > 1]
     assert not copies, "fixture rule written more than once (use the multimodal.py helper):\n" + "\n".join(copies)
+
+
+# A rule used by two queries lives in one helper per engine: a run of
+# DUP_LINES consecutive code lines totalling at least DUP_CHARS
+# characters must not appear twice in the package.
+DUP_LINES, DUP_CHARS = 8, 160
+_BRACKETS_ONLY = re.compile(r"[()\[\]{},:;]*")
+
+
+def _code_lines(src: str):
+    """(line number, stripped text) of each line that is not blank, a
+    comment, an import or brackets only."""
+    for no, line in enumerate(src.splitlines(), 1):
+        s = line.strip()
+        if (s and not s.startswith("#") and not _BRACKETS_ONLY.fullmatch(s)
+                and not s.startswith("import ")
+                and not (s.startswith("from ") and " import " in s)):
+            yield no, s
+
+
+def test_no_repeated_code_blocks():
+    seen: dict[tuple[str, ...], tuple[str, int, int]] = {}
+    copies = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE)
+        lines = list(_code_lines(path.read_text()))
+        for i in range(len(lines) - DUP_LINES + 1):
+            run = lines[i:i + DUP_LINES]
+            key = tuple(s for _, s in run)
+            if sum(map(len, key)) < DUP_CHARS:
+                continue
+            here = (str(rel), run[0][0], run[-1][0])
+            first = seen.setdefault(key, here)
+            if first != here:
+                copies.append((first, here))
+    # report each repeated block once: overlapping runs of one pair of
+    # locations merge into a single line range
+    blocks: list[list] = []
+    for (fa, sa, ea), (fb, sb, eb) in copies:
+        last = blocks[-1] if blocks else None
+        if last and last[0] == fa and last[3] == fb and sa <= last[2] and sb <= last[5]:
+            last[2], last[5] = max(last[2], ea), max(last[5], eb)
+        else:
+            blocks.append([fa, sa, ea, fb, sb, eb])
+    msg = "\n".join(f"{fa}:{sa}-{ea} repeats at {fb}:{sb}-{eb}"
+                    for fa, sa, ea, fb, sb, eb in blocks)
+    assert not blocks, f"{len(blocks)} repeated code blocks (write the rule once, in a helper):\n{msg}"

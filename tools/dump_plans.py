@@ -5,7 +5,7 @@
     python tools/dump_plans.py <tag> diff             # compare plans/<tag>/
 
 With no arguments, writes the formatted plans of the headline queries
-to PLANS.md — the evidence artifact for the scale posture: shows
+(bench.HEADLINE) to PLANS.md — the evidence artifact for the scale posture: shows
 PushedFilters / ReadSchema pruning, BroadcastHashJoin placement,
 partial+final HashAggregate, TakeOrderedAndProject, and exchange counts
 per query. Regenerate after plan-affecting changes.
@@ -40,161 +40,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-HEADLINE = [
-    "wordcount",
-    "question_pct",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q6",
-    "window_running",
-    "topk_global",
-    "dedup_minhash_pairs",
-    "knn_lsh_bucketed",
-    "asof_join",
-    "stream_tumbling",
-    "text_repetition",
-    "funnel_stages",
-    "graph_pagerank",
-    "sink_partitioned",
-    "anomaly_zscore",
-    "scd2_build",
-    "dq_constraints",
-    "tpch_q2",
-    "tpch_q21",
-    "heavy_hitters",
-    "substring_winnow",
-    "kl_divergence",
-    "lateral_topk",
-    "hll_union",
-    "pipeline_end_to_end",
-    "dedup_incremental",
-    "anomaly_mad",
-    "skyline_pareto",
-    "ann_recall",
-    # round-3 batch 2/3
-    "asof_join_nearest",
-    "gap_fill_locf",
-    "rollup_hypertable",
-    "mix_temperature",
-    "chunk_prune_stats",
-    "dedup_embedding_pairs_lsh",
-    "text_bigram_lm",
-    "attribution_last_touch",
-    "columnar_encoding_stats",
-    "rolling_user_features",
-    "watermark_lateness",
-    "set_ops_all",
-    "join_null_safe",
-    "agg_filter",
-    "pit_training_join",
-    "tfidf_cosine_pairs",
-    "grouped_linear_fit",
-    "knn_graph",
-    "path_3grams",
-    "cumulative_distinct_users",
-    # round 4: a-priori-pruned basket mining (TakeOrderedAndProject),
-    # policy keeper resolution, one-scan threshold sweep, band sweep
-    "basket_lift",
-    "dedup_keep_best",
-    "quality_threshold_sweep",
-    "minhash_band_sweep",
-    "dup_ngram_spans",
-    "dedup_span_apply",
-    "cdc_merge_apply",
-    "mix_budget_waterfill",
-    "langid_confusion",
-    "chunk_corruption_recovery",
-    "ewma_user",
-    # round 6: zero-shuffle CDC chunking, TakeOrdered weighted sample,
-    # benchmark-crossing LSH decontamination, digest-diff join
-    "cdc_chunk_stats",
-    "sample_weighted",
-    "decontaminate_semantic",
-    "table_diff",
-    "bpe_train",
-    "bpe_apply",
-    "corpus_datasheet",
-    "quality_rank_ensemble",
-    "chunk_placement",
-    "recovery_plan",
-    "store_gc",
-    "multimodal_gif_frames",
-    "shuffle_epochs",
-    "kmeans_lloyd",
-    "heartbeat_liveness",
-    "placement_rebalance",
-    "kmv_distinct",
-    "embedding_outliers",
-    # round 7: integer perceptron rounds (literal-weight aggregates),
-    # one-pass stacked matryoshka scoring, decode+resize Arrow map
-    "quality_perceptron",
-    "embedding_matryoshka",
-    "multimodal_resize",
-    "catalog_ls",
-    "semdedup_prune",
-    "importance_resample",
-    "dedup_agreement",
-    # round 8: dir-scoped ls, byte-chunk put/get, Zipf-vocab AllPairs,
-    # fuzzy decontamination, LPA communities, IVFADC, audio frames
-    "catalog_ls_dirs",
-    "sink_chunked_bytes_roundtrip",
-    "tfidf_cosine_zipf",
-    "decontaminate_minhash",
-    "graph_label_prop",
-    "knn_ivfpq",
-    "multimodal_audio_frames",
-    "hilbert_layout",
-    "postings_build",
-    "embedding_pca_power",
-    "sample_coreset",
-    "kmv_set_ops",
-    "embedding_abtt",
-    "tfidf_plan_pick",
-    "text_readability",
-    # round-8 second batch
-    "quality_gopher",
-    "text_collocations",
-    "text_entropy",
-    "cms_sketch",
-    "ts_autocorr",
-    "sample_balanced",
-    "anomaly_seasonal",
-    "dedup_containment",
-    "join_runtime_bloom",
-    "text_bigram_kn",
-    "text_keyphrases",
-    "multimodal_audio_dft",
-    "multimodal_scene_cuts",
-    "ts_holt_forecast",
-    "ts_changepoint",
-    "markov_entropy",
-    # round 9
-    "dedup_paragraph",
-    "ngram_novelty",
-    "split_leakage",
-    "dedup_report",
-    "quality_repeated",
-    "multimodal_audio_fbank",
-    "multimodal_audio_vad",
-    # round 10
-    "dedup_image_phash",
-    "dedup_image_clusters",
-    "multimodal_audio_fingerprint",
-    "bpe_fertility",
-    "corpus_domain_rollup",
-    "url_canonical_dedup",
-    "pii_audit",
-    # round 11: constellation-lookup join (posting cap + fp_hash
-    # partitioning), image corpus-out anti-join, beam-search rounds,
-    # domain ensemble join+agg, governance single-scan agg
-    "multimodal_audio_fp_lookup",
-    "dedup_image_apply",
-    "knn_graph_search",
-    "quality_domain_ensemble",
-    "corpus_governance_flags",
-    "mix_doremi",
-]
+from bench import HEADLINE  # noqa: E402  (the bench's headline keys)
 
 SF_DIR = "/root/testdata/sf0.01"
 
