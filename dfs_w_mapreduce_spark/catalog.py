@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -31,12 +32,21 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Parquet scan => pushdown + pruning free.
+# Footer schemas already read, keyed on (path, bytes, mtime_ns,
+# nanosAsLong): a rewritten file, or a session that reads nanos
+# timestamps differently, gets a fresh footer read.
+_FOOTER_SCHEMAS: dict[tuple, StructType] = {}
 
-    `events.ts` is stored as TIMESTAMP(NANOS), which Spark reads as a
-    long (nanosAsLong); convert to a microsecond timestamp with the
-    same truncation DuckDB applies when reading the same file.
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The read schema of one fixture table, taken from its parquet
+    footer once per file version.
+
+    `spark.read.parquet(path)` without a schema starts one
+    schema-inference job on every call, and queries load the same few
+    files again and again, so the footer is read once and kept here.
+    The layout of a fixture still comes from its footer, never from a
+    hardcoded schema.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -44,7 +54,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Set on whatever session the caller owns (the round driver
         # builds its own); this is a runtime SQL conf, not static.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    key = (
+        path,
+        source_size(sf_dir, name),
+        os.stat(path).st_mtime_ns,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schema = _FOOTER_SCHEMAS.get(key)
+    if schema is None:
+        schema = _FOOTER_SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one fixture table. Parquet scan => pushdown + pruning free.
+
+    The read schema comes from `table_schema`, so a repeated load
+    starts no job. `events.ts` is stored as TIMESTAMP(NANOS), which
+    Spark reads as a long (nanosAsLong); convert to a microsecond
+    timestamp with the same truncation DuckDB applies when reading the
+    same file.
+    """
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(table_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df

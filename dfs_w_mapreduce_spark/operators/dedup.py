@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import fan_out, load_table
+from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint
 from dfs_w_mapreduce_spark.functions.hashing import (
     P31,
     _h31_expr,
@@ -1445,7 +1446,7 @@ def _min_label_components(
     # query over the same pair core — the union was paying the
     # pipeline twice; checkpoint-then-mirror pays it once and the
     # swap reads back tiny (id,id) blocks).
-    pairs = pairs.localCheckpoint()
+    pairs, stats = observed_checkpoint(pairs, n=F.count(F.lit(1)))
     # Scale-ADAPTIVE edge partitioning (r11): the r10 fix co-partitioned
     # edges at machine parallelism (away from the pair pipeline's
     # 512-partition fan-out layout), but fixture edge sets are a few
@@ -1455,12 +1456,12 @@ def _min_label_components(
     # layout from the data instead: ~50k edges (two longs each, a few
     # MB) per partition, capped at defaultParallelism so behavior at
     # real scale — where n_edges/50k far exceeds the cap — is exactly
-    # the r10 layout. The count is one metadata-cheap job over the
-    # just-checkpointed pair blocks. The hash(src) layout does not
-    # survive the localCheckpoint() below as a known partitioning
+    # the r10 layout. The count is observed inside the pair
+    # checkpoint's own job and adds none. The hash(src) layout does
+    # not survive the localCheckpoint() below as a known partitioning
     # (pyspark 4.1): each round's join and the seed groupBy still
     # plan their own Exchange hashpartitioning(src) over the edges.
-    n_edges = pairs.count()
+    n_edges = stats["n"]
     parts = max(
         1,
         min(
@@ -1494,14 +1495,14 @@ def _min_label_components(
     # localCheckpoint (eager) materializes each round AND cuts the
     # plan back to a leaf — the standard idiom for iterative Spark
     # algorithms; superseded rounds' tiny (id,label) blocks are left
-    # to GC.
-    labels = (
+    # to GC. The convergence sum is observed in that same job.
+    labels, stats = observed_checkpoint(
         edges.groupBy(F.col("src").alias(out_id))
         .agg(F.min("dst").alias("min_nbr"))
-        .select(out_id, F.least(out_id, "min_nbr").alias("label"))
-        .localCheckpoint()
+        .select(out_id, F.least(out_id, "min_nbr").alias("label")),
+        s=F.sum("label"),
     )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
+    prev_sum = stats["s"]
     # Lazy graph squaring (r11): the pointer jump below is defeated by
     # id layouts where a node's label points AWAY from the component
     # minimum — measured on the sf0.1 embedding-LSH graph: the min
@@ -1552,13 +1553,13 @@ def _min_label_components(
                     )
                     .filter(F.col("src") != F.col("dst"))
                 )
-                edges = (
+                edges, stats = observed_checkpoint(
                     edges.unionByName(two_hop)
                     .repartition(parts, "src")
-                    .distinct()
-                    .localCheckpoint()
+                    .distinct(),
+                    n=F.count(F.lit(1)),
                 )
-                n_cur = edges.count()
+                n_cur = stats["n"]
         msgs = edges.join(labels, edges.src == F.col(out_id)).select(
             F.col("dst").alias(out_id), "label"
         )
@@ -1580,15 +1581,14 @@ def _min_label_components(
         lookup = labels.select(
             F.col(out_id).alias("_lid"), F.col("label").alias("_llabel")
         )
-        labels = (
-            labels.join(lookup, labels.label == F.col("_lid"), "left")
-            .select(
+        labels, stats = observed_checkpoint(
+            labels.join(lookup, labels.label == F.col("_lid"), "left").select(
                 out_id,
                 F.least("label", F.coalesce("_llabel", "label")).alias("label"),
-            )
-            .localCheckpoint()
+            ),
+            s=F.sum("label"),
         )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
+        cur_sum = stats["s"]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum

@@ -1175,10 +1175,14 @@ def _bpe_merge_chain(
     Each round's winning pair is ONE row — collect it to the driver
     (the kmeans-centroid pattern) and inject it as literals into the
     round's fold. Pre-tokenized symbols are [a-z0-9_] so literal
-    inlining is quoting-safe. Caches are vocab-sized, materialized
-    eagerly, and the PREVIOUS round's cache is released as soon as the
-    next round lands (round-6 ADVICE: the lazy per-round cache chain
-    leaked R frames into the driver's long single session).
+    inlining is quoting-safe. Caches are vocab-sized. A round's fold is
+    not materialized on its own: the next round's best-pair collect
+    scans all of it and fills its cache, and the PREVIOUS round's cache
+    is released right after that collect (the lazy per-round cache
+    chain once leaked R frames into the driver's long single session;
+    releasing before the new cache is loaded would re-plan it over the
+    uncached input). Only a chain that ends on a fold materializes it
+    once more before the release.
 
     Returns the picked (pa, pb, cnt) merges and the CACHED vocabulary
     (word, freq, syms) — the caller must unpersist() it. Without
@@ -1193,6 +1197,7 @@ def _bpe_merge_chain(
         ).alias("syms"),
     ).cache()
     merges: list[tuple[str, str, int]] = []
+    prev = None
     for k in range(1, BPE_ROUNDS + 1):
         n1 = F.greatest(F.size("syms") - 1, F.lit(0))
         pair = F.zip_with(
@@ -1208,6 +1213,9 @@ def _bpe_merge_chain(
             .limit(1)
             .collect()
         )
+        if prev is not None:  # the collect above loaded cur's cache
+            prev.unpersist()
+            prev = None
         if not best:
             break
         r = best[0]
@@ -1218,7 +1226,8 @@ def _bpe_merge_chain(
         cur = prev.select(
             "word", "freq", _bpe_fold_expr(r.pa, r.pb).alias("syms")
         ).cache()
-        cur.count()  # materialize before dropping the previous cache
+    if prev is not None:  # the chain ended on a fold (fold_last)
+        cur.count()
         prev.unpersist()
     return merges, cur
 

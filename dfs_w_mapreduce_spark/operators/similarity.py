@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import fan_out, load_table
+from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 TOP_K = 5
@@ -1238,34 +1239,32 @@ def q_sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     if srow is None:  # empty corpus: nothing to select
         return spark.createDataFrame([], "sel_rank int, vec_id long, radius double")
     seed_id = srow[0]
-    md = (
-        v.crossJoin(F.broadcast(seed.select(F.col("v").alias("cv"))))
-        .select(
+    md, stats = observed_checkpoint(
+        v.crossJoin(F.broadcast(seed.select(F.col("v").alias("cv")))).select(
             "vec_id", "v",
             (F.round(_d2(F.col("v"), F.col("cv")), 6) + 0.0).alias("md"),
-        )
-        .localCheckpoint()
+        ),
+        r=F.max("md"),
     )
     rows = [(1, int(seed_id))]
-    radii = [md.agg(F.max("md")).first()[0]]
+    radii = [stats["r"]]
     for k in range(2, CORESET_K + 1):
         pick = md.orderBy(F.desc("md"), F.col("vec_id").asc()).limit(1).first()
         rows.append((k, int(pick["vec_id"])))
         pv = v.filter(F.col("vec_id") == int(pick["vec_id"])).select(
             F.col("v").alias("cv")
         )
-        md = (
-            md.crossJoin(F.broadcast(pv))
-            .select(
+        md, stats = observed_checkpoint(
+            md.crossJoin(F.broadcast(pv)).select(
                 "vec_id", "v",
                 F.least(
                     F.col("md"),
                     F.round(_d2(F.col("v"), F.col("cv")), 6) + 0.0,
                 ).alias("md"),
-            )
-            .localCheckpoint()
+            ),
+            r=F.max("md"),
         )
-        radii.append(md.agg(F.max("md")).first()[0])
+        radii.append(stats["r"])
     out = [
         (k, vid, float(r)) for (k, vid), r in zip(rows, radii)
     ]

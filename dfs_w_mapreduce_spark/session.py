@@ -13,6 +13,17 @@ cores); on a real cluster the same config applies unchanged except
 - Arrow enabled for every Python<->JVM boundary (Pandas UDFs).
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB correctness oracle (DuckDB timestamps are UTC-naive).
+- The compiled whole-stage-codegen class cache holds CODEGEN_CACHE_ENTRIES
+  classes instead of Spark's default 100. The cache is an LRU keyed on
+  the generated source: one pass over all 305 registry queries at sf0.1
+  compiles 4069 distinct classes, and a warm pass of the perfbench
+  iterative_dedup workload alone needs 211, so at 100 entries every
+  class is evicted before its next use and each pass recompiles all of
+  them with Janino (with this size a warm pass compiles 0-5). The conf is
+  static: it takes effect only in sessions this factory creates (the
+  benchmark, the tests, bench.py and the tools/ scripts that call it),
+  not in a session a caller built itself, such as the round driver's
+  own or tools/driver_mimic.py's.
 """
 
 from __future__ import annotations
@@ -20,6 +31,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# The 4069 classes of one pass over every registry query, plus room.
+CODEGEN_CACHE_ENTRIES = 5000
 
 
 def _cpu_count() -> int:
@@ -65,6 +80,7 @@ def get_spark(
         # events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
         # timestamp type, so read as long and convert in the catalog.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

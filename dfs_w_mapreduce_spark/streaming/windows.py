@@ -32,7 +32,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from dfs_w_mapreduce_spark.catalog import load_table, table_path
+from dfs_w_mapreduce_spark.catalog import load_table, table_schema
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 SESSION_GAP_MIN = 10
@@ -390,11 +390,10 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table with the same output schema as
     `load_table`, regardless of how `ts` is physically stored (int64
     TIMESTAMP(NANOS) in older fixtures, TIMESTAMP(NTZ) in newer ones).
-    Streaming sources require an explicit schema, so take it from a
-    batch scan's parquet footer and apply load_table's nanos
-    conversion only when the footer says the column is a long."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    Streaming sources require an explicit schema, so take it from the
+    catalog's footer memo and apply load_table's nanos conversion only
+    when the footer says the column is a long."""
+    schema = table_schema(spark, sf_dir, "events")
     # The parquet streaming source requires a directory; point it at
     # the sf dir with a glob so only events.parquet matches.
     raw = (

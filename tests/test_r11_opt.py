@@ -44,22 +44,22 @@ def _union_find_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
-@pytest.mark.parametrize(
-    "edges",
-    [
-        # long chain whose ids DECREASE away from the minimum — the id
-        # layout that defeats pointer jumping (labels point away from
-        # the component min); this is the shape that made the r10 loop
-        # run its full 25 rounds and motivated the lazy squaring
-        [(i + 1, i) for i in range(60)],
-        # chain with shuffled ids (deterministic permutation)
-        [((i * 37) % 101, ((i + 1) * 37) % 101) for i in range(100)],
-        # two cliques joined by a bridge + a singleton pair
-        [(a, b) for a in range(5) for b in range(a + 1, 5)]
-        + [(10 + a, 10 + b) for a in range(4) for b in range(a + 1, 4)]
-        + [(4, 10), (500, 501)],
-    ],
-)
+UNION_FIND_GRAPHS = [
+    # long chain whose ids DECREASE away from the minimum — the id
+    # layout that defeats pointer jumping (labels point away from
+    # the component min); this is the shape that made the r10 loop
+    # run its full 25 rounds and motivated the lazy squaring
+    [(i + 1, i) for i in range(60)],
+    # chain with shuffled ids (deterministic permutation)
+    [((i * 37) % 101, ((i + 1) * 37) % 101) for i in range(100)],
+    # two cliques joined by a bridge + a singleton pair
+    [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    + [(10 + a, 10 + b) for a in range(4) for b in range(a + 1, 4)]
+    + [(4, 10), (500, 501)],
+]
+
+
+@pytest.mark.parametrize("edges", UNION_FIND_GRAPHS)
 def test_min_label_components_matches_union_find(spark, edges):
     """The lazy-squaring propagation loop must land EVERY node on its
     component minimum (cluster id, keeper flag, member count) for graph
@@ -82,25 +82,39 @@ def test_min_label_components_matches_union_find(spark, edges):
 
 
 def test_capped_common_counts_count_path_matches_uncapped(spark, sf_dir):
-    """The r11 cached co-partitioned occurrence stream must produce the
-    exact pair counts of the reference uncapped inverted-index join on
-    the fixture corpus (whose sum(df^2) mass keeps it on the count
-    path)."""
+    """The count path of `_capped_common_counts` (the fixture corpus's
+    sum(df^2) mass keeps it there) must produce, for every doc pair
+    sharing a shingle, the exact number of shingles they share, and
+    every document's shingle-set size. The reference is plain Python
+    over the collected shingle sets, so a fault in the hashed
+    occurrence stream or the inverted-index count (`_hashed_occurrences`,
+    `_count_common`) cannot cancel out against itself."""
+    from collections import Counter
+    from itertools import combinations
+
     from dfs_w_mapreduce_spark.operators.dedup import (
         _capped_common_counts,
-        _common_shingle_counts,
         _doc_shingles,
     )
 
     sh = _doc_shingles(spark, sf_dir)
+    docs = {r["doc_id"]: r["sh"] for r in sh.collect()}
+    postings: dict[str, list[int]] = {}
+    for doc_id, shingles in docs.items():
+        for s in set(shingles or []):
+            postings.setdefault(s, []).append(doc_id)
+    want = Counter()
+    for ids in postings.values():
+        want.update(combinations(sorted(ids), 2))
+    assert want  # the fixture corpus has pairs sharing shingles
+
     got_common, got_sizes = _capped_common_counts(spark, sh, sf_dir)
-    ref_common, ref_sizes = _common_shingle_counts(sh)
-    got = sorted(tuple(r) for r in got_common.collect())
-    ref = sorted(tuple(r) for r in ref_common.collect())
-    assert got == ref
-    assert sorted(tuple(r) for r in got_sizes.collect()) == sorted(
-        tuple(r) for r in ref_sizes.collect()
-    )
+    got = {(r["doc_a"], r["doc_b"]): r["common"] for r in got_common.collect()}
+    assert got == dict(want)
+    assert {r["doc_id"]: r["n"] for r in got_sizes.collect()} == {
+        doc_id: None if shingles is None else len(set(shingles))
+        for doc_id, shingles in docs.items()
+    }
 
 
 def test_simhash_sample_pushdown_matches_full_then_filter(spark, sf_dir):
