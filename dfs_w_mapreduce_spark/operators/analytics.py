@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
+from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint
 from dfs_w_mapreduce_spark.functions.hashing import _h31_spark, _h31_sql
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
@@ -235,7 +236,7 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-sized labels (never corpus payloads), the per-round mode is
     one partial-aggregated groupBy + a per-node window over its
     distinct neighbor labels, and round count is a constant. The edge
-    list is cached once (reused by all rounds)."""
+    list is checkpointed once (read by all rounds)."""
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("ok"), "o_custkey"
     )
@@ -249,13 +250,9 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("b"),
         )
         .distinct()
-        # checkpoint-then-mirror (the _min_label_components discipline,
-        # r10): the undirected union references `pairs` twice, and
-        # without materializing first BOTH branches execute the full
-        # join+distinct pipeline inside the edge build
         .localCheckpoint()
     )
-    edges = (
+    edges, _ = observed_checkpoint(
         pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .withColumnsRenamed({"a": "src", "b": "dst"})
         # hash(src) layout before the checkpoint. localCheckpoint()
@@ -263,8 +260,8 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # each round's join still plans Exchange hashpartitioning(src)
         # over the checkpointed edges: the edges are re-shuffled
         # every round, not only the node-sized label frame
-        .repartition(spark.sparkContext.defaultParallelism, "src")
-        .localCheckpoint()
+        .repartition(spark.sparkContext.defaultParallelism, "src"),
+        replaces=pairs,
     )
     labels = (
         edges.select(F.col("src").alias("node"))

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import fan_out, load_table
-from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint
+from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint, release
 from dfs_w_mapreduce_spark.functions.hashing import (
     P31,
     _h31_expr,
@@ -1438,14 +1438,10 @@ def _min_label_components(
     undirected pair set; shared by every near-dup family's cluster
     step (MinHash text pairs, embedding-cosine pairs). Returns one row
     per member: (out_id, cluster_id, is_keeper, n_members)."""
-    # Materialize the pair pipeline ONCE before mirroring: the
-    # undirected union references `pairs` twice, and without this
-    # checkpoint both branches re-execute the full candidate
-    # generation + verify (measured on dedup_image_clusters at sf0.1:
-    # the edge build cost 9.0s vs 5.7s for the whole per-doc rollup
-    # query over the same pair core — the union was paying the
-    # pipeline twice; checkpoint-then-mirror pays it once and the
-    # swap reads back tiny (id,id) blocks).
+    # Materialize the pair pipeline once before mirroring it (measured
+    # on dedup_image_clusters at sf0.1: the edge build cost 9.0s vs
+    # 5.7s for the whole per-doc rollup query over the same pair core).
+    # The caller's `pairs` may be a checkpoint of its own: never freed.
     pairs, stats = observed_checkpoint(pairs, n=F.count(F.lit(1)))
     # Scale-ADAPTIVE edge partitioning (r11): the r10 fix co-partitioned
     # edges at machine parallelism (away from the pair pipeline's
@@ -1469,33 +1465,24 @@ def _min_label_components(
             1 + n_edges // 50_000,
         ),
     )
-    edges = (
+    # a checkpoint, not a cache: every round's plan embeds the edge
+    # plan, and with cache alone the embedding path's 64-dim
+    # dot-product trees OOM'd the driver on plan strings before round 1
+    edges, _ = observed_checkpoint(
         pairs.union(
             pairs.select(F.col(col_b).alias(col_a), F.col(col_a).alias(col_b))
         )
         .withColumnsRenamed({col_a: "src", col_b: "dst"})
-        .repartition(parts, "src")
-        # localCheckpoint, not cache: iterative propagation re-embeds
-        # the edge plan into every round's plan, so a heavy pair
-        # pipeline (the embedding path inlines 64-dim dot-product
-        # expression trees) must have its LINEAGE truncated, not just
-        # its execution memoized — with cache alone the accumulated
-        # plan string OOM'd the driver before round 1.
-        .localCheckpoint()
+        .repartition(parts, "src"),
+        replaces=pairs,
     )
     # Seed labels with the 1-hop minimum (min of self and all direct
     # neighbors) instead of self: clique-like dedup components — the
     # common case — are already converged at round 1's fixpoint check,
-    # saving a full propagation round of driver-side actions.
-    #
-    # Every round's plan references the previous round's TWICE (the
-    # union and the join), so without lineage truncation the logical
-    # plan doubles per round — exponential in rounds; a graph that
-    # needed ~10 rounds OOM'd the driver on plan strings alone.
-    # localCheckpoint (eager) materializes each round AND cuts the
-    # plan back to a leaf — the standard idiom for iterative Spark
-    # algorithms; superseded rounds' tiny (id,label) blocks are left
-    # to GC. The convergence sum is observed in that same job.
+    # saving a full propagation round of driver-side actions. Every
+    # round reads the previous one twice (the union and the join), so
+    # each is a checkpoint that frees the one it replaces, and the
+    # convergence sum is observed in its job.
     labels, stats = observed_checkpoint(
         edges.groupBy(F.col("src").alias(out_id))
         .agg(F.min("dst").alias("min_nbr"))
@@ -1557,13 +1544,14 @@ def _min_label_components(
                     edges.unionByName(two_hop)
                     .repartition(parts, "src")
                     .distinct(),
+                    replaces=edges,
                     n=F.count(F.lit(1)),
                 )
                 n_cur = stats["n"]
         msgs = edges.join(labels, edges.src == F.col(out_id)).select(
             F.col("dst").alias(out_id), "label"
         )
-        labels = (
+        merged = (
             labels.unionByName(msgs)
             .groupBy(out_id)
             .agg(F.min("label").alias("label"))
@@ -1578,20 +1566,22 @@ def _min_label_components(
         # combined step converges in O(log d) rounds — 25 covers
         # diameters past 2^20. One extra small join per round, still
         # O(edges) shuffle, no driver data.
-        lookup = labels.select(
+        lookup = merged.select(
             F.col(out_id).alias("_lid"), F.col("label").alias("_llabel")
         )
         labels, stats = observed_checkpoint(
-            labels.join(lookup, labels.label == F.col("_lid"), "left").select(
+            merged.join(lookup, merged.label == F.col("_lid"), "left").select(
                 out_id,
                 F.least("label", F.coalesce("_llabel", "label")).alias("label"),
             ),
+            replaces=labels,
             s=F.sum("label"),
         )
         cur_sum = stats["s"]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    release(edges)  # the result reads only the last labels
     sizes = labels.groupBy("label").agg(F.count("*").alias("n_members"))
     return (
         labels.join(sizes, "label")

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import load_table
+from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint, release
 from dfs_w_mapreduce_spark.functions.hashing import (
     _h31_spark,
     _h31_sql,
@@ -815,13 +816,10 @@ def q_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(term).cast("double") / F.count("*"), 6).alias("loss"),
         )
     )
-    # localCheckpoint the domain-sized loss table: every round's plan
-    # references the previous round several times (avg baseline, the
-    # update, the normalizer), so without lineage truncation the
-    # corpus-scale ld subplan re-embeds ~3^R times (measured: 511
-    # exchanges in the formatted plan). One checkpoint makes ld a
-    # K-row leaf; per-round checkpoints below keep the round plans
-    # constant-size — the _min_label_components discipline.
+    # every round's plan reads the previous round three times (avg
+    # baseline, update, normalizer): unchecked, the corpus-scale ld
+    # subplan re-embeds ~3^R times (measured: 511 exchanges in the
+    # formatted plan), so ld and each round are checkpoints
     ld = ld.localCheckpoint()
     k1 = ld.agg(F.count("*").alias("k"), F.sum("n_toks").alias("tot_toks"))
     w = ld.crossJoin(F.broadcast(k1)).select(
@@ -858,17 +856,17 @@ def q_mix_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("u", F.round(F.col("w") * F.col("f"), 10))
         )
         z = u.agg(F.round(F.sum(dec(F.col("u"))).cast("double"), 10).alias("z"))
-        w = (
-            u.crossJoin(F.broadcast(z))
-            .select(
+        w, _ = observed_checkpoint(
+            u.crossJoin(F.broadcast(z)).select(
                 "source",
                 "n_toks",
                 "loss",
                 "ref_share",
                 F.round(F.col("u") / F.col("z"), 8).alias("w"),
-            )
-            .localCheckpoint()
+            ),
+            replaces=w,
         )
+    release(ld)  # the result reads only the last w
     return w.select(
         "source",
         "n_toks",

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark.catalog import fan_out, load_table
-from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint
+from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint, release
 from dfs_w_mapreduce_spark.registry import QuerySpec
 
 TOP_K = 5
@@ -951,14 +951,10 @@ def _pca_top_component(
         ).alias("mu_arr")
     )
     seq = F.sequence(F.lit(1), F.lit(PCA_DIMS))
-    # the outer-product pass does dims^2 work per ROW, so a
-    # small-file scan that arrives as one split serializes the whole
-    # pass onto one core (measured 9.4s -> 1.2s at sf0.1); widen only
-    # when the scan is narrower than the cluster — at real scale the
-    # scan already has >= par splits and no shuffle is added
-    par = spark.sparkContext.defaultParallelism
-    src = e.repartition(par) if e.rdd.getNumPartitions() < par else e
-    centered = src.crossJoin(F.broadcast(mua)).select(
+    # the outer-product pass does dims^2 work per ROW, so a one-split
+    # scan would serialize it onto one core (measured 9.4s -> 1.2s at
+    # sf0.1)
+    centered = fan_out(spark, e).crossJoin(F.broadcast(mua)).select(
         F.zip_with(
             F.transform("embedding", lambda x: x.cast("double")),
             F.col("mu_arr"),
@@ -1014,13 +1010,13 @@ def _pca_top_component(
     w12 = F.round(F.round(F.col("c") * F.col("x"), 12) * 1000000000000, 0).cast(
         "long"
     )
-    nrm_frame = None
+    nrm_frame = w = None
     for _ in range(PCA_ROUNDS):
-        w = (
+        w, _ = observed_checkpoint(
             cov.join(v.withColumnRenamed("i", "j"), "j")
             .groupBy("i")
-            .agg((F.sum(w12).cast("double") / 1000000000000).alias("w"))
-            .localCheckpoint()
+            .agg((F.sum(w12).cast("double") / 1000000000000).alias("w")),
+            replaces=w,
         )
         sq12 = F.round(F.round(F.col("w") * F.col("w"), 12) * 1000000000000, 0).cast(
             "long"
@@ -1038,6 +1034,7 @@ def _pca_top_component(
             .otherwise(F.lit(0.0))
             .alias("x"),
         )
+    release(cov)  # v and nrm_frame read only the last w
     return v, nrm_frame
 
 
@@ -1262,9 +1259,11 @@ def q_sample_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(_d2(F.col("v"), F.col("cv")), 6) + 0.0,
                 ).alias("md"),
             ),
+            replaces=md,
             r=F.max("md"),
         )
         radii.append(stats["r"])
+    release(md)  # the result is local rows
     out = [
         (k, vid, float(r)) for (k, vid), r in zip(rows, radii)
     ]
@@ -1670,12 +1669,15 @@ def q_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", F.col("g_dst").alias("node"))
             .distinct()
         )
-        visited = visited.unionByName(score(cand)).distinct().localCheckpoint()
+        visited, _ = observed_checkpoint(
+            visited.unionByName(score(cand)).distinct(), replaces=visited
+        )
         beam = (
             visited.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= GRAPH_SEARCH_BEAM)
             .drop("rk")
         )
+    release(g)  # the result reads only the last visited
     return (
         visited.filter(F.col("node") != F.col("query_id"))
         .withColumn("rk", F.row_number().over(w))

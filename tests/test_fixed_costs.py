@@ -1,16 +1,16 @@
-"""Fixed per-query costs: footer schemas read once, and loop scalars
-observed inside the checkpoint jobs that already run.
+"""Fixed per-query costs: footer schemas read once, loop scalars
+observed inside the checkpoint jobs that already run, and each loop
+round's checkpoint freed once the next round replaces it.
 
 Job counts come from the Spark status tracker for one job group per
-call; persisted RDDs are those `sc._jsc.getPersistentRDDs()` still
-holds after the call, once unreachable checkpoints are cleaned.
+call; retained RDDs are those `sc._jsc.getPersistentRDDs()` holds
+right after the call, with no JVM GC in between, so a checkpoint that
+only Spark's cleaner would drop still counts.
 """
 
 from __future__ import annotations
 
-import gc
 import itertools
-import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 
 from dfs_w_mapreduce_spark import catalog
 from dfs_w_mapreduce_spark.catalog import load_table
-from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint
+from dfs_w_mapreduce_spark.checkpoint import observed_checkpoint, release
+from dfs_w_mapreduce_spark.registry import assemble
 from tests.test_r11_opt import UNION_FIND_GRAPHS
 
 _GROUPS = itertools.count()
@@ -30,7 +31,7 @@ def _run_in_group(spark, fn):
     persisted before the call)."""
     sc = spark.sparkContext
     group = f"fixed-costs-{next(_GROUPS)}"
-    before = max([-1, *sc._jsc.getPersistentRDDs().keys()])
+    before = max([-1, *_persisted(spark)])
     sc.setJobGroup(group, group)
     try:
         out = fn()
@@ -39,19 +40,13 @@ def _run_in_group(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group)), before
 
 
-def _retained_rdds(spark, before: int, bound: int) -> int:
-    """RDDs persisted after id `before` that stay persisted once the
-    unreachable ones are cleaned (the cleaner runs asynchronously
-    after a JVM GC, so poll until the count reaches `bound`)."""
-    sc = spark.sparkContext
-    for _ in range(60):
-        gc.collect()
-        sc._jvm.System.gc()
-        n = sum(1 for k in sc._jsc.getPersistentRDDs().keys() if k > before)
-        if n <= bound:
-            break
-        time.sleep(0.5)
-    return n
+def _persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _retained_rdds(spark, before: int) -> int:
+    """RDDs persisted after id `before` that are still persisted now."""
+    return sum(1 for k in _persisted(spark) if k > before)
 
 
 def test_second_load_table_starts_no_job(spark, sf_dir):
@@ -136,7 +131,7 @@ def test_min_label_components_jobs_and_retained_rdds(spark, edges, jobs_before):
     # now 79, 150-154 and 26-28
     assert jobs < jobs_before
     # the last label checkpoint, which the result reads
-    assert _retained_rdds(spark, before, 1) <= 1
+    assert _retained_rdds(spark, before) <= 1
 
 
 def test_bpe_train_jobs_and_retained_rdds(spark, sf_dir):
@@ -148,4 +143,65 @@ def test_bpe_train_jobs_and_retained_rdds(spark, sf_dir):
     )
     assert len(rows) == 4
     assert jobs <= 14  # 21 before; one count per merge round is gone
-    assert _retained_rdds(spark, before, 0) == 0
+    assert _retained_rdds(spark, before) == 0
+
+
+def test_release_frees_a_checkpoint_and_skips_other_frames(spark):
+    before = _persisted(spark)
+    cp = spark.range(0, 10, numPartitions=2).localCheckpoint()
+    assert len(_persisted(spark) - before) == 1
+    release(cp)
+    assert _persisted(spark) == before
+    lazy = spark.range(3).selectExpr("id * 2 AS id")
+    cached = spark.range(4).cache()
+    cached.count()
+    held = _persisted(spark)
+    release(lazy)
+    release(cached)
+    release(None)
+    assert _persisted(spark) == held
+    assert lazy.count() == 3 and cached.count() == 4
+    cached.unpersist()
+
+
+def test_replaced_round_is_freed_after_the_new_one_lands(spark):
+    before = _persisted(spark)
+    prev = spark.range(0, 10, numPartitions=2).localCheckpoint()
+    step = prev.selectExpr("id + 1 AS id")
+    plain, plain_jobs, _ = _run_in_group(spark, step.localCheckpoint)
+    release(plain)
+    (nxt, stats), jobs, _ = _run_in_group(
+        spark, lambda: observed_checkpoint(step, replaces=prev, s=F.sum("id"))
+    )
+    assert stats == {"s": 55}
+    assert jobs == plain_jobs  # freeing prev starts no job
+    # the new round was built from prev and still collects after prev
+    # is freed; only its own checkpoint stays persisted
+    assert sorted(r.id for r in nxt.collect()) == list(range(1, 11))
+    assert len(_persisted(spark) - before) == 1
+    release(nxt)
+    assert _persisted(spark) == before
+
+
+# Persisted RDDs a query holds right after its collect: only what its
+# result still reads. dedup_clusters keeps its cached band frame and
+# the last labels, dedup_image_clusters the verified pair checkpoint
+# and the last labels. Before the loops freed the rounds they replace
+# (sf0.01): 5, 5, 4, 6, 5, 2 and 9.
+_RETAINED_BOUNDS = {
+    "sample_coreset": 0,
+    "mix_doremi": 1,
+    "embedding_pca_power": 1,
+    "knn_graph_search": 1,
+    "graph_label_prop": 1,
+    "dedup_clusters": 2,
+    "dedup_image_clusters": 2,
+}
+
+
+@pytest.mark.parametrize("name, bound", list(_RETAINED_BOUNDS.items()))
+def test_loop_queries_retain_only_what_their_result_reads(spark, sf_dir, name, bound):
+    fn = assemble()[name].fn
+    rows, _, before = _run_in_group(spark, lambda: fn(spark, sf_dir).collect())
+    assert rows
+    assert _retained_rdds(spark, before) <= bound

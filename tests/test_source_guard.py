@@ -7,7 +7,9 @@ fixtures (operators/multimodal.py) derive each document's WAV, PNG and
 GIF from (doc_id, n_chars); each rule is written once in Python (a
 Spark Column expression counts as Python) and once in the SQL of the
 oracles. More generally, a rule that two queries use is one helper
-per engine, so no block of code lines repeats. These tests read the
+per engine, so no block of code lines repeats. A loop round is
+materialized through checkpoint.py, which frees the round it replaces,
+so no loop body calls localCheckpoint() itself. These tests read the
 package's source (no Spark) and fail on a copy.
 """
 
@@ -147,3 +149,27 @@ def test_no_repeated_code_blocks():
     msg = "\n".join(f"{fa}:{sa}-{ea} repeats at {fb}:{sb}-{eb}"
                     for fa, sa, ea, fb, sb, eb in blocks)
     assert not blocks, f"{len(blocks)} repeated code blocks (write the rule once, in a helper):\n{msg}"
+
+
+def _loop_checkpoints(tree: ast.AST):
+    """Line numbers of `.localCheckpoint(` calls lexically inside the
+    body of a for or while loop."""
+    for loop in ast.walk(tree):
+        if isinstance(loop, (ast.For, ast.AsyncFor, ast.While)):
+            for stmt in loop.body + loop.orelse:
+                for node in ast.walk(stmt):
+                    if (isinstance(node, ast.Call)
+                            and isinstance(node.func, ast.Attribute)
+                            and node.func.attr == "localCheckpoint"):
+                        yield node.lineno
+
+
+def test_loop_rounds_go_through_checkpoint_module():
+    found = sorted({
+        f"{path.relative_to(PACKAGE)}:{line}"
+        for path in PACKAGE.rglob("*.py") if path.name != "checkpoint.py"
+        for line in _loop_checkpoints(ast.parse(path.read_text()))
+    })
+    assert not found, (
+        "localCheckpoint() in a loop body (a round is "
+        "checkpoint.observed_checkpoint(..., replaces=prev)):\n" + "\n".join(found))
